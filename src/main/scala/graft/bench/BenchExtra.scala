@@ -47,7 +47,6 @@ object BenchExtra {
       def lap(name: String)(df: DataFrame): DataFrame = {
         spark.sparkContext.setJobDescription(s"benchextra: $name")
         val out = scope.persist(df)
-        out.count()
         val t = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[benchextra] $name%-16s $t%7.2f s")
         mins(name) = math.min(mins.getOrElse(name, Double.MaxValue), t)

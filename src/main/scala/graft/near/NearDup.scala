@@ -161,7 +161,7 @@ object NearDup {
 
   /** LSH candidate pairs: equi-join within (band_idx, band_key) buckets,
     * a < b, deduped across bands. `maxBucket` caps pathological buckets.
-    * Standalone entry: materializes eagerly, then releases its caches. */
+    * Standalone entry: materializes eagerly, then releases its intermediates. */
   def lshPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
     graft.util.PersistScope.scoped(s => lshPairsOf(bands(files, cfg), cfg, s))
 
@@ -217,19 +217,14 @@ object NearDup {
     * Verification is two bounded-size equi-joins (shingle arrays of each
     * member), never an all-pairs pass. Output: (a, b, jaccard).
     *
-    * The reps/signatures frames are persisted for the duration of the query:
-    * they feed four consumers (bands, SimHash, and both sides of the shingle
-    * join) and Catalyst does not share non-exchange subplans across joins —
-    * without the persist the corpus is re-scanned and re-shingled 4×. */
+    * The reps/signatures frames are materialized for the duration of the
+    * query: they feed four consumers (bands, SimHash, and both sides of the
+    * shingle join) and Catalyst does not share non-exchange subplans across
+    * joins — without them the corpus is re-scanned and re-shingled 4×. */
   def verifiedPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
     graft.util.PersistScope.scoped(s =>
       verifiedPairsOf(s.persist(representatives(files, cfg)), cfg, s))
 
-  /** Verified pairs from a precomputed (and caller-persisted) reps frame —
-    * lets composite queries (clusters, allFileClusters) share one reps scan
-    * instead of re-deriving the whole upstream per stage. Intermediate
-    * persists go through `scope`; the composite entry releases them after
-    * its result is checkpointed. */
   /** ONE content pass computing every per-row signal the candidate tier
     * needs — MinHash signature, SimHash, 136 B byte sketch (+ size for the
     * checkpoint metrics). THE wall-clock-dominant map pass at corpus scale,
@@ -242,6 +237,11 @@ object NearDup {
         NearDupFunctions.simhash(col("content"), cfg.simBits).as("simhash"))
       .withColumn("sk", NearDupFunctions.sketchBytes(col("sig")))
 
+  /** Verified pairs from a precomputed (and caller-materialized) reps
+    * frame — lets composite queries (clusters, allFileClusters) share one
+    * reps scan instead of re-deriving the whole upstream per stage.
+    * Intermediates materialize through `scope`; the composite entry
+    * releases them after its result is checkpointed. */
   def verifiedPairsOf(reps: DataFrame, cfg: NearConfig,
                       scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame =
     verifiedPairsFromSigs(scope.persist(signalFrame(reps, cfg)), reps, cfg, scope)
@@ -269,13 +269,6 @@ object NearDup {
     * 555k raw candidates → ~2.3k plausible, never materialized). */
   private[graft] def allCandidates(sigs: DataFrame, cfg: NearConfig,
                                    scope: graft.util.PersistScope): DataFrame = {
-    // populate the (caller-persisted) signal cache BEFORE the band∪chunk
-    // union consumes it: the union's two branches land in ONE stage whose
-    // tasks race to materialize the same cache partitions, running the
-    // expensive minhash/sha256 upstream TWICE (round-6 task metrics: the
-    // union-shaped stages carried 2× the signal pass's executor time).
-    // One cheap job serializes the cache build; every later consumer reads.
-    sigs.count()
     val w = cfg.simBits / cfg.simChunks
     val mask = (1L << w) - 1
     val bandRows = bandsOf(sigs, cfg, carryCols = Seq("sk", "simhash"))
@@ -305,7 +298,7 @@ object NearDup {
                                        cfg: NearConfig): DataFrame = {
     // no .distinct() on the id set: LEFT-SEMI join semantics dedup the
     // build side for free, so the exchange+aggregate the distinct planned
-    // was pure overhead (reps is an InMemoryRelation here, so the semi is
+    // was pure overhead (reps is a materialized leaf here, so the semi is
     // not pushed through any Union)
     val candIds = plausible.select(col("a").as("file_id"))
       .union(plausible.select(col("b").as("file_id")))
@@ -329,16 +322,11 @@ object NearDup {
   /** Stage 1+2 from a precomputed (possibly checkpoint-restored) signal
     * frame; `reps` supplies content only for the plausible candidates'
     * exact verification (semi-joined — never a full re-read). Composed
-    * entirely from the staged helpers above — the Probe harness times the
-    * SAME constructions. */
+    * entirely from the staged helpers above. */
   def verifiedPairsFromSigs(sigs: DataFrame, reps: DataFrame, cfg: NearConfig,
                             scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame = {
     val plausible = scope.persist(allCandidates(sigs, cfg, scope).distinct())
     val sh = scope.persist(candidateShingles(reps, plausible, cfg))
-    // populate the shingle cache before the two verify-join broadcast
-    // builds (a-side and b-side) can race to materialize it concurrently —
-    // same discipline as the signal cache in allCandidates
-    sh.count()
     verifyCandidates(plausible, sh, cfg)
   }
 
@@ -347,27 +335,17 @@ object NearDup {
     * (file_id, cluster_id). */
   def clusters(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
     graft.util.PersistScope.scoped(s =>
-      clustersOf(s.persist(representatives(files, cfg)), cfg, s))
+      clustersOf(s.persist(representatives(files, cfg)), cfg))
 
   /** Clusters from a precomputed (caller-persisted) reps frame: reps feed
-    * both the vertex set and the whole pair pipeline — one scan, not two. */
-  def clustersOf(reps: DataFrame, cfg: NearConfig,
-                 scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame = {
-    val verts = reps.select("file_id")
-    // The pair pipeline runs under its OWN scope, released BEFORE the CC
-    // loop: every CC round is a separate query execution paying plan
-    // analysis + CacheManager lookup against whatever is cached, and with
-    // the pipeline's deep-plan caches live that driver-side tax dominated
-    // the clusters wall (round-6 job accounting: 60 executions, wall 2.5×
-    // the in-job time). The price is one explicit checkpoint of the pair
-    // set — the tier's smallest relation — whose blocks are freed as soon
-    // as CC has canonicalized it. `scope` still owns the caller's frames
-    // (reps feeds the final label join after CC).
-    val inner = new graft.util.PersistScope
-    val edges = verifiedPairsOf(reps, cfg, inner)
-      .select("a", "b").localCheckpoint(true)
-    inner.release()
-    val labels = graft.cluster.ConnectedComponents.run(verts, edges)
+    * both the vertex set and the whole pair pipeline — one scan, not two.
+    * The pair pipeline runs under its own scope, so only the edge set — the
+    * tier's smallest relation — stays resident through the CC loop; its
+    * blocks are freed once CC has canonicalized it. */
+  def clustersOf(reps: DataFrame, cfg: NearConfig): DataFrame = {
+    val edges = graft.util.PersistScope.scoped(s =>
+      verifiedPairsOf(reps, cfg, s).select("a", "b"))
+    val labels = graft.cluster.ConnectedComponents.run(reps.select("file_id"), edges)
     graft.util.Blocks.free(edges)
     labels
   }
@@ -379,12 +357,15 @@ object NearDup {
     * all share it (a second cascade re-run doubled this query's cost). */
   def allFileClusters(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
     graft.util.PersistScope.scoped { s =>
-      val scanned = s.persist(ExactDedup.scanFilter(files, DedupConfig())
+      // the scan's only consumers (narrow, reps) materialize eagerly, so
+      // its blocks are freed as soon as both exist
+      val scan = new graft.util.PersistScope
+      val scanned = scan.persist(ExactDedup.scanFilter(files, DedupConfig())
         .filter(col("size") >= cfg.shingleK))
       // same conditional-hash staging as [[representatives]]: unique-size
       // rows skip sha256 (sentinel '' group key keeps them their own group);
       // plan shape identical to round 3 — aggregates broadcast, one narrow
-      // persisted relation feeds rep selection AND member expansion
+      // materialized relation feeds rep selection AND member expansion
       val sizeN = scanned.groupBy("size").agg(count(lit(1)).as("__n"))
       val narrow = s.persist(scanned.join(sizeN, Seq("size"))
         .select(col("file_id"), col("size"),
@@ -393,20 +374,8 @@ object NearDup {
       val repOf = narrow.groupBy("size", "hash").agg(min("file_id").as("rep_id"))
       val reps = s.persist(scanned.join(
         repOf.select(col("rep_id").as("file_id")), Seq("file_id"), "left_semi"))
-      // clustersOf inlined so `scanned` can be released before the CC loop:
-      // its two consumers (narrow, reps) are both materialized by the edge
-      // build, and every cache still live during CC taxes each round's
-      // plan analysis (see clustersOf) — only narrow and reps are needed
-      // after this point (expansion join + label join).
-      val verts = reps.select("file_id")
-      val inner = new graft.util.PersistScope
-      val edges = verifiedPairsOf(reps, cfg, inner)
-        .select("a", "b").localCheckpoint(true)
-      inner.release()
-      scanned.unpersist(blocking = false)
-      val labels = graft.cluster.ConnectedComponents.run(verts, edges)
-      graft.util.Blocks.free(edges)
-      val repClusters = labels
+      scan.release()
+      val repClusters = clustersOf(reps, cfg)
         .select(col("file_id").as("rep_id"), col("cluster_id"))
       narrow.join(repOf, Seq("size", "hash"))
         .join(repClusters, Seq("rep_id"))

@@ -32,10 +32,9 @@ import graft.util.PersistScope
   *      quadratic work is spread across `salts` tasks/partitions.
   *   4. cold buckets take the plain equi-join.
   *
-  * Dropped-bucket logging rides the query itself via `observe` + a
-  * QueryExecutionListener: plan CONSTRUCTION triggers no Spark job (an
-  * earlier eager `head()` here ran the bucket aggregation at composition
-  * time), and the log line appears when the consuming action completes.
+  * Dropped-bucket logging rides the bucket-size aggregate itself via
+  * `observe` + a QueryExecutionListener: the log line appears when the
+  * aggregate executes — once, as `scope` materializes it.
   */
 object Salting {
 
@@ -46,10 +45,7 @@ object Salting {
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** One listener per session relays `graft_skew_dropped_*` observations to
-    * stderr (count of capped buckets, largest population, the cap). A
-    * recomputation of an evicted bucket-size frame re-fires its
-    * observation — duplicate log lines mean the aggregation genuinely ran
-    * again, which is worth seeing. */
+    * stderr (count of capped buckets, largest population, the cap). */
   private def ensureListener(spark: SparkSession): Unit =
     if (listenerSessions.put(spark, java.lang.Boolean.TRUE) == null) {
       spark.listenerManager.register(new QueryExecutionListener {
@@ -74,7 +70,7 @@ object Salting {
     *
     * `maxBucket <= 0` disables the cap; `hotThreshold <= 0` salts nothing.
     * The bucket-size aggregate is one narrow shuffle over (keys, count) —
-    * negligible next to the pair join it protects; it persists through
+    * negligible next to the pair join it protects; it materializes through
     * `scope` (the composite operator releases it after materializing).
     */
   def bucketPairs(buckets: DataFrame, keyCols: Seq[String], idCol: String,
@@ -86,8 +82,8 @@ object Salting {
 
     val kept =
       if (maxBucket > 0) {
-        // logged, not silent — but lazily: the observation is collected when
-        // the consuming query executes, not at plan construction
+        // logged, not silent: the observation is collected when the
+        // aggregate executes
         ensureListener(buckets.sparkSession)
         val observed = sizesRaw.observe(
           s"graft_skew_dropped_${obsId.incrementAndGet()}_${keyCols.mkString(",")}",

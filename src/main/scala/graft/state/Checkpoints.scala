@@ -28,6 +28,20 @@ import org.apache.spark.sql.functions._
   */
 object Checkpoints {
 
+  /** The classes [[codeVersion]] hashes: the facades AND the expression
+    * classes that actually compute stage output bytes — both the case class
+    * (its `nullSafeEval`/`doGenCode`) and its companion (the `compute` the
+    * eval path calls). A semantic change to e.g. MinHashSignature leaves the
+    * NearDupFunctions facade bytecode unchanged, so hashing facades alone
+    * would serve stale checkpointed buckets. */
+  private[graft] val codeVersionClasses: Seq[String] =
+    Seq("graft.exact.ExactDedup$", "graft.near.NearDup$", "graft.near.NearConfig",
+      "graft.functions.NearDupFunctions$", "graft.functions.HashConstants$",
+      "graft.skew.Salting$", "graft.state.Checkpoints$") ++
+      Seq("MinHashSignature", "MinHashContent", "ShingleKeys", "SimHash",
+        "SketchBytes", "SketchAgree")
+        .flatMap(c => Seq(s"graft.functions.$c", s"graft.functions.$c$$"))
+
   /** Code-version signal folded into every stage lineage: a digest of the
     * BYTECODE of the classes that produce checkpointed bytes. Without it a
     * pipeline code change would be invisible to the lineage and a resume
@@ -37,21 +51,8 @@ object Checkpoints {
     * resources means any rebuild that changes these classes invalidates
     * stored buckets automatically; an unchanged rebuild reuses them. */
   private[state] lazy val codeVersion: String = {
-    // the facades AND the expression classes that actually compute stage
-    // output bytes: a semantic change to e.g. MinHashSignature.compute
-    // leaves the NearDupFunctions facade bytecode unchanged, so hashing
-    // facades alone would serve stale checkpointed buckets — the exact
-    // failure this guard exists to prevent (round-5 ADVICE item 1)
-    val classes = Seq(
-      "graft.exact.ExactDedup$", "graft.near.NearDup$",
-      "graft.near.NearConfig", "graft.functions.NearDupFunctions$",
-      "graft.functions.MinHashSignature$", "graft.functions.MinHashContent$",
-      "graft.functions.ShingleKeys$", "graft.functions.SimHash$",
-      "graft.functions.SketchBytes$", "graft.functions.SketchAgree$",
-      "graft.functions.HashConstants$",
-      "graft.skew.Salting$", "graft.state.Checkpoints$")
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    classes.foreach { n =>
+    codeVersionClasses.foreach { n =>
       val in = getClass.getResourceAsStream("/" + n.replace('.', '/') + ".class")
       // a silently-skipped missing resource (e.g. after a rename) would
       // quietly weaken the guard — fail loudly instead
@@ -114,13 +115,6 @@ object Checkpoints {
         ls.length == 1 && ls.head == lineageOf(b)))
       .toSet
   }
-
-  /** Completion markers regardless of lineage (diagnostics / `cache ls`). */
-  def completedBuckets(spark: SparkSession, root: String, stage: String): Set[Int] =
-    readMetrics(spark, root)
-      .filter(col("stage") === stage)
-      .select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
 
   /** Drop a stage's stored buckets + manifest rows (the reference's
     * `cache --delete`, /root/reference/src/cache.c:33-55). Rewrites the

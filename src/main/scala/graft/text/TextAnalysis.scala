@@ -39,14 +39,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "et", "sort", "merge", "filter"),
     "zh" -> Seq("de", "shi", "hash", "batch", "vector"))
 
-  /** Per-language marker hit counts (one custom one-pass expression per
-    * language — kept for diagnostics; [[langId]] computes ALL profiles in a
-    * single pass). */
-  def langScores(c: Column): Seq[(String, Column)] =
-    LangProfiles.map { case (lang, words) =>
-      lang -> graft.functions.TextFunctions.wordSetCount(c, words)
-    }
-
   /** Predicted language = argmax marker score (ties → lexicographic first,
     * profiles are lang-sorted). One custom codegen'd expression: a single
     * token walk scores every profile — the composed HOF form re-split and

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.CheckpointShim
 
 /** Block-lifecycle hygiene for eager localCheckpoints.
   *
@@ -26,7 +27,7 @@ object Blocks {
   def free(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking)
+        CheckpointShim.unpersist(lr.rdd, blocking)
       case _ => ()
     }
 
@@ -49,7 +50,7 @@ object Blocks {
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+      .foreach(CheckpointShim.unpersist(_, blocking = true))
     val now = System.nanoTime()
     val prev = lastGc.get()
     if (now - prev > 60L * 1000 * 1000 * 1000 && lastGc.compareAndSet(prev, now))

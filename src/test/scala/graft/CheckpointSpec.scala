@@ -14,6 +14,21 @@ class CheckpointSpec extends SparkSpec {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_ckpt").toString
 
+  test("lineage guard hashes every expression case class and its companion") {
+    // nullSafeEval/doGenCode live on the case class, compute on the
+    // companion: both produce checkpointed bytes, so both must be hashed
+    val exprs = Seq("MinHashSignature", "MinHashContent", "ShingleKeys",
+      "SimHash", "SketchBytes", "SketchAgree")
+    val expected = exprs.flatMap(c =>
+      Seq(s"graft.functions.$c", s"graft.functions.$c" + "$"))
+    val missing = expected.filterNot(Checkpoints.codeVersionClasses.contains)
+    assert(missing.isEmpty, s"codeVersion does not hash: ${missing.mkString(", ")}")
+    Checkpoints.codeVersionClasses.foreach { n =>
+      assert(getClass.getResource("/" + n.replace('.', '/') + ".class") != null,
+        s"$n has no class resource")
+    }
+  }
+
   test("checkpointed scan equals the direct pipeline") {
     val root = freshRoot()
     val ck = Checkpoints.checkpointedDuplicates(spark, corpus, root, nBuckets = 4, cfg)

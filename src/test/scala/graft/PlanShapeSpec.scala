@@ -231,6 +231,69 @@ class PlanShapeSpec extends SparkSpec {
       "being pushed through the corpus Union again")
   }
 
+  /** Runs `body` and returns the largest physical-plan description Spark
+    * rendered for any execution it started — the string AQE rebuilds on
+    * every stage update (SparkListenerSQLAdaptiveExecutionUpdate). */
+  private def largestPlanText(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val largest = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart =>
+          largest.accumulateAndGet(e.physicalPlanDescription.length, math.max)
+        case e: SparkListenerSQLAdaptiveExecutionUpdate =>
+          largest.accumulateAndGet(e.physicalPlanDescription.length, math.max)
+        case _ => ()
+      }
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    largest.get()
+  }
+
+  test("near tier: no materialized frame nests another (plan text <= 256 KB)") {
+    // each near-tier intermediate is a checkpoint leaf; when they were
+    // lazily persisted frames nesting one another, every AQE update
+    // re-rendered all the nested cached plans: 90 MB (allFileClusters) and
+    // 42 MB (verifiedPairs) for a single plan string on this fixture
+    spark.catalog.clearCache()
+    val corpus = Tables.corpus(spark, sf)
+    val bound = 256 * 1024
+    val clusters = largestPlanText(near.NearDup.allFileClusters(corpus).collect())
+    assert(clusters <= bound, s"allFileClusters rendered a $clusters-char plan")
+    val pairs = largestPlanText(near.NearDup.verifiedPairs(corpus).collect())
+    info(s"largest plan text: allFileClusters $clusters chars, verifiedPairs $pairs chars")
+    assert(pairs <= bound, s"verifiedPairs rendered a $pairs-char plan")
+  }
+
+  test("verify joins still broadcast from checkpoint leaves (stats survive)") {
+    // each leaf's size is capped at its stored size; with only the source
+    // plan's estimate (GiBs after the rep-selection joins) both shingle
+    // joins planned as sort-merge joins, shuffling pairs and shingles
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val cfg = near.NearConfig()
+    val scope = new util.PersistScope
+    try {
+      val reps = scope.persist(near.NearDup.representatives(Tables.corpus(spark, sf), cfg))
+      val sigs = scope.persist(near.NearDup.signalFrame(reps, cfg))
+      val plausible = scope.persist(near.NearDup.allCandidates(sigs, cfg, scope).distinct())
+      val sh = scope.persist(near.NearDup.candidateShingles(reps, plausible, cfg))
+      val verified = near.NearDup.verifyCandidates(plausible, sh, cfg)
+      // the static plan, before AQE could convert joins from runtime sizes
+      val static = verified.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      val bhjs = static.collect { case j: BroadcastHashJoinExec => j }
+      assert(bhjs.size == 2, s"expected both shingle joins to broadcast:\n$static")
+      assert(verified.count() > 0)
+    } finally scope.release()
+  }
+
   test("repo-root restriction (F5) prunes at the source, not post-scan") {
     // one-file-system roots compile to an isin predicate; on a partitioned
     // layout (repo = Iceberg partition col) this is partition pruning. On
