@@ -493,6 +493,49 @@ object SketchAgree {
   }
 }
 
+/** |A ∩ B| for two ASCENDING, DISTINCT array<long> — the exact-Jaccard
+  * numerator of near-dup verification. One merge pass reading both arrays
+  * in place through `ArrayData.getLong`: no copy, no allocation. The
+  * built-in `size(array_intersect(a, b))` builds an OpenHashSet over one
+  * side and allocates a result array for every pair. Inputs that are not
+  * ascending and distinct give an undefined count; callers sort once per
+  * file ([[graft.near.NearDup.candidateShingles]]), not once per pair. */
+case class SortedIntersectSize(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "sorted_intersect_size"
+
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    SortedIntersectSize.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (l, r) =>
+      s"graft.functions.SortedIntersectSize.compute($l, $r)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectSize {
+  def compute(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x < y) i += 1
+      else if (x > y) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
+  }
+}
+
 /** Exact integer dot product of two long arrays — one tight loop instead of
   * zip_with + aggregate (which allocates an intermediate array and evaluates
   * two lambdas per element; at 10^7 candidate pairs × 64 dims that is the
@@ -552,6 +595,9 @@ object NearDupFunctions {
 
   def sketchAgree(a: Column, b: Column): Column =
     ExprShim.column(SketchAgree(ExprShim.expression(a), ExprShim.expression(b)))
+
+  def sortedIntersectSize(a: Column, b: Column): Column =
+    ExprShim.column(SortedIntersectSize(ExprShim.expression(a), ExprShim.expression(b)))
 
   def dotProductL(a: Column, b: Column): Column =
     ExprShim.column(DotProductL(ExprShim.expression(a), ExprShim.expression(b)))

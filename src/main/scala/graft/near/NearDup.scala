@@ -184,6 +184,15 @@ object NearDup {
     reps.select(col("file_id"),
       NearDupFunctions.simhash(col("content"), cfg.simBits).as("simhash"))
 
+  /** The pigeonhole split of a frame's `simhash` column: one row per chunk,
+    * `pos` = chunk index, `col` = that chunk's `simBits / simChunks` bits. */
+  private def simhashChunks(cfg: NearConfig): Column = {
+    val w = cfg.simBits / cfg.simChunks
+    val mask = (1L << w) - 1
+    posexplode(expr(
+      s"transform(sequence(0, ${cfg.simChunks - 1}), c -> shiftright(simhash, c * $w) & $mask)"))
+  }
+
   /** SimHash candidate pairs by the pigeonhole trick: split the hash into
     * `simChunks` chunks; Hamming distance ≤ hammingMax (< simChunks) implies
     * at least one chunk matches exactly → equi-join per chunk, then the
@@ -194,12 +203,8 @@ object NearDup {
 
   def simhashPairsOf(simhashesDf: DataFrame, cfg: NearConfig,
                      scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame = {
-    val w = cfg.simBits / cfg.simChunks
-    val mask = (1L << w) - 1
     val chunked = scope.persist(simhashesDf
-      .select(col("file_id"), col("simhash"),
-        posexplode(expr(
-          s"transform(sequence(0, ${cfg.simChunks - 1}), c -> shiftright(simhash, c * $w) & $mask)")))
+      .select(col("file_id"), col("simhash"), simhashChunks(cfg))
       .select(col("file_id"), col("simhash"), col("pos").as("chunk_idx"), col("col").as("chunk")))
     // Hamming filter BEFORE the dedup: it is row-local and deterministic on
     // the (simhash_a, simhash_b) payload riding each pair, so filter-then-
@@ -269,16 +274,12 @@ object NearDup {
     * 555k raw candidates → ~2.3k plausible, never materialized). */
   private[graft] def allCandidates(sigs: DataFrame, cfg: NearConfig,
                                    scope: graft.util.PersistScope): DataFrame = {
-    val w = cfg.simBits / cfg.simChunks
-    val mask = (1L << w) - 1
     val bandRows = bandsOf(sigs, cfg, carryCols = Seq("sk", "simhash"))
       .select(col("file_id"), col("band_idx").as("bidx"),
         col("band_key").as("bkey"), col("sk"), col("simhash"),
         lit(0).as("knd"))
     val chunkRows = sigs
-      .select(col("file_id"), col("simhash"), col("sk"),
-        posexplode(expr(
-          s"transform(sequence(0, ${cfg.simChunks - 1}), c -> shiftright(simhash, c * $w) & $mask)")))
+      .select(col("file_id"), col("simhash"), col("sk"), simhashChunks(cfg))
       .select(col("file_id"), (col("pos").cast("long") + cfg.bands).as("bidx"),
         col("col").cast("string").as("bkey"), col("sk"), col("simhash"),
         lit(1).as("knd"))
@@ -293,7 +294,10 @@ object NearDup {
   }
 
   /** Stage 2a — shingle arrays for members of plausible pairs ONLY (a tiny
-    * subset at scale; semi-join first, never a full content re-read). */
+    * subset at scale; semi-join first, never a full content re-read).
+    * Output `shingles` is ASCENDING and distinct (sorted once per candidate
+    * file, a primitive sort), the layout [[verifyCandidates]] requires;
+    * [[shingleKeys]] itself keeps first-occurrence order. */
   private[graft] def candidateShingles(reps: DataFrame, plausible: DataFrame,
                                        cfg: NearConfig): DataFrame = {
     // no .distinct() on the id set: LEFT-SEMI join semantics dedup the
@@ -303,16 +307,21 @@ object NearDup {
     val candIds = plausible.select(col("a").as("file_id"))
       .union(plausible.select(col("b").as("file_id")))
     reps.join(candIds, Seq("file_id"), "left_semi")
-      .select(col("file_id"), shingleKeys("content", cfg.shingleK).as("shingles"))
+      .select(col("file_id"), sort_array(shingleKeys("content", cfg.shingleK)).as("shingles"))
   }
 
-  /** Stage 2b — exact shingle-Jaccard verification of plausible pairs. */
+  /** Stage 2b — exact shingle-Jaccard verification of plausible pairs.
+    * `sh.shingles` must be ASCENDING and distinct, as [[candidateShingles]]
+    * emits them: the intersection is one merge pass per pair
+    * ([[graft.functions.SortedIntersectSize]]), and unsorted arrays give
+    * wrong counts, not an error. */
   private[graft] def verifyCandidates(plausible: DataFrame, sh: DataFrame,
                                       cfg: NearConfig): DataFrame =
     plausible
       .join(sh.select(col("file_id").as("a"), col("shingles").as("sh_a")), Seq("a"))
       .join(sh.select(col("file_id").as("b"), col("shingles").as("sh_b")), Seq("b"))
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+      .withColumn("n_inter",
+        NearDupFunctions.sortedIntersectSize(col("sh_a"), col("sh_b")).cast("long"))
       .withColumn("jaccard",
         col("n_inter").cast("double") /
           (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")).cast("double"))

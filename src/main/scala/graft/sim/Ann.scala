@@ -185,15 +185,19 @@ object Ann {
     * persists it) — shared with [[ivfTopK]] so the quantize+norm pass over
     * the corpus is never duplicated. */
   private[sim] def kmeansFrom(v: DataFrame, k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // seed: fixed-K hash-rank sample; the rank window runs on K rows
-    // AFTER the distributed TakeOrdered, never on the corpus
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // seed: fixed-K hash-rank sample. TakeOrdered returns the K rows in
+    // rank order, so cid is a row's index in the collected list; a
+    // row_number window over them would have no partition key
     val hk = (col("vec_id") % lit(2147483647L)) * lit(2654435761L) % lit(2147483647L)
-    var cent = v.withColumn("__hk", hk)
+    val seeds = v.withColumn("__hk", hk)
       .orderBy(col("__hk"), col("vec_id")).limit(k)
-      .withColumn("cid",
-        row_number().over(Window.orderBy(col("__hk"), col("vec_id"))).cast("long") - 1)
-      .select(col("cid"), col("qv").as("cv"))
+      .select(col("qv").as("cv"))
+    val seedRows = seeds.collect().zipWithIndex.map { case (r, i) => Row(i.toLong, r.get(0)) }
+    var cent = v.sparkSession.createDataFrame(
+      java.util.Arrays.asList(seedRows: _*),
+      StructType(StructField("cid", LongType, nullable = false) +: seeds.schema.fields))
     for (_ <- 1 to iters) {
       val c = cent.withColumn("cn", dotQ(col("cv"), col("cv")))
       val asg = v.crossJoin(broadcast(c))

@@ -33,13 +33,16 @@ object Checkpoints {
     * (its `nullSafeEval`/`doGenCode`) and its companion (the `compute` the
     * eval path calls). A semantic change to e.g. MinHashSignature leaves the
     * NearDupFunctions facade bytecode unchanged, so hashing facades alone
-    * would serve stale checkpointed buckets. */
+    * would serve stale checkpointed buckets. `LshSignatures` and
+    * `DotProductL` are deliberately absent: they feed only [[graft.sim.Ann]],
+    * and no [[runStage]] caller (`exact`, `nearsig`, `nearpairs`) runs Ann,
+    * so they produce no checkpointed bytes. */
   private[graft] val codeVersionClasses: Seq[String] =
     Seq("graft.exact.ExactDedup$", "graft.near.NearDup$", "graft.near.NearConfig",
       "graft.functions.NearDupFunctions$", "graft.functions.HashConstants$",
       "graft.skew.Salting$", "graft.state.Checkpoints$") ++
       Seq("MinHashSignature", "MinHashContent", "ShingleKeys", "SimHash",
-        "SketchBytes", "SketchAgree")
+        "SketchBytes", "SketchAgree", "SortedIntersectSize")
         .flatMap(c => Seq(s"graft.functions.$c", s"graft.functions.$c$$"))
 
   /** Code-version signal folded into every stage lineage: a digest of the

@@ -67,6 +67,43 @@ class NearDupSpec extends SparkSpec {
     assert(mirror.join(base, "base_id").filter(col("cluster_id") =!= col("bc")).count() == 0)
   }
 
+  test("sorted-merge verify equals the array_intersect reference form") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    def hasArrayIntersect(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[ArrayIntersect])))
+    val scope = new graft.util.PersistScope
+    try {
+      val reps = scope.persist(NearDup.representatives(corpus, cfg))
+      val sigs = scope.persist(NearDup.signalFrame(reps, cfg))
+      val plausible = scope.persist(NearDup.allCandidates(sigs, cfg, scope).distinct())
+      val cand = scope.persist(NearDup.candidateShingles(reps, plausible, cfg))
+      val verified = NearDup.verifyCandidates(plausible, cand, cfg)
+      // reference: first-occurrence-order shingles, hash-set intersection
+      val sh = reps.select(col("file_id"), NearDup.shingleKeys("content").as("shingles"))
+      // the merge kernel's input contract: candidate arrays are ascending,
+      // though first-occurrence order is not (the fixture's forks edit
+      // prefixes and suffixes, so an unsorted merge can still count right)
+      def unsorted(df: org.apache.spark.sql.DataFrame): Long =
+        df.filter(col("shingles") =!= sort_array(col("shingles"))).count()
+      assert(unsorted(cand) == 0)
+      assert(unsorted(sh.join(cand.select("file_id"), "file_id")) > 0)
+      val reference = plausible
+        .join(sh.select(col("file_id").as("a"), col("shingles").as("sh_a")), Seq("a"))
+        .join(sh.select(col("file_id").as("b"), col("shingles").as("sh_b")), Seq("b"))
+        .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+        .withColumn("jaccard", col("n_inter").cast("double") /
+          (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")).cast("double"))
+        .filter(col("jaccard") >= cfg.jaccardThreshold)
+        .select("a", "b", "jaccard")
+      assert(verified.count() > 0)
+      assert(verified.exceptAll(reference).count() == 0)
+      assert(reference.exceptAll(verified).count() == 0)
+      assert(hasArrayIntersect(reference))
+      assert(!hasArrayIntersect(verified), verified.queryExecution.optimizedPlan.toString)
+    } finally scope.release()
+  }
+
   test("fused MinHashContent equals MinHashSignature(ShingleKeys(content))") {
     val reps = NearDup.representatives(corpus, cfg)
     val composed = NearDup.signaturesOf(reps, cfg).select("file_id", "sig")
