@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Prints a query's formatted physical plan as the engine runs it: a
+  * composite operator materializes its intermediates while the query is
+  * built, so it shows as a `Scan ExistingRDD` over its checkpointed result. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    // keep composite operators lazy so the FULL plan prints (their default
-    // eager checkpoint would otherwise show only a Scan ExistingRDD)
-    System.setProperty(graft.util.PersistScope.LazyProp, "true")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = util.Sessions.create("local[8]", "8", "graft-explain")
     val q = SparkEntry.queries(args(0))(spark, "/root/testdata/sf0.001")
     q.explain("formatted")
     spark.stop()

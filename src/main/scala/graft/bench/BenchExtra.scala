@@ -1,6 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.near.{NearConfig, NearDup}
 
 /** Stage-isolation benchmark (guide §1.4): times each stage of the
@@ -22,16 +22,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.create(s"local[$cpus]", cpus, "graft-benchextra")
     val cfg = NearConfig()
 
     // one untimed warmup (JIT + codegen), mirroring Bench
@@ -59,13 +50,8 @@ object BenchExtra {
         NearDup.allCandidates(sigs, cfg, scope).distinct())
       val sh = lap("cand_shingles")(NearDup.candidateShingles(reps0, plausible, cfg))
       val ver = lap("verify_join")(NearDup.verifyCandidates(plausible, sh, cfg))
-      spark.sparkContext.setJobDescription("benchextra: cc")
-      val labels = graft.cluster.ConnectedComponents.run(
-        reps0.select("file_id"), ver.select("a", "b"))
-      labels.count()
-      val t = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[benchextra] cc               $t%7.2f s")
-      mins("cc") = math.min(mins.getOrElse("cc", Double.MaxValue), t)
+      lap("cc")(graft.cluster.ConnectedComponents.run(
+        reps0.select("file_id"), ver.select("a", "b"), scope))
       scope.release()
       spark.sparkContext.setJobDescription(null)
     }

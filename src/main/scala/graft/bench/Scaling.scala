@@ -68,7 +68,7 @@ object Scaling {
       val stage = Option(stageOverride)
         .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SCALE_STAGE", "sig"))
       def job(): Unit = stage match {
-        case "sig" => graft.near.NearDup.fastSignatures(corpus, cfg)
+        case "sig" => graft.near.NearDup.signalFrame(corpus, cfg)
           .select(org.apache.spark.sql.functions.sum(
             org.apache.spark.sql.functions.element_at(
               org.apache.spark.sql.functions.col("sig"), 1))).head()

@@ -68,19 +68,8 @@ object Main {
   def main(args: Array[String]): Unit = {
     val op = args.headOption.getOrElse("help")
     val opts = parseOpts(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-$op")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE re-plans at runtime: skewed sort-merge join partitions are
-      // split (north-rule skew handling for the exact tier's size joins)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.create(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), s"graft-$op")
     val exitCode = runOp(spark, op, opts)
     spark.stop()
     if (exitCode != 0) sys.exit(exitCode)

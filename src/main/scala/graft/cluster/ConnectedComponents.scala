@@ -2,6 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.PersistScope
 
 /** Connected components over DataFrame joins by the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected Components
@@ -34,11 +35,16 @@ object ConnectedComponents {
 
   /** Result of a CC run: `converged = false` means the labels are possibly
     * PARTIAL (maxIter exhausted, or a 2^-64 signature collision ended the
-    * loop early) — callers must check it before trusting cluster_id. */
-  final case class CcResult(labels: DataFrame, rounds: Int, converged: Boolean)
+    * loop early) — callers must check it before trusting cluster_id.
+    * `forest` is the final round's checkpointed edge frame, which `labels`
+    * reads: free it once `labels` has materialized. */
+  final case class CcResult(labels: DataFrame, rounds: Int, converged: Boolean,
+                            forest: DataFrame)
 
   /** @param vertices one column `file_id`
     * @param edges    two columns `a`, `b` (undirected, any orientation)
+    * @param scope    takes over the final round's edge frame, which the
+    *                 returned labels read
     * @param allowPartial accept possibly-partial labels on non-convergence
     *                 instead of throwing — opt-in only: a silent partial
     *                 result poisons every downstream cluster expansion
@@ -46,9 +52,10 @@ object ConnectedComponents {
     * @throws IllegalStateException when the rounds cap was exhausted and
     *                 `allowPartial` is false
     */
-  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50,
-          allowPartial: Boolean = false): DataFrame = {
+  def run(vertices: DataFrame, edges: DataFrame, scope: PersistScope,
+          maxIter: Int = 50, allowPartial: Boolean = false): DataFrame = {
     val r = runWithStats(vertices, edges, maxIter)
+    scope.track(r.forest)
     if (!r.converged && !allowPartial)
       throw new IllegalStateException(
         s"connected components not converged after $maxIter rounds — " +
@@ -70,7 +77,8 @@ object ConnectedComponents {
     // or every O(E) iteration frame stays resident for the session — at
     // ~10 rounds that is 10x the edge set squeezing execution memory
     // (round-5 session-aging regression), and an OOM at the 100 TB target.
-    // The FINAL frame stays live: the returned labels plan reads it.
+    // The FINAL frame stays live: the returned labels plan reads it, and
+    // CcResult.forest hands it to the caller.
     var retired: DataFrame = null
 
     // edge-set signature: (count, xor of per-edge hashes) — set equality up
@@ -181,6 +189,6 @@ object ConnectedComponents {
         Seq("file_id"), "left")
       .select(col("file_id"),
         coalesce(col("__c"), col("file_id")).as("cluster_id"))
-    CcResult(labels, iter, converged)
+    CcResult(labels, iter, converged, e)
   }
 }

@@ -2,8 +2,11 @@ package graft.near
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.cluster.ConnectedComponents
 import graft.exact.{DedupConfig, ExactDedup}
 import graft.functions.NearDupFunctions
+import graft.skew.Salting
+import graft.util.{Blocks, PersistScope}
 
 /** Near-dup tier configuration — the north_rule config: 5-gram shingles,
   * 128-perm MinHash, LSH b=16 bands × r=8 rows, SimHash (60 effective bits,
@@ -80,36 +83,47 @@ object NearDup {
     * representative with no content hash computed — only rows in multi-
     * member size buckets get sha256'd. At corpus scale the unique-size
     * fraction is hashed-for-free; only (size, hash, file_id) is shuffled to
-    * pick representatives, content stays put until the semi-join. */
-  def representatives(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame = {
-    val scanned = ExactDedup.scanFilter(files, DedupConfig())
-      .filter(col("size") >= cfg.shingleK)
-    // conditional hash, NOT row routing: a size-count broadcast join guards
-    // sha256 behind `when(n >= 2)`, with the empty string as the unique-size
-    // sentinel group key (one row per unique size, so (size, '') is its own
-    // group). Plan shape stays the round-3 one — both join right sides are
-    // aggregates, so they broadcast; an earlier semi/anti/union routing
-    // formulation inherited the anti-join's full-scan size estimate, turned
-    // the rep semi-join into a content-bearing sort-merge shuffle, and
-    // regressed every reps consumer 3-15× (bench A/B, round 4).
+    * pick representatives, content stays put until the rep join. */
+  def representatives(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
+    repSelection(shingleable(files, cfg), identity)._3
+
+  /** The scannable rows long enough to shingle. */
+  private[graft] def shingleable(files: DataFrame, cfg: NearConfig): DataFrame =
+    ExactDedup.scanFilter(files, DedupConfig()).filter(col("size") >= cfg.shingleK)
+
+  /** Rep selection, written once for [[representatives]] and the member
+    * expansion of [[allFileClusters]]. Returns the (file_id, size, hash)
+    * frame, each (size, hash) group's `rep_id` = min(file_id), and the
+    * representative rows of `scanned`; the first and last pass through
+    * `hold`, so member expansion can materialize them.
+    *
+    * Conditional hash, NOT row routing: a size-count broadcast join guards
+    * sha256 behind `when(n >= 2)`, with the empty string as the unique-size
+    * sentinel group key (one row per unique size, so (size, '') is its own
+    * group). Both join right sides are aggregates, so they broadcast; an
+    * earlier semi/anti/union routing formulation inherited the anti-join's
+    * full-scan size estimate, turned the rep semi-join into a
+    * content-bearing sort-merge shuffle, and regressed every reps consumer
+    * 3-15× (bench A/B, round 4). */
+  private def repSelection(scanned: DataFrame, hold: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     val sizeN = scanned.groupBy("size").agg(count(lit(1)).as("__n"))
-    val repIds = scanned.join(sizeN, Seq("size"))
-      .select(col("size"),
+    val narrow = hold(scanned.join(sizeN, Seq("size"))
+      .select(col("file_id"), col("size"),
         when(col("__n") >= 2, sha2(col("content"), 256))
-          .otherwise(lit("")).as("hash"),
-        col("file_id"))
-      .groupBy("size", "hash").agg(min("file_id").as("file_id"))
-      .select("file_id")
-    // INNER join, not left-semi: repIds is unique on file_id (each row
-    // belongs to exactly one (size, hash) group, so the per-group min ids
-    // are distinct) and contributes no columns, making inner ≡ semi — but
+          .otherwise(lit("")).as("hash")))
+    val repOf = narrow.groupBy("size", "hash").agg(min("file_id").as("rep_id"))
+    // INNER join, not left-semi: rep ids are unique (each row belongs to
+    // exactly one (size, hash) group, so the per-group min ids are
+    // distinct) and contribute no columns, making inner ≡ semi — but
     // Catalyst pushes a LEFT-SEMI through the corpus Union
-    // (PushdownLeftSemiAntiJoin), duplicating the whole repIds build (two
+    // (PushdownLeftSemiAntiJoin), duplicating the whole rep-id build (two
     // more corpus unions + the conditional sha256 + both aggregates) into
     // EVERY union branch: 11 corpus instances / 55 scans in the plan, and
     // a measured 4x on q_reps that every reps consumer inherited. Inner
-    // joins are not distributed over unions; this plan builds repIds once.
-    scanned.join(repIds, Seq("file_id"))
+    // joins are not distributed over unions; this plan builds rep ids once.
+    (narrow, repOf,
+      hold(scanned.join(repOf.select(col("rep_id").as("file_id")), Seq("file_id"))))
   }
 
   /** Representatives with shingles + MinHash signature, computed map-side. */
@@ -122,24 +136,17 @@ object NearDup {
       .filter(size(col("shingles")) > 0)
       .withColumn("sig", NearDupFunctions.minhashSignature(col("shingles"), cfg.numPerms))
 
-  /** Signature-only fast path: fused shingle+MinHash straight from content
-    * (no shingle-array materialization; min over the shingle multiset equals
-    * min over the set). Used wherever only `sig` is needed. */
-  def fastSignatures(reps: DataFrame, cfg: NearConfig): DataFrame =
-    reps
-      .filter(length(col("content")) >= cfg.shingleK)
-      .select(col("file_id"),
-        NearDupFunctions.minhashContent(col("content"), cfg.numPerms).as("sig"))
-
   /** LSH banding: signature → (band_idx, band_key) rows; band_key is the
     * comma-joined r signature values (collision-free, no overflow games).
-    * Built on the FUSED signature path (minhash straight from content —
-    * value-identical to the shingle-array formulation, NearDupSpec): band
+    * Built on the one signal pass, [[signalFrame]], whose MinHash is fused
+    * straight from content (value-identical to the shingle-array
+    * formulation, NearDupSpec): column pruning drops its SimHash and
+    * sketch, so the optimized plan computes only the MinHash. Band
     * consumers never need the shingle arrays, so materializing them per row
     * was pure allocation (q_skew_pairs pays this on a 1000-member planted
     * family). signatures() remains the shingle-bearing entry (q_shingle_count). */
   def bands(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    bandsOf(fastSignatures(representatives(files, cfg), cfg), cfg)
+    bandsOf(signalFrame(representatives(files, cfg), cfg), cfg)
 
   /** Banding from a precomputed signatures frame (lets composite pipelines
     * persist `signatures` once instead of re-deriving it per stage).
@@ -163,25 +170,18 @@ object NearDup {
     * a < b, deduped across bands. `maxBucket` caps pathological buckets.
     * Standalone entry: materializes eagerly, then releases its intermediates. */
   def lshPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    graft.util.PersistScope.scoped(s => lshPairsOf(bands(files, cfg), cfg, s))
-
-  def lshPairsOf(bandsDf: DataFrame, cfg: NearConfig,
-                 scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame = {
-    // persist: the bands frame feeds three consumers (bucket-size agg and
-    // both sides of the self-join) — without it the whole upstream
-    // (reps → shingles → signatures) re-executes per consumer
-    val b = scope.persist(bandsDf)
-    graft.skew.Salting.bucketPairs(b, Seq("band_idx", "band_key"), "file_id",
-      Nil, cfg.maxBucket, cfg.hotBucket, cfg.salts, scope)
-      .distinct()
-  }
+    PersistScope.scoped { s =>
+      // persist: the bands frame feeds three consumers (bucket-size agg and
+      // both sides of the self-join) — without it the whole upstream
+      // (reps → signatures) re-executes per consumer
+      Salting.bucketPairs(s.persist(bands(files, cfg)), Seq("band_idx", "band_key"),
+        "file_id", Nil, cfg.maxBucket, cfg.hotBucket, cfg.salts, s)
+        .distinct()
+    }
 
   /** SimHash per representative (custom codegen'd expression, map-side). */
   def simhashes(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    simhashesOf(representatives(files, cfg), cfg)
-
-  def simhashesOf(reps: DataFrame, cfg: NearConfig): DataFrame =
-    reps.select(col("file_id"),
+    representatives(files, cfg).select(col("file_id"),
       NearDupFunctions.simhash(col("content"), cfg.simBits).as("simhash"))
 
   /** The pigeonhole split of a frame's `simhash` column: one row per chunk,
@@ -198,25 +198,21 @@ object NearDup {
     * at least one chunk matches exactly → equi-join per chunk, then the
     * exact Hamming filter. */
   def simhashPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    graft.util.PersistScope.scoped(s =>
-      simhashPairsOf(simhashes(files, cfg), cfg, s))
-
-  def simhashPairsOf(simhashesDf: DataFrame, cfg: NearConfig,
-                     scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame = {
-    val chunked = scope.persist(simhashesDf
-      .select(col("file_id"), col("simhash"), simhashChunks(cfg))
-      .select(col("file_id"), col("simhash"), col("pos").as("chunk_idx"), col("col").as("chunk")))
-    // Hamming filter BEFORE the dedup: it is row-local and deterministic on
-    // the (simhash_a, simhash_b) payload riding each pair, so filter-then-
-    // distinct is result-identical to distinct-then-filter — and it cuts
-    // the distinct's shuffle input from every chunk-collision pair (~10×
-    // the survivors on the sf0.1 corpus) to the Hamming-close set.
-    graft.skew.Salting.bucketPairs(chunked, Seq("chunk_idx", "chunk"), "file_id",
-      Seq("simhash"), cfg.maxBucket, cfg.hotBucket, cfg.salts, scope)
-      .filter(expr(s"bit_count(simhash_a ^ simhash_b) <= ${cfg.hammingMax}"))
-      .select("a", "b")
-      .distinct()
-  }
+    PersistScope.scoped { s =>
+      val chunked = s.persist(simhashes(files, cfg)
+        .select(col("file_id"), col("simhash"), simhashChunks(cfg))
+        .select(col("file_id"), col("simhash"), col("pos").as("chunk_idx"), col("col").as("chunk")))
+      // Hamming filter BEFORE the dedup: it is row-local and deterministic on
+      // the (simhash_a, simhash_b) payload riding each pair, so filter-then-
+      // distinct is result-identical to distinct-then-filter — and it cuts
+      // the distinct's shuffle input from every chunk-collision pair (~10×
+      // the survivors on the sf0.1 corpus) to the Hamming-close set.
+      Salting.bucketPairs(chunked, Seq("chunk_idx", "chunk"), "file_id",
+        Seq("simhash"), cfg.maxBucket, cfg.hotBucket, cfg.salts, s)
+        .filter(expr(s"bit_count(simhash_a ^ simhash_b) <= ${cfg.hammingMax}"))
+        .select("a", "b")
+        .distinct()
+    }
 
   /** Candidate union (LSH ∪ SimHash) with exact shingle-Jaccard verification.
     * Verification is two bounded-size equi-joins (shingle arrays of each
@@ -227,7 +223,7 @@ object NearDup {
     * shingle join) and Catalyst does not share non-exchange subplans across
     * joins — without them the corpus is re-scanned and re-shingled 4×. */
   def verifiedPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    graft.util.PersistScope.scoped(s =>
+    PersistScope.scoped(s =>
       verifiedPairsOf(s.persist(representatives(files, cfg)), cfg, s))
 
   /** ONE content pass computing every per-row signal the candidate tier
@@ -247,16 +243,8 @@ object NearDup {
     * reps scan instead of re-deriving the whole upstream per stage.
     * Intermediates materialize through `scope`; the composite entry
     * releases them after its result is checkpointed. */
-  def verifiedPairsOf(reps: DataFrame, cfg: NearConfig,
-                      scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame =
+  def verifiedPairsOf(reps: DataFrame, cfg: NearConfig, scope: PersistScope): DataFrame =
     verifiedPairsFromSigs(scope.persist(signalFrame(reps, cfg)), reps, cfg, scope)
-
-  /** The byte-sketch agreement prefilter over a pair frame carrying
-    * (sk_a, sk_b). Pair-deterministic, so filtering before the
-    * union-distinct is result-identical to filtering after; cutoff ≥5σ
-    * recall-safe (NearConfig.sketchMin). */
-  private[graft] def sketchAgreeOk(cfg: NearConfig): Column =
-    NearDupFunctions.sketchAgree(col("sk_a"), col("sk_b")) >= cfg.sketchMin
 
   /** Stage 1 — LSH band + SimHash pigeonhole candidates from ONE fused
     * bucket join. Both recall nets are "equi-join within buckets"; their
@@ -273,7 +261,7 @@ object NearDup {
     * evaluated inside the join projection (realistic boilerplate at sf0.1:
     * 555k raw candidates → ~2.3k plausible, never materialized). */
   private[graft] def allCandidates(sigs: DataFrame, cfg: NearConfig,
-                                   scope: graft.util.PersistScope): DataFrame = {
+                                   scope: PersistScope): DataFrame = {
     val bandRows = bandsOf(sigs, cfg, carryCols = Seq("sk", "simhash"))
       .select(col("file_id"), col("band_idx").as("bidx"),
         col("band_key").as("bkey"), col("sk"), col("simhash"),
@@ -283,13 +271,16 @@ object NearDup {
       .select(col("file_id"), (col("pos").cast("long") + cfg.bands).as("bidx"),
         col("col").cast("string").as("bkey"), col("sk"), col("simhash"),
         lit(1).as("knd"))
-    graft.skew.Salting.bucketPairs(
+    Salting.bucketPairs(
       scope.persist(bandRows.unionAll(chunkRows)),
       Seq("bidx", "bkey"), "file_id", Seq("sk", "simhash", "knd"),
       cfg.maxBucket, cfg.hotBucket, cfg.salts, scope)
       .filter(col("knd_a") === 0 ||
         expr(s"bit_count(simhash_a ^ simhash_b) <= ${cfg.hammingMax}"))
-      .filter(sketchAgreeOk(cfg))
+      // the byte-sketch prefilter is pair-deterministic, so filtering before
+      // the union-distinct is result-identical to filtering after; cutoff
+      // ≥5σ recall-safe (NearConfig.sketchMin)
+      .filter(NearDupFunctions.sketchAgree(col("sk_a"), col("sk_b")) >= cfg.sketchMin)
       .select("a", "b")
   }
 
@@ -333,7 +324,7 @@ object NearDup {
     * exact verification (semi-joined — never a full re-read). Composed
     * entirely from the staged helpers above. */
   def verifiedPairsFromSigs(sigs: DataFrame, reps: DataFrame, cfg: NearConfig,
-                            scope: graft.util.PersistScope = graft.util.PersistScope.unmanaged): DataFrame = {
+                            scope: PersistScope): DataFrame = {
     val plausible = scope.persist(allCandidates(sigs, cfg, scope).distinct())
     val sh = scope.persist(candidateShingles(reps, plausible, cfg))
     verifyCandidates(plausible, sh, cfg)
@@ -343,19 +334,20 @@ object NearDup {
     * verified-pair graph; singleton reps cluster with themselves. Output:
     * (file_id, cluster_id). */
   def clusters(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    graft.util.PersistScope.scoped(s =>
-      clustersOf(s.persist(representatives(files, cfg)), cfg))
+    PersistScope.scoped(s =>
+      clustersOf(s.persist(representatives(files, cfg)), cfg, s))
 
   /** Clusters from a precomputed (caller-persisted) reps frame: reps feed
     * both the vertex set and the whole pair pipeline — one scan, not two.
     * The pair pipeline runs under its own scope, so only the edge set — the
     * tier's smallest relation — stays resident through the CC loop; its
-    * blocks are freed once CC has canonicalized it. */
-  def clustersOf(reps: DataFrame, cfg: NearConfig): DataFrame = {
-    val edges = graft.util.PersistScope.scoped(s =>
+    * blocks are freed once CC has canonicalized it. CC's final star forest,
+    * which the returned labels read, is handed to `scope`. */
+  def clustersOf(reps: DataFrame, cfg: NearConfig, scope: PersistScope): DataFrame = {
+    val edges = PersistScope.scoped(s =>
       verifiedPairsOf(reps, cfg, s).select("a", "b"))
-    val labels = graft.cluster.ConnectedComponents.run(reps.select("file_id"), edges)
-    graft.util.Blocks.free(edges)
+    val labels = ConnectedComponents.run(reps.select("file_id"), edges, scope)
+    Blocks.free(edges)
     labels
   }
 
@@ -365,26 +357,12 @@ object NearDup {
     * narrow scan — reps, the pair pipeline, and the member-expansion join
     * all share it (a second cascade re-run doubled this query's cost). */
   def allFileClusters(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    graft.util.PersistScope.scoped { s =>
+    PersistScope.scoped { s =>
       // the scan's only consumers (narrow, reps) materialize eagerly, so
       // its blocks are freed as soon as both exist
-      val scan = new graft.util.PersistScope
-      val scanned = scan.persist(ExactDedup.scanFilter(files, DedupConfig())
-        .filter(col("size") >= cfg.shingleK))
-      // same conditional-hash staging as [[representatives]]: unique-size
-      // rows skip sha256 (sentinel '' group key keeps them their own group);
-      // plan shape identical to round 3 — aggregates broadcast, one narrow
-      // materialized relation feeds rep selection AND member expansion
-      val sizeN = scanned.groupBy("size").agg(count(lit(1)).as("__n"))
-      val narrow = s.persist(scanned.join(sizeN, Seq("size"))
-        .select(col("file_id"), col("size"),
-          when(col("__n") >= 2, sha2(col("content"), 256))
-            .otherwise(lit("")).as("hash")))
-      val repOf = narrow.groupBy("size", "hash").agg(min("file_id").as("rep_id"))
-      val reps = s.persist(scanned.join(
-        repOf.select(col("rep_id").as("file_id")), Seq("file_id"), "left_semi"))
-      scan.release()
-      val repClusters = clustersOf(reps, cfg)
+      val (narrow, repOf, reps) = PersistScope.using(scan =>
+        repSelection(scan.persist(shingleable(files, cfg)), s.persist))
+      val repClusters = clustersOf(reps, cfg, s)
         .select(col("file_id").as("rep_id"), col("cluster_id"))
       narrow.join(repOf, Seq("size", "hash"))
         .join(repClusters, Seq("rep_id"))

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.util.PersistScope
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>) — the similarity-search tier of the training-data
@@ -39,26 +40,66 @@ object Ann {
     dotQ(a, b).cast("double") /
       sqrt((dotQ(a, a) * dotQ(b, b)).cast("double"))
 
+  /** [[cosineQ]] from precomputed squared norms, floored to 6 decimals —
+    * the similarity every ranking and threshold below compares. */
+  private def cosR6(a: Column, b: Column, na: Column, nb: Column): Column =
+    graft.text.TextAnalysis.r6(dotQ(a, b).cast("double") / sqrt((na * nb).cast("double")))
+
+  /** The quantize+norm pass: (vec_id, qv = quantized vector, nv = its
+    * squared norm). */
+  private def quantized(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+      .withColumn("nv", dotQ(col("qv"), col("qv")))
+
+  /** The fixed-K hash-rank sample of a [[quantized]] frame, in rank order:
+    * (vec_id mod P)·2654435761 mod P stays < 2^63, exact in both engines;
+    * the pick is a distributed top-K (TakeOrdered), never a full sort. */
+  private def hashRankSeeds(v: DataFrame, k: Int): DataFrame =
+    v.withColumn("__hk", (col("vec_id") % lit(2147483647L)) * lit(2654435761L) % lit(2147483647L))
+      .orderBy(col("__hk"), col("vec_id")).limit(k)
+
+  /** Every (vector, centroid) cosine `ccos`, scored map-side against the
+    * BROADCAST K-row centroid set (cid, cv, cn). */
+  private def centroidScores(v: DataFrame, cent: DataFrame): DataFrame =
+    v.crossJoin(broadcast(cent))
+      .withColumn("ccos", cosR6(col("qv"), col("cv"), col("nv"), col("cn")))
+
+  /** Each vector's argmax-cosine centroid, ties toward the lower cid;
+    * max_by over a struct key is partial-agg friendly (no N×K window). */
+  private def nearestCentroid(scored: DataFrame): DataFrame =
+    scored.groupBy("vec_id")
+      .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
+
+  /** Each `key`'s `n` best-scoring rows by `score` desc, ties toward the
+    * lower `tie`, ranked 1..n in `rank`. */
+  private def topBy(df: DataFrame, key: String, score: String, tie: String,
+                    n: Int): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(key).orderBy(col(score).desc, col(tie))).cast("long"))
+      .filter(col("rank") <= n)
+
+  /** The k nearest neighbors per query from (query_id, neighbor_id, cos). */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    topBy(scored, "query_id", "cos", "neighbor_id", k)
+      .select("query_id", "rank", "neighbor_id", "cos")
+
+  /** (vec_id, qv, t, sig): one row per vector and LSH table `t`, with
+    * `sig` the vector's random-hyperplane bucket in that table. */
+  private def lshBuckets(v: DataFrame, tables: Int, bits: Int): DataFrame =
+    v.select(col("vec_id"), col("qv"),
+        posexplode(graft.functions.NearDupFunctions.lshSignatures(col("qv"), tables, bits)))
+      .select(col("vec_id"), col("qv"), col("pos").as("t"), col("col").as("sig"))
+
   /** Brute-force cosine top-k: for each query vector (vec_id ∈ queryIds),
     * the k nearest others by cosine (ties → lower neighbor id). */
   def bruteForceTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     // per-vector norms are computed once per side, not once per pair
-    val q = embeddings.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("nq", dotQ(col("qv"), col("qv")))
-    val c = embeddings
-      .select(col("vec_id").as("neighbor_id"), quantize(col("embedding")).as("nv"))
-      .withColumn("nn", dotQ(col("nv"), col("nv")))
-    val scored = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", graft.text.TextAnalysis.r6(
-        dotQ(col("qv"), col("nv")).cast("double") /
-          sqrt((col("nq") * col("nn")).cast("double"))))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
+    val q = quantized(embeddings.filter(col("vec_id").isin(queryIds: _*)))
+      .select(col("vec_id").as("query_id"), col("qv"), col("nv").as("nq"))
+    val c = quantized(embeddings)
+      .select(col("vec_id").as("neighbor_id"), col("qv").as("nv"), col("nv").as("nn"))
+    topK(broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", cosR6(col("qv"), col("nv"), col("nq"), col("nn"))), k)
   }
 
   /** LSH-bucketed ANN: candidates share at least one table's bucket with the
@@ -67,12 +108,8 @@ object Ann {
     * single map-side codegen'd expression (no per-plane column explosion). */
   def lshTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
               tables: Int = 16, bits: Int = 6): DataFrame = {
-    val signed = embeddings
-      .withColumn("qv", quantize(col("embedding")))
-      .withColumn("sigs",
-        graft.functions.NearDupFunctions.lshSignatures(col("qv"), tables, bits))
-    val buckets = signed.select(col("vec_id"), col("qv"), posexplode(col("sigs")))
-      .select(col("vec_id"), col("qv"), col("pos").as("t"), col("col").as("sig"))
+    val buckets = lshBuckets(
+      embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv")), tables, bits)
     val q = buckets.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("qv").as("qvq"),
         col("t"), col("sig"))
@@ -80,15 +117,8 @@ object Ann {
       .join(buckets.withColumnRenamed("vec_id", "neighbor_id"), Seq("t", "sig"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "qvq", "neighbor_id", "qv").distinct()
-    cands
-      .withColumn("cos", graft.text.TextAnalysis.r6(
-        dotQ(col("qvq"), col("qv")).cast("double") /
-          sqrt((dotQ(col("qvq"), col("qvq")) * dotQ(col("qv"), col("qv"))).cast("double"))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
+    topK(cands.withColumn("cos", cosR6(col("qvq"), col("qv"),
+      dotQ(col("qvq"), col("qvq")), dotQ(col("qv"), col("qv")))), k)
   }
 
   /** IVF (inverted-file) ANN — the coarse-quantizer scale path: every
@@ -113,50 +143,30 @@ object Ann {
   def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
               nLists: Int = 16, nProbe: Int = 3,
               lloydIters: Int = 0): DataFrame =
-    graft.util.PersistScope.scoped { scope =>
-    val v = scope.persist(
-      embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-        .withColumn("nv", dotQ(col("qv"), col("qv"))))
-    // centroids: the deterministic fixed-K hash-rank sample
-    // ((id mod P)·2654435761 stays < 2^63 — exact in both engines), or the
-    // Lloyd-trained refinement of it when lloydIters > 0
-    val cent =
-      if (lloydIters > 0)
-        kmeansFrom(v, nLists, lloydIters)
-          .withColumn("cn", dotQ(col("cv"), col("cv")))
-      else v
-        .withColumn("__hk", (col("vec_id") % lit(2147483647L)) * lit(2654435761L) % lit(2147483647L))
-        .orderBy(col("__hk"), col("vec_id")).limit(nLists)
-        .select(col("vec_id").as("cid"), col("qv").as("cv"), col("nv").as("cn"))
-    val scored = v.crossJoin(broadcast(cent))
-      .withColumn("ccos", graft.text.TextAnalysis.r6(
-        dotQ(col("qv"), col("cv")).cast("double") /
-          sqrt((col("nv") * col("cn")).cast("double"))))
-    val assign = scored.groupBy("vec_id")
-      .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
-    val probes = scored.filter(col("vec_id").isin(queryIds: _*))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("cid"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    val cands = broadcast(probes)
-      .join(assign.withColumnRenamed("vec_id", "neighbor_id"), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    cands
-      .join(v.select(col("vec_id").as("query_id"), col("qv").as("qa"), col("nv").as("na")),
-        Seq("query_id"))
-      .join(v.select(col("vec_id").as("neighbor_id"), col("qv").as("qb"), col("nv").as("nb")),
-        Seq("neighbor_id"))
-      .withColumn("cos", graft.text.TextAnalysis.r6(
-        dotQ(col("qa"), col("qb")).cast("double") /
-          sqrt((col("na") * col("nb")).cast("double"))))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
+    PersistScope.scoped { scope =>
+      val v = scope.persist(quantized(embeddings))
+      // centroids: the deterministic fixed-K hash-rank sample, or the
+      // Lloyd-trained refinement of it when lloydIters > 0
+      val cent =
+        if (lloydIters > 0)
+          kmeansFrom(v, nLists, lloydIters, scope)
+            .withColumn("cn", dotQ(col("cv"), col("cv")))
+        else hashRankSeeds(v, nLists)
+          .select(col("vec_id").as("cid"), col("qv").as("cv"), col("nv").as("cn"))
+      val scored = centroidScores(v, cent)
+      val probes = topBy(scored.filter(col("vec_id").isin(queryIds: _*)),
+          "vec_id", "ccos", "cid", nProbe)
+        .select(col("vec_id").as("query_id"), col("cid"))
+      val cands = broadcast(probes)
+        .join(nearestCentroid(scored).withColumnRenamed("vec_id", "neighbor_id"), Seq("cid"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .select("query_id", "neighbor_id").distinct()
+      topK(cands
+        .join(v.select(col("vec_id").as("query_id"), col("qv").as("qa"), col("nv").as("na")),
+          Seq("query_id"))
+        .join(v.select(col("vec_id").as("neighbor_id"), col("qv").as("qb"), col("nv").as("nb")),
+          Seq("neighbor_id"))
+        .withColumn("cos", cosR6(col("qa"), col("qb"), col("na"), col("nb"))), k)
     }
 
   /** Deterministic k-means (Lloyd) centroid training over quantized
@@ -175,37 +185,26 @@ object Ann {
     * aggregation — K·dim rows after map-side combine. Empty clusters keep
     * their previous centroid. Output: (cid, cv array<long>). */
   def kmeansCentroids(embeddings: DataFrame, k: Int = 16, iters: Int = 2): DataFrame =
-    graft.util.PersistScope.scoped { scope =>
-      kmeansFrom(scope.persist(
-        embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-          .withColumn("nv", dotQ(col("qv"), col("qv")))), k, iters)
-    }
+    PersistScope.scoped(scope => kmeansFrom(scope.persist(quantized(embeddings)), k, iters, scope))
 
-  /** Lloyd training from a prepared `(vec_id, qv, nv)` frame (caller
-    * persists it) — shared with [[ivfTopK]] so the quantize+norm pass over
-    * the corpus is never duplicated. */
-  private[sim] def kmeansFrom(v: DataFrame, k: Int, iters: Int): DataFrame = {
+  /** Lloyd training from a prepared [[quantized]] frame (caller persists
+    * it) — shared with [[ivfTopK]] so the quantize+norm pass over the
+    * corpus is never duplicated. Each iteration's K-row centroid frame
+    * materializes through `scope`. */
+  private def kmeansFrom(v: DataFrame, k: Int, iters: Int, scope: PersistScope): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     // seed: fixed-K hash-rank sample. TakeOrdered returns the K rows in
     // rank order, so cid is a row's index in the collected list; a
     // row_number window over them would have no partition key
-    val hk = (col("vec_id") % lit(2147483647L)) * lit(2654435761L) % lit(2147483647L)
-    val seeds = v.withColumn("__hk", hk)
-      .orderBy(col("__hk"), col("vec_id")).limit(k)
-      .select(col("qv").as("cv"))
+    val seeds = hashRankSeeds(v, k).select(col("qv").as("cv"))
     val seedRows = seeds.collect().zipWithIndex.map { case (r, i) => Row(i.toLong, r.get(0)) }
     var cent = v.sparkSession.createDataFrame(
       java.util.Arrays.asList(seedRows: _*),
       StructType(StructField("cid", LongType, nullable = false) +: seeds.schema.fields))
     for (_ <- 1 to iters) {
-      val c = cent.withColumn("cn", dotQ(col("cv"), col("cv")))
-      val asg = v.crossJoin(broadcast(c))
-        .withColumn("ccos", graft.text.TextAnalysis.r6(
-          dotQ(col("qv"), col("cv")).cast("double") /
-            sqrt((col("nv") * col("cn")).cast("double"))))
-        .groupBy("vec_id")
-        .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
+      val asg = nearestCentroid(
+        centroidScores(v, cent.withColumn("cn", dotQ(col("cv"), col("cv")))))
       val sums = asg.join(v.select("vec_id", "qv"), Seq("vec_id"))
         .select(col("cid"), posexplode(col("qv")))
         .groupBy("cid", "pos").agg(sum("col").as("s"), count(lit(1)).as("n"))
@@ -215,11 +214,10 @@ object Ann {
         .agg(expr("transform(array_sort(collect_list(struct(pos, cval))), x -> x.cval)")
           .as("cv"))
       // the new centroid plan references the old one ~3x (assignment,
-      // carryover anti-join, its key projection): checkpoint the K-row
+      // carryover anti-join, its key projection): materialize the K-row
       // frame per iteration or the plan grows ~3^iters
-      cent = updated.unionByName(
-        cent.join(updated.select("cid"), Seq("cid"), "left_anti"))
-        .localCheckpoint(true)
+      cent = scope.persist(updated.unionByName(
+        cent.join(updated.select("cid"), Seq("cid"), "left_anti")))
     }
     cent
   }
@@ -232,23 +230,12 @@ object Ann {
     * out by cid, a probe's `cid IN (...)` predicate partition-prunes the
     * scan to nProbe of the K lists — the inverted-file read, verified by
     * AnnSpec on the scan's numFiles metric. */
-  def writeIvfIndex(embeddings: DataFrame, dir: String, nLists: Int = 16): Unit = {
-    val scope = new graft.util.PersistScope
-    try {
-      val v = scope.persist(
-        embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-          .withColumn("nv", dotQ(col("qv"), col("qv"))))
-      val cent = v
-        .withColumn("__hk", (col("vec_id") % lit(2147483647L)) * lit(2654435761L) % lit(2147483647L))
-        .orderBy(col("__hk"), col("vec_id")).limit(nLists)
+  def writeIvfIndex(embeddings: DataFrame, dir: String, nLists: Int = 16): Unit =
+    PersistScope.using { scope =>
+      val v = scope.persist(quantized(embeddings))
+      val cent = hashRankSeeds(v, nLists)
         .select(col("vec_id").as("cid"), col("qv").as("cv"), col("nv").as("cn"))
-      val scored = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", graft.text.TextAnalysis.r6(
-          dotQ(col("qv"), col("cv")).cast("double") /
-            sqrt((col("nv") * col("cn")).cast("double"))))
-      val assign = scored.groupBy("vec_id")
-        .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
-      v.join(assign, Seq("vec_id"))
+      v.join(nearestCentroid(centroidScores(v, cent)), Seq("vec_id"))
         .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/lists")
       cent.write.mode("overwrite").parquet(s"$dir/centroids")
       // layout metadata: probes validate against this instead of silently
@@ -259,8 +246,7 @@ object Ann {
       Seq((IvfLayoutVersion, nLists))
         .toDF("layout_version", "n_lists")
         .write.mode("overwrite").parquet(s"$dir/meta")
-    } finally scope.release()
-  }
+    }
 
   /** Version tag of the IVF layout contract: centroid rule (fixed-K
     * hash-rank sample), list partitioning, column names. Bump on any change
@@ -282,7 +268,6 @@ object Ann {
     * rule — the same rows. */
   def ivfProbeStored(spark: org.apache.spark.sql.SparkSession, dir: String,
                      queryIds: Seq[Long], k: Int, nProbe: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val cent = spark.read.parquet(s"$dir/centroids")
     // validate the stored layout before trusting it: a dir written under a
@@ -302,13 +287,9 @@ object Ann {
     val q = spark.read.parquet(s"$dir/lists")
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("qv").as("qa"), col("nv").as("na"))
-    val probeRows = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", graft.text.TextAnalysis.r6(
-        dotQ(col("qa"), col("cv")).cast("double") /
-          sqrt((col("na") * col("cn")).cast("double"))))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))))
-      .filter(col("rn") <= nProbe)
+    val probeRows = topBy(q.crossJoin(broadcast(cent))
+        .withColumn("ccos", cosR6(col("qa"), col("cv"), col("na"), col("cn"))),
+        "query_id", "ccos", "cid", nProbe)
       .select(col("query_id"), col("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val probePairs = probeRows.toSeq.toDF("query_id", "cid")
@@ -317,16 +298,8 @@ object Ann {
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("qv").as("qb"), col("nv").as("nb"))
-    cands
-      .join(q, Seq("query_id"))
-      .withColumn("cos", graft.text.TextAnalysis.r6(
-        dotQ(col("qa"), col("qb")).cast("double") /
-          sqrt((col("na") * col("nb")).cast("double"))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
+    topK(cands.join(q, Seq("query_id"))
+      .withColumn("cos", cosR6(col("qa"), col("qb"), col("na"), col("nb"))), k)
   }
 
   /** L2 norm (quantized, exact) per vector. */
@@ -375,40 +348,29 @@ object Ann {
                      tables: Int = 16, bits: Int = 4,
                      maxBucket: Int = 4096, hotBucket: Int = 512,
                      salts: Int = 16): DataFrame =
-    graft.util.PersistScope.scoped { scope =>
-    val v = scope.persist(
-      embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-        .withColumn("nv", dotQ(col("qv"), col("qv"))))
-    val buckets = scope.persist(v
-      .withColumn("sigs",
-        graft.functions.NearDupFunctions.lshSignatures(col("qv"), tables, bits))
-      .select(col("vec_id"), posexplode(col("sigs")))
-      .select(col("vec_id"), col("pos").as("t"), col("col").as("sig")))
-    val cands = graft.skew.Salting.bucketPairs(buckets, Seq("t", "sig"),
-      "vec_id", Nil, maxBucket, hotBucket, salts, scope)
-      .select("a", "b").distinct()
-    // vectors fetched per candidate (a tiny subset at scale), norms reused
-    cands
-      .join(v.select(col("vec_id").as("a"), col("qv").as("va"), col("nv").as("na")), Seq("a"))
-      .join(v.select(col("vec_id").as("b"), col("qv").as("vb"), col("nv").as("nb")), Seq("b"))
-      .withColumn("cos", graft.text.TextAnalysis.r6(
-        dotQ(col("va"), col("vb")).cast("double") /
-          sqrt((col("na") * col("nb")).cast("double"))))
-      .filter(col("cos") >= threshold)
-      .select("a", "b", "cos")
+    PersistScope.scoped { scope =>
+      val v = scope.persist(quantized(embeddings))
+      val buckets = scope.persist(lshBuckets(v, tables, bits).select("vec_id", "t", "sig"))
+      val cands = graft.skew.Salting.bucketPairs(buckets, Seq("t", "sig"),
+        "vec_id", Nil, maxBucket, hotBucket, salts, scope)
+        .select("a", "b").distinct()
+      // vectors fetched per candidate (a tiny subset at scale), norms reused
+      cands
+        .join(v.select(col("vec_id").as("a"), col("qv").as("va"), col("nv").as("na")), Seq("a"))
+        .join(v.select(col("vec_id").as("b"), col("qv").as("vb"), col("nv").as("nb")), Seq("b"))
+        .withColumn("cos", cosR6(col("va"), col("vb"), col("na"), col("nb")))
+        .filter(col("cos") >= threshold)
+        .select("a", "b", "cos")
     }
 
   /** Exact all-pairs cosine baseline (bounded inputs only — the recall
     * yardstick for [[cosineDupPairs]] in AnnSpec, never the scale path). */
   def cosineDupPairsExact(embeddings: DataFrame, threshold: Double): DataFrame = {
-    val v = embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("nv", dotQ(col("qv"), col("qv")))
+    val v = quantized(embeddings)
     val l = v.select(col("vec_id").as("a"), col("qv").as("va"), col("nv").as("na"))
     val r = v.select(col("vec_id").as("b"), col("qv").as("vb"), col("nv").as("nb"))
     l.join(r, col("a") < col("b"))
-      .withColumn("cos", graft.text.TextAnalysis.r6(
-        dotQ(col("va"), col("vb")).cast("double") /
-          sqrt((col("na") * col("nb")).cast("double"))))
+      .withColumn("cos", cosR6(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cos") >= threshold)
       .select("a", "b", "cos")
   }

@@ -76,7 +76,7 @@ object Salting {
   def bucketPairs(buckets: DataFrame, keyCols: Seq[String], idCol: String,
                   payloadCols: Seq[String], maxBucket: Int,
                   hotThreshold: Int, salts: Int,
-                  scope: PersistScope = PersistScope.unmanaged): DataFrame = {
+                  scope: PersistScope): DataFrame = {
     val keys = keyCols.map(col)
     val sizesRaw = buckets.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
 

@@ -251,16 +251,15 @@ object Checkpoints {
                                  onlyBuckets: Option[Set[Int]] = None): DataFrame = {
     val cfgLineage = s"nearsig:v1:code=$codeVersion:k=${cfg.shingleK}:perms=${cfg.numPerms}:" +
       s"simBits=${cfg.simBits}:nBuckets=$nBuckets"
-    val reps = graft.near.NearDup.representatives(files, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.util.PersistScope.using { scope =>
+      val reps = scope.persist(graft.near.NearDup.representatives(files, cfg))
       val fps = inputFingerprintsBy(reps, nBuckets, pmod(col("file_id"), nBuckets))
       runStage(spark, root, "nearsig", nBuckets,
         b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { b =>
         graft.near.NearDup.signalFrame(
           reps.filter(pmod(col("file_id"), nBuckets) === b), cfg)
       }
-    } finally reps.unpersist(blocking = false)
+    }
   }
 
   /** Checkpointed near-dup VERIFIED PAIRS: the tier's full candidate +

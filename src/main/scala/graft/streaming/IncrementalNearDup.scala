@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.near.{NearConfig, NearDup}
 
@@ -82,16 +81,8 @@ object IncrementalNearDup {
   /** (file_id, band_idx, band_key) rows for every scannable document —
     * shared by the stream above and its batch twin below (identical
     * expressions guarantee identical bucket keys). */
-  private def bandRows(corpus: DataFrame, cfg: NearConfig): DataFrame = {
-    val scanned = graft.exact.ExactDedup
-      .scanFilter(corpus, graft.exact.DedupConfig())
-      .filter(col("size") >= cfg.shingleK)
-    NearDup.bandsOf(
-      scanned.select(col("file_id"),
-        graft.functions.NearDupFunctions.minhashContent(col("content"), cfg.numPerms)
-          .as("sig")),
-      cfg)
-  }
+  private def bandRows(corpus: DataFrame, cfg: NearConfig): DataFrame =
+    NearDup.bandsOf(NearDup.signalFrame(NearDup.shingleable(corpus, cfg), cfg), cfg)
 
   /** Batch twin: the plain band-bucket pair join over the same band rows
     * (PipelineSpec asserts the stream equals this exactly when no bucket

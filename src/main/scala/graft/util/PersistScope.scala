@@ -2,7 +2,6 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.CheckpointShim
-import org.apache.spark.storage.StorageLevel
 
 /** The one way to materialize an intermediate while composing a query:
   * `persist` runs an EAGER localCheckpoint and returns its result — a
@@ -14,19 +13,25 @@ import org.apache.spark.storage.StorageLevel
   * proportional to the live query, not to every intermediate below it.
   * `release` frees the tracked blocks once the composite's result is
   * materialized.
+  *
+  * Two materializations deliberately stay outside any scope:
+  *   - ConnectedComponents' per-round `localCheckpoint(false)`: the round's
+  *     signature aggregate is the action that materializes it, and an eager
+  *     round would double the Spark executions per round. Each round frees
+  *     its predecessor; the final round's frame is handed to the caller's
+  *     scope through [[track]].
+  *   - `ExactDedup.hashedNarrow`'s session-cached `persist`: it is on the
+  *     exact tier's path and is shared across queries through the
+  *     CacheManager, so no single composite owns its lifetime.
   */
 class PersistScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  protected def track(df: DataFrame): Unit = frames.synchronized { frames += df }
+  /** Hand an already-materialized frame's blocks to this scope: they are
+    * freed with the scope's own at [[release]]. */
+  def track(df: DataFrame): DataFrame = frames.synchronized { frames += df; df }
 
-  def persist(df: DataFrame): DataFrame =
-    if (PersistScope.isLazy) df.persist(StorageLevel.MEMORY_AND_DISK)
-    else {
-      val out = CheckpointShim.checkpoint(df)
-      track(out)
-      out
-    }
+  def persist(df: DataFrame): DataFrame = track(CheckpointShim.checkpoint(df))
 
   /** Free every tracked frame's blocks (non-blocking). Call only after the
     * composite's result is materialized (checkpointed / written). */
@@ -37,30 +42,19 @@ class PersistScope {
 }
 
 object PersistScope {
-  /** Materialize without tracking — for direct stage-level calls where the
-    * caller owns the blocks' lifetime (`Blocks.free` / `Blocks.sweep`). */
-  val unmanaged: PersistScope = new PersistScope {
-    override protected def track(df: DataFrame): Unit = ()
-    override def release(): Unit = ()
+
+  /** Run `body` with a fresh scope and release it afterwards, whether
+    * `body` returns or throws. `body`'s result must not read the scope's
+    * frames once it returns. */
+  def using[A](body: PersistScope => A): A = {
+    val scope = new PersistScope
+    try body(scope)
+    finally scope.release()
   }
-
-  /** Set (e.g. by graft.Explain) to keep composite operators LAZY so their
-    * full Catalyst plan stays inspectable — the default eager checkpoints
-    * replace it with Scan ExistingRDD leaves. Lazy mode persists instead of
-    * checkpointing and skips the release (the un-materialized plan still
-    * references the caches). */
-  val LazyProp = "graft.scope.lazy"
-
-  private def isLazy: Boolean = java.lang.Boolean.getBoolean(LazyProp)
 
   /** Run `body` with a fresh scope; materialize its result with an EAGER
     * localCheckpoint, then release every intermediate. The returned leaf no
     * longer references the released blocks. */
   def scoped(body: PersistScope => DataFrame): DataFrame =
-    if (isLazy) body(unmanaged)
-    else {
-      val scope = new PersistScope
-      try unmanaged.persist(body(scope))
-      finally scope.release()
-    }
+    using(s => CheckpointShim.checkpoint(body(s)))
 }

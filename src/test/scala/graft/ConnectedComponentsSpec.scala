@@ -1,6 +1,7 @@
 package graft
 
 import graft.cluster.ConnectedComponents
+import graft.util.PersistScope
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -8,7 +9,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   private def cc(verts: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val v = verts.toDF("file_id")
     val e = edges.toDF("a", "b")
-    ConnectedComponents.run(v, e).as[(Long, Long)].collect().toMap
+    PersistScope.using(s => ConnectedComponents.run(v, e, s).as[(Long, Long)].collect().toMap)
   }
 
   test("two components + singleton") {
@@ -52,14 +53,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     val verts = (1L to n).toDF("file_id")
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
-      ConnectedComponents.run(verts, edges, maxIter = 1)
+      PersistScope.using(s => ConnectedComponents.run(verts, edges, s, maxIter = 1))
     }
     val r = ConnectedComponents.runWithStats(verts, edges, maxIter = 1)
     assert(!r.converged && r.rounds == 1)
     // opted-in partial labels never duplicate conflicting rows per vertex —
     // downstream cluster expansions would silently double-count members
-    val labels = ConnectedComponents.run(verts, edges, maxIter = 1,
-      allowPartial = true).as[(Long, Long)].collect()
+    val labels = PersistScope.using(s => ConnectedComponents.run(verts, edges, s,
+      maxIter = 1, allowPartial = true).as[(Long, Long)].collect())
     assert(labels.length == n, s"expected $n rows, got ${labels.length}")
     assert(labels.map(_._1).distinct.length == n)
   }

@@ -107,12 +107,28 @@ class NearDupSpec extends SparkSpec {
   test("fused MinHashContent equals MinHashSignature(ShingleKeys(content))") {
     val reps = NearDup.representatives(corpus, cfg)
     val composed = NearDup.signaturesOf(reps, cfg).select("file_id", "sig")
-    val fused = NearDup.fastSignatures(reps, cfg)
+    val fused = NearDup.signalFrame(reps, cfg).select("file_id", "sig")
       .withColumnRenamed("sig", "sig2")
     val diff = composed.join(fused, "file_id")
       .filter(col("sig") =!= col("sig2")).count()
     assert(diff == 0)
     assert(composed.count() == fused.count())
+  }
+
+  test("bands prunes the signal pass to the fused MinHash alone") {
+    import graft.functions.{MinHashContent, SketchBytes}
+    val reps = NearDup.representatives(corpus, cfg)
+    val fused = NearDup.bandsOf(reps
+      .filter(length(col("content")) >= cfg.shingleK)
+      .select(col("file_id"),
+        graft.functions.NearDupFunctions.minhashContent(col("content"), cfg.numPerms).as("sig")),
+      cfg)
+    val plan = NearDup.bands(corpus, cfg).queryExecution.optimizedPlan
+    assert(plan.canonicalized == fused.queryExecution.optimizedPlan.canonicalized,
+      s"bands:\n$plan\nfused form:\n${fused.queryExecution.optimizedPlan}")
+    def has(p: Any => Boolean) = plan.exists(_.expressions.exists(_.exists(p)))
+    assert(has(_.isInstanceOf[MinHashContent]))
+    assert(!has(_.isInstanceOf[SimHash]) && !has(_.isInstanceOf[SketchBytes]), plan.toString)
   }
 
   test("minhash signature estimates jaccard (identical arrays -> identical sigs)") {

@@ -61,9 +61,10 @@ class SkewSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "k", 10L), (2L, "k", 20L), (3L, "k", 30L), (4L, "x", 40L))
       .toDF("file_id", "key", "payload")
-    val pairs = Salting.bucketPairs(df, Seq("key"), "file_id", Seq("payload"),
-      maxBucket = 0, hotThreshold = 1, salts = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val pairs = graft.util.PersistScope.using(s =>
+      Salting.bucketPairs(df, Seq("key"), "file_id", Seq("payload"),
+        maxBucket = 0, hotThreshold = 1, salts = 2, scope = s)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet)
     assert(pairs == Set((1L, 2L, 10L, 20L), (1L, 3L, 10L, 30L), (2L, 3L, 20L, 30L)))
   }
 }
