@@ -204,32 +204,21 @@ object Main {
           case _ => Report.text(s).foreach(println)
         }
         0
-      case "uniques" =>
-        // anti-join of the scan against the (exclude-demoted) dup id set;
-        // streamed with --cut applied to the printed path
-        val u = ExactDedup.scanFilter(corpus, qcfg)
-          .join(ExactDedup.dupIdsWithExclude(dupsDf, exclP),
-            Seq("file_id"), "left_anti")
-          .select(col("file_id"), cutPath.as("p")).orderBy("file_id")
-        stream(u)(r => s"   UNIQUE: ${r.get(1)}"); 0
-      case "dups" =>
+      case "uniques" | "dups" | "ls" =>
+        // the library listings over the scan and the (stored, checkpointed
+        // or live) duplicates relation; `ls` lists EVERY file (reference
+        // prints both kinds, /root/reference/src/report.c:485-542);
+        // --exclude-path demotes files whose partners all fall under the
+        // prefix; streamed with --cut applied to the printed path
         val d = dupsDf
-          .join(ExactDedup.dupIdsWithExclude(dupsDf, exclP),
-            Seq("file_id"), "left_semi")
-          .select(col("file_id"), cutPath.as("p")).orderBy("file_id")
-        stream(d)(r => s"DUPLICATE: ${r.get(1)}"); 0
-      case "ls" =>
-        // EVERY file with its status (reference prints both kinds,
-        // /root/reference/src/report.c:485-542); --exclude-path demotes
-        // files whose partners all fall under the prefix
-        val all = ExactDedup.scanFilter(corpus, qcfg)
-          .join(ExactDedup.dupIdsWithExclude(dupsDf, exclP).distinct()
-            .withColumn("__dup", lit(true)), Seq("file_id"), "left")
-          .withColumn("status",
-            when(col("__dup"), "DUPLICATE").otherwise("UNIQUE"))
-          .select(col("file_id"), cutPath.as("p"), col("status"))
-          .orderBy("file_id")
-        stream(all)(r => f"${r.getString(2)}%9s: ${r.get(1)}"); 0
+        def scanned = ExactDedup.scanFilter(corpus, qcfg)
+        val (rows, status) = op match {
+          case "uniques" => (ExactDedup.uniquesIn(scanned, d, exclP), lit("UNIQUE"))
+          case "dups" => (ExactDedup.dupsIn(d, exclP), lit("DUPLICATE"))
+          case _ => (ExactDedup.lsIn(scanned, d, exclP), col("status"))
+        }
+        stream(rows.select(col("file_id"), cutPath.as("p"), status.as("status"))
+          .orderBy("file_id"))(r => f"${r.getString(2)}%9s: ${r.get(1)}"); 0
       case "file" =>
         resolveId("") match {
           case None => 1

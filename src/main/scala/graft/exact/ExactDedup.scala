@@ -1,6 +1,7 @@
 package graft.exact
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Configuration of the exact-dedup cascade, mirroring the reference's knobs:
@@ -54,6 +55,16 @@ final case class DedupConfig(
   *   - the flat per-member output (`duplicates`) avoids collect_list hot keys
   *     for million-member vendored-file sets; the set-level view
   *     (`duplicateSets`) is derived from it for report-scale data.
+  *
+  * Query entry points come in two kinds. Those taking `files` read a live
+  * scan and run the cascade (or a probe pushdown) themselves: `uniques`,
+  * `dups`, `fileStatusesAll`, `fileLookup`, `fileStatuses`. Those taking a
+  * flat duplicates relation `dups` read it as given — a stored scan db, a
+  * checkpointed scan, or [[duplicates]]: `dupsIn`, `uniquesIn`, `lsIn`,
+  * `withExcludeStatus`, `fileStatusesIn`, `refresh`. Both kinds share one
+  * `--exclude-path` rule (`excluded`, `withLiveCounts`) and one
+  * re-verify-and-status chain (`verifiedStatuses`); the CLI listings are
+  * these functions, not joins of their own.
   */
 object ExactDedup {
 
@@ -72,13 +83,16 @@ object ExactDedup {
     if (cfg.includeHidden) f else f.filter(notHidden(col("path")))
   }
 
+  /** Groups of `df` on `keys` with ≥ 2 rows, their row count as `n` — the
+    * prune every cascade stage (and `refresh`) applies to its own key. */
+  private def multiGroups(df: DataFrame, n: String, keys: String*): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(n)).filter(col(n) >= 2)
+
   /** Stage 1 (A1/A2): sizes with ≥ 2 candidates. Aggregates on the size
     * column alone — at 10^12 rows this is a long-only shuffle of distinct
     * sizes (~10^6), and files of unique size never get content read. */
   def candidateSizes(files: DataFrame, cfg: DedupConfig): DataFrame =
-    scanFilter(files, cfg)
-      .groupBy("size").agg(count(lit(1)).as("n_files"))
-      .filter(col("n_files") >= 2)
+    multiGroups(scanFilter(files, cfg), "n_files", "size")
 
   /** Stage-1 survivors: joined against the (small) candidate-size set.
     * INNER, not left-semi: the size set is an aggregate (unique on size)
@@ -116,47 +130,40 @@ object ExactDedup {
     * physical nodes (45 parquet scans). Spark's CacheManager matches by
     * canonicalized plan, so every query deriving from the same files/config
     * shares one cached copy. */
-  def hashedNarrow(files: DataFrame, cfg: DedupConfig): DataFrame = {
-    val scanned = scanFilter(files, cfg)
-    val sizes = scanned.groupBy("size").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 2).select("size")
-    // inner ≡ semi (sizes unique on size, no extra columns) and is not
-    // pushed through the corpus Union — see sizeSurvivors
-    scanned.join(sizes, Seq("size"))
+  def hashedNarrow(files: DataFrame, cfg: DedupConfig): DataFrame =
+    sizeSurvivors(files, cfg)
       .select(col("file_id"), col("repo"), col("path"), col("commit"),
         col("size"), prefixHash(cfg).as("prefix_hash"),
         digest(col("content"), cfg).as("hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** Stage 2 (A3): (size, partial-hash) groups with ≥ 2 members among
     * stage-1 survivors — the first-K-bytes prune. */
   def partialHashGroups(files: DataFrame, cfg: DedupConfig): DataFrame =
-    hashedNarrow(files, cfg)
-      .groupBy("size", "prefix_hash").agg(count(lit(1)).as("n_files"))
-      .filter(col("n_files") >= 2)
+    prefixGroups(hashedNarrow(files, cfg))
+
+  private def prefixGroups(narrow: DataFrame): DataFrame =
+    multiGroups(narrow, "n_files", "size", "prefix_hash")
 
   /** Stage 2 survivors — (identity, size, hashes); content never enters a
     * shuffle anywhere in the cascade. */
   def hashedSurvivors(files: DataFrame, cfg: DedupConfig): DataFrame = {
     val narrow = hashedNarrow(files, cfg)
-    val phGroups = narrow.groupBy("size", "prefix_hash")
-      .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-      .select("size", "prefix_hash")
-    narrow.join(phGroups, Seq("size", "prefix_hash"), "left_semi")
+    narrow.join(prefixGroups(narrow).select("size", "prefix_hash"),
+      Seq("size", "prefix_hash"), "left_semi")
   }
+
+  /** The rows of `df` in a (size, hash) set of ≥ 2, joined back with the
+    * set's `set_size`, in the flat duplicates layout. */
+  private def setMembers(df: DataFrame): DataFrame =
+    df.join(multiGroups(df, "set_size", "size", "hash"), Seq("size", "hash"))
+      .select("file_id", "repo", "path", "commit", "size", "hash", "set_size")
 
   /** Stage 3 (A4/A5): confirmed duplicates, one row per member — columns
     * (file_id, repo, path, commit, size, hash, set_size). The flat form is
     * the scale path (no giant arrays on hot hashes). */
-  def duplicates(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val survivors = hashedSurvivors(files, cfg)
-    val sets = survivors.groupBy("size", "hash")
-      .agg(count(lit(1)).as("set_size"))
-      .filter(col("set_size") >= 2)
-    survivors.join(sets, Seq("size", "hash"))
-      .select("file_id", "repo", "path", "commit", "size", "hash", "set_size")
-  }
+  def duplicates(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    setMembers(hashedSurvivors(files, cfg))
 
   /** A5 set-level publication — one row per duplicate set with sorted member
     * ids (the relational form of the reference's `\x1C`-joined `paths` TEXT,
@@ -179,27 +186,92 @@ object ExactDedup {
       .orderBy(col("total"), col("hash"))
 
   /** §2.7 set operations — `uniques`: files NOT in any duplicate set
-    * (anti-join of the snapshot against confirmed dups,
-    * /root/reference/src/report.c:485-542).
+    * (/root/reference/src/report.c:485-542); the live form of [[uniquesIn]]. */
+  def uniques(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    uniquesIn(scanFilter(files, cfg), duplicates(files, cfg), None)
+
+  /** `dups`: files that ARE members of a duplicate set; the live form of
+    * [[dupsIn]]. */
+  def dups(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    dupsIn(duplicates(files, cfg), None)
+
+  /** F6 — `--exclude-path`: a member is excluded when its repo/path falls
+    * under the prefix (/root/reference/src/report.c:248-251, options.conf:5);
+    * no prefix excludes nothing. */
+  private def excluded(excludePrefix: Option[String]): Column =
+    excludePrefix.fold(lit(false))(concat(col("repo"), lit("/"), col("path")).startsWith(_))
+
+  /** The flat duplicates relation with each member's `excluded` flag and its
+    * set's non-excluded member count `live_set_size` (0 when none). A window
+    * count reads `dups` once; an aggregate joined back reads it twice, and
+    * column pruning keeps the two reads from sharing their exchanges (on
+    * sf0.001 the CLI `uniques --exclude-path` ran 25 jobs that way, 14 so). */
+  private def withLiveCounts(dups: DataFrame, excludePrefix: String): DataFrame =
+    dups.withColumn("excluded", excluded(Some(excludePrefix)))
+      .withColumn("live_set_size", count(when(!col("excluded"), 1)).over(
+        Window.partitionBy("size", "hash")))
+
+  /** F6 status view: members under the prefix are marked `xxx` and never
+    * counted as duplicates; sets whose non-excluded membership drops below 2
+    * lose DUP status entirely. Input: the flat duplicates relation; output
+    * adds (status, live_set_size) where status ∈ {DUP, xxx, UNIQUE} —
+    * UNIQUE = survivor of a set the exclusion broke. */
+  def withExcludeStatus(duplicates: DataFrame, excludePrefix: String): DataFrame =
+    withLiveCounts(duplicates, excludePrefix)
+      .withColumn("status",
+        when(col("excluded"), "xxx")
+          .when(col("live_set_size") >= 2, "DUP")
+          .otherwise("UNIQUE"))
+      .select("file_id", "repo", "path", "size", "hash", "status", "live_set_size")
+
+  /** `dups` listing over a flat duplicates relation (live or stored): the
+    * members that still have ≥ 1 non-excluded partner — the classification
+    * the reference's uniques/dups/ls listings apply under `--exclude-path`:
+    * partners under the prefix get STATUS_EXCLUDE and do not count toward
+    * verified_dups, so a file whose only partners are excluded reads UNIQUE;
+    * the listed file itself is NOT exempted by being under the prefix (its
+    * non-excluded partners still count) —
+    * /root/reference/src/report.c:243-251,413-452. With no prefix this is
+    * every member. Columns: (file_id, repo, path, size, hash, set_size). */
+  def dupsIn(dups: DataFrame, excludePrefix: Option[String]): DataFrame = {
+    // partners = live members other than the listed one
+    val members = excludePrefix.fold(dups)(p => withLiveCounts(dups, p)
+      .filter(col("live_set_size") - when(col("excluded"), 0L).otherwise(1L) >= 1))
+    members.select("file_id", "repo", "path", "size", "hash", "set_size")
+  }
+
+  /** `scanned` left-outer-joined with the [[dupsIn]] ids as `__dup` (null
+    * for a unique file).
     *
-    * Written as LEFT OUTER + null filter, not `left_anti`: member ids are
-    * unique in the flat duplicates relation (no fanout, so the two are
-    * row-identical), but Catalyst pushes a LEFT-ANTI through the corpus
-    * Union (PushdownLeftSemiAntiJoin), replicating the join into every
-    * branch — 5 probe joins and the plan fragmentation that came with them
-    * (round-6 job accounting: 59 executions for this one query, 4× the
+    * LEFT OUTER + null test, not `left_anti`/`left_semi`: member ids are
+    * unique in the flat duplicates relation (no fanout, so the forms are
+    * row-identical), but Catalyst pushes a LEFT-ANTI or LEFT-SEMI through
+    * the corpus Union (PushdownLeftSemiAntiJoin), replicating the join into
+    * every branch — 5 probe joins and the plan fragmentation that came with
+    * them (round-6 job accounting: 59 executions for `uniques`, 4× the
     * duplicates pipeline it wraps). Left-outer joins are not distributed
     * over unions; this plan probes once. */
-  def uniques(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    scanFilter(files, cfg)
-      .join(duplicates(files, cfg).select(col("file_id"), lit(true).as("__dup")),
-        Seq("file_id"), "left")
-      .filter(col("__dup").isNull)
-      .select("file_id", "repo", "path", "size")
+  private def flagDups(scanned: DataFrame, dups: DataFrame,
+                       excludePrefix: Option[String]): DataFrame =
+    scanned.join(dupsIn(dups, excludePrefix).select(col("file_id"), lit(true).as("__dup")),
+      Seq("file_id"), "left")
 
-  /** `dups`: files that ARE members of a duplicate set (semi-join). */
-  def dups(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    duplicates(files, cfg).select("file_id", "repo", "path", "size", "hash", "set_size")
+  /** `ls` listing: every `scanned` file (see [[scanFilter]]) with its
+    * DUPLICATE/UNIQUE status against a flat duplicates relation (live or
+    * stored), classified as [[dupsIn]]. Columns: (file_id, repo, path, size,
+    * status). */
+  def lsIn(scanned: DataFrame, dups: DataFrame,
+           excludePrefix: Option[String]): DataFrame =
+    flagDups(scanned, dups, excludePrefix)
+      .withColumn("status", when(col("__dup").isNull, "UNIQUE").otherwise("DUPLICATE"))
+      .select("file_id", "repo", "path", "size", "status")
+
+  /** `uniques` listing: the `scanned` files not in [[dupsIn]] (anti-join of
+    * the scan against confirmed dups). Columns: (file_id, repo, path, size). */
+  def uniquesIn(scanned: DataFrame, dups: DataFrame,
+                excludePrefix: Option[String]): DataFrame =
+    flagDups(scanned, dups, excludePrefix).filter(col("__dup").isNull)
+      .select("file_id", "repo", "path", "size")
 
   /** J1/J2 — `dupd file <path>` lookup with re-verification semantics:
     * claimed members are re-evaluated against the CURRENT snapshot (content
@@ -213,13 +285,10 @@ object ExactDedup {
     * same-size rows are hashed — `size = <k>` is a partition-prunable
     * predicate at Iceberg scale, so the full cascade never runs. */
   def fileLookup(files: DataFrame, probeFileId: Long,
-                 cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val scanned = scanFilter(files, cfg)
-    val members = probeSetMembers(scanned, probeFileId, cfg)
-    members
+                 cfg: DedupConfig = DedupConfig()): DataFrame =
+    probeSetMembers(scanFilter(files, cfg), probeFileId, cfg)
       .select(col("file_id"), col("repo"), col("path"),
         when(col("file_id") === probeFileId, "SELF").otherwise("DUP").as("status"))
-  }
 
   /** Members of the probe's duplicate set evaluated via probe pushdown as
     * ONE plan: the probe's (size, digest, path) is a 1-row broadcast built
@@ -241,72 +310,83 @@ object ExactDedup {
       .select(col("file_id"), col("repo"), col("path"), col("size"),
         col("hash"), col("__probe_path"))
       // dup-set semantics: a singleton set is not a duplicate set
-      .withColumn("__n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("size", "hash")))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy("size", "hash")))
       .filter(col("__n") >= 2).drop("__n")
   }
 
+  /** Conditional-hash staging, shared by [[fileStatusesAll]],
+    * [[hardlinkUnique]] and `NearDup`'s rep selection: a size-count
+    * broadcast guards `hash` behind `when(n >= 2)` and writes it as `name`,
+    * with '' as the unique-size sentinel — a unique-size file gets its key
+    * without its content ever being read, and (size, '') is a singleton
+    * group (one row per unique size). At corpus scale this skips the content
+    * pass for the unique-size fraction, exactly like the cascade's stage 1
+    * ("files of unique size are never opened"). */
+  private[graft] def sizeGuardedHash(scanned: DataFrame, name: String,
+                                     hash: Column): DataFrame =
+    scanned.join(scanned.groupBy("size").agg(count(lit(1)).as("__n")), Seq("size"))
+      .withColumn(name, when(col("__n") >= 2, hash).otherwise(lit("")))
+
   /** `ls` — every scanned file with its DUPLICATE/UNIQUE status: the
     * reference's operation_ls sets BOTH print_uniques and print_duplicates
-    * (/root/reference/src/report.c:485-542 — every file listed). */
-  def fileStatusesAll(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // conditional-hash staging (same trick as NearDup.representatives):
-    // a size-count broadcast guards the digest behind when(n >= 2), with ''
-    // as the unique-size sentinel — a unique-size file is UNIQUE without
-    // its content ever being read (one row per unique size, so (size, '')
-    // is a singleton window group and classifies UNIQUE). At corpus scale
-    // this skips the content pass for the unique-size fraction, exactly
-    // like the cascade's stage 1 ("files of unique size are never opened").
-    val scanned = scanFilter(files, cfg)
-    val sizeN = scanned.groupBy("size").agg(count(lit(1)).as("__n"))
-    scanned.join(sizeN, Seq("size"))
-      .withColumn("hash",
-        when(col("__n") >= 2, digest(col("content"), cfg)).otherwise(lit("")))
+    * (/root/reference/src/report.c:485-542 — every file listed). Classified
+    * in one window pass over the conditional hash, without the cascade. */
+  def fileStatusesAll(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    sizeGuardedHash(scanFilter(files, cfg), "hash", digest(col("content"), cfg))
       .withColumn("__m", count(lit(1)).over(Window.partitionBy("size", "hash")))
       .withColumn("status", when(col("__m") >= 2, "DUPLICATE").otherwise("UNIQUE"))
       .select("file_id", "repo", "path", "size", "status")
-  }
 
-  /** J1 against a STORED duplicates relation (the dupd scan/query split:
-    * query ops read the db, they do not rescan —
-    * /root/reference/src/dbops.c:508-642). `dups` is the flat output of
-    * [[duplicates]] (or the checkpointed scan). */
-  def fileLookupIn(dups: DataFrame, probeFileId: Long): DataFrame = {
-    val probe = dups.filter(col("file_id") === probeFileId).select("size", "hash")
-    dups.join(broadcast(probe), Seq("size", "hash"))
-      .select(col("file_id"), col("repo"), col("path"),
-        when(col("file_id") === probeFileId, "SELF").otherwise("DUP").as("status"))
-  }
-
-  /** J2 against a STORED duplicates relation with re-verification vs the
-    * CURRENT snapshot: DUP only if the member still exists with identical
-    * content now (the reference's safety guarantee,
-    * /root/reference/src/report.c:218-281). Only claimed members are
-    * re-hashed (semi-join first), never the whole snapshot. */
-  def fileStatusesIn(dups: DataFrame, snapshot: DataFrame, probeFileId: Long,
-                     excludePrefix: Option[String] = None,
-                     cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val probe = dups.filter(col("file_id") === probeFileId)
-      .select(col("size"), col("hash"), col("path").as("__probe_path"))
-    val members = dups.join(broadcast(probe), Seq("size", "hash"))
+  /** J2 verbose — `dupd file -v` member statuses evaluated against the
+    * CURRENT snapshot (/root/reference/src/report.c:218-281): DUP = member
+    * still present and byte-identical now; `HL` = verified member sharing
+    * the probe's link identity — st_ino == path_inode in the reference
+    * (/root/reference/src/report.c:260-264, tests/test.44-48), same `path`
+    * in the table model (identity = (path, content), as [[hardlinkUnique]]);
+    * `---` = gone from the snapshot; `xxx` = under the exclude prefix. The
+    * probed file's row is SELF. `members` carry the probe's path as
+    * `__probe_path`, so the HL test needs no driver-side probe resolution.
+    *
+    * Re-verify NOW: a member counts as DUP only if the snapshot still has
+    * its file_id with identical content; only claimed members are
+    * re-hashed (join first), never the whole snapshot. */
+  private def verifiedStatuses(members: DataFrame, snapshot: DataFrame,
+                               probeFileId: Long, excludePrefix: Option[String],
+                               cfg: DedupConfig): DataFrame = {
     val current = snapshot
       .join(members.select("file_id"), Seq("file_id")) // inner ≡ semi: member ids unique
       .select(col("file_id"), digest(col("content"), cfg).as("now_hash"))
     members.join(current, Seq("file_id"), "left")
       .withColumn("status",
         when(col("file_id") === probeFileId, "SELF")
-          .when(excludePrefix.map(p =>
-            concat(col("repo"), lit("/"), col("path")).startsWith(p))
-            .getOrElse(lit(false)), "xxx")
+          .when(excluded(excludePrefix), "xxx")
           .when(col("now_hash").isNull, "---")
-          // HL = verified member sharing the probe's link identity (same
-          // path; reference st_ino == path_inode, src/report.c:260-264)
           .when(col("now_hash") === col("hash") &&
             col("path") === col("__probe_path"), "HL")
           .when(col("now_hash") === col("hash"), "DUP")
           .otherwise("---"))
       .select("file_id", "repo", "path", "status")
+  }
+
+  /** [[verifiedStatuses]] of the probe's set in a live scan: members found by
+    * probe pushdown over `scanned` (see [[probeSetMembers]]). */
+  def fileStatuses(scanned: DataFrame, snapshot: DataFrame, probeFileId: Long,
+                   excludePrefix: Option[String] = None,
+                   cfg: DedupConfig = DedupConfig()): DataFrame =
+    verifiedStatuses(probeSetMembers(scanFilter(scanned, cfg), probeFileId, cfg),
+      snapshot, probeFileId, excludePrefix, cfg)
+
+  /** [[verifiedStatuses]] of the probe's set in a STORED duplicates relation
+    * (the dupd scan/query split: query ops read the db, they do not rescan —
+    * /root/reference/src/dbops.c:508-642); `dups` is the flat output of
+    * [[duplicates]] (or the checkpointed scan). */
+  def fileStatusesIn(dups: DataFrame, snapshot: DataFrame, probeFileId: Long,
+                     excludePrefix: Option[String] = None,
+                     cfg: DedupConfig = DedupConfig()): DataFrame = {
+    val probe = dups.filter(col("file_id") === probeFileId)
+      .select(col("size"), col("hash"), col("path").as("__probe_path"))
+    verifiedStatuses(dups.join(broadcast(probe), Seq("size", "hash")),
+      snapshot, probeFileId, excludePrefix, cfg)
   }
 
   /** S8 — rm-shell projection: keep the first (lowest-id) member of each
@@ -317,87 +397,6 @@ object ExactDedup {
     d.join(keep, Seq("size", "hash"))
       .filter(col("file_id") =!= col("keep_id"))
       .select(col("keep_id"), col("file_id").as("remove_id"), col("repo"), col("path"))
-  }
-
-  /** F6 — `--exclude-path`: members whose repo/path falls under the prefix
-    * are marked `xxx` and never counted as duplicates; sets whose
-    * non-excluded membership drops below 2 lose DUP status entirely
-    * (/root/reference/src/report.c:248-251, options.conf:5). Input: the flat
-    * duplicates relation; output adds (status, live_set_size) where status ∈
-    * {DUP, xxx, UNIQUE} — UNIQUE = survivor of a set the exclusion broke. */
-  def withExcludeStatus(duplicates: DataFrame, excludePrefix: String): DataFrame = {
-    val flagged = duplicates.withColumn("excluded",
-      concat(col("repo"), lit("/"), col("path")).startsWith(excludePrefix))
-    val live = flagged.filter(!col("excluded"))
-      .groupBy("size", "hash").agg(count(lit(1)).as("live_set_size"))
-    flagged.join(live, Seq("size", "hash"), "left")
-      .withColumn("live_set_size", coalesce(col("live_set_size"), lit(0L)))
-      .withColumn("status",
-        when(col("excluded"), "xxx")
-          .when(col("live_set_size") >= 2, "DUP")
-          .otherwise("UNIQUE"))
-      .select("file_id", "repo", "path", "size", "hash", "status", "live_set_size")
-  }
-
-  /** File ids of duplicate-set members that still have ≥ 1 non-excluded
-    * partner — the classification the reference's uniques/dups/ls listings
-    * apply under `--exclude-path`: partners under the prefix get
-    * STATUS_EXCLUDE and do not count toward verified_dups, so a file whose
-    * only partners are excluded reads UNIQUE; the listed file itself is NOT
-    * exempted by being under the prefix (its non-excluded partners still
-    * count) — /root/reference/src/report.c:243-251,413-452. With no prefix
-    * this is just the member id set. `dups` is the flat [[duplicates]]
-    * relation (live or stored). */
-  def dupIdsWithExclude(dups: DataFrame,
-                        excludePrefix: Option[String]): DataFrame =
-    excludePrefix match {
-      case None => dups.select("file_id")
-      case Some(p) =>
-        val flagged = dups.withColumn("excluded",
-          concat(col("repo"), lit("/"), col("path")).startsWith(p))
-        val live = flagged.filter(!col("excluded"))
-          .groupBy("size", "hash").agg(count(lit(1)).as("live"))
-        flagged.join(live, Seq("size", "hash"), "left")
-          .withColumn("live", coalesce(col("live"), lit(0L)))
-          .withColumn("others",
-            col("live") - when(!col("excluded"), lit(1L)).otherwise(lit(0L)))
-          .filter(col("others") >= 1)
-          .select("file_id")
-    }
-
-  /** J2 verbose — `dupd file -v` member statuses evaluated against the
-    * CURRENT snapshot (/root/reference/src/report.c:218-281): DUP = member
-    * still present and byte-identical now; `HL` = verified member sharing
-    * the probe's link identity — st_ino == path_inode in the reference
-    * (/root/reference/src/report.c:260-264, tests/test.44-48), same `path`
-    * in the table model (identity = (path, content), as [[hardlinkUnique]]);
-    * `---` = gone from the snapshot; `xxx` = under the exclude prefix. The
-    * probed file's row is SELF. */
-  def fileStatuses(scanned: DataFrame, snapshot: DataFrame, probeFileId: Long,
-                   excludePrefix: Option[String] = None,
-                   cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val scanned0 = scanFilter(scanned, cfg)
-    // members carry the probe's path as a column (__probe_path), so the HL
-    // link-identity test needs no driver-side probe resolution
-    val members = probeSetMembers(scanned0, probeFileId, cfg)
-    // re-verify NOW: a member counts as DUP only if the snapshot still has
-    // this file_id with identical content (hash recomputed from snapshot;
-    // only claimed members are re-hashed — semi-join first)
-    val current = snapshot
-      .join(members.select("file_id"), Seq("file_id")) // inner ≡ semi: member ids unique
-      .select(col("file_id"), digest(col("content"), cfg).as("now_hash"))
-    members.join(current, Seq("file_id"), "left")
-      .withColumn("status",
-        when(col("file_id") === probeFileId, "SELF")
-          .when(excludePrefix.map(p =>
-            concat(col("repo"), lit("/"), col("path")).startsWith(p))
-            .getOrElse(lit(false)), "xxx")
-          .when(col("now_hash").isNull, "---")
-          .when(col("now_hash") === col("hash") &&
-            col("path") === col("__probe_path"), "HL")
-          .when(col("now_hash") === col("hash"), "DUP")
-          .otherwise("---"))
-      .select("file_id", "repo", "path", "status")
   }
 
   /** A6 — the reference's direct two-file block compare
@@ -414,14 +413,9 @@ object ExactDedup {
     * in the current snapshot, keep only sets with ≥ 2 survivors
     * (/root/reference/src/refresh.c:37-143). `snapshot` is the current file
     * table (possibly with rows deleted since the scan). */
-  def refresh(scanned: DataFrame, snapshot: DataFrame): DataFrame = {
-    val surviving = scanned.join( // inner ≡ semi: right side is distinct
-      snapshot.select("file_id").distinct(), Seq("file_id"))
-    val counts = surviving.groupBy("size", "hash")
-      .agg(count(lit(1)).as("set_size")).filter(col("set_size") >= 2)
-    surviving.drop("set_size").join(counts, Seq("size", "hash"))
-      .select("file_id", "repo", "path", "commit", "size", "hash", "set_size")
-  }
+  def refresh(scanned: DataFrame, snapshot: DataFrame): DataFrame =
+    setMembers(scanned.drop("set_size").join( // inner ≡ semi: right side is distinct
+      snapshot.select("file_id").distinct(), Seq("file_id")))
 
   /** `validate` analogue — every member of every emitted set must be
     * byte-identical (/root/reference/tests/validate.pl:29-53): returns sets
@@ -450,26 +444,19 @@ object ExactDedup {
   /** F8/J3 — the `--hardlink-is-unique` policy: rows sharing an identity
     * (same logical file reachable via several links) collapse to one physical
     * instance before dedup (/root/reference/src/readlist.c:269-297). In the
-    * table model identity = (path, content-hash); keep the lowest file_id. */
-  def hardlinkUnique(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // conditional-hash staging: a unique-size row cannot share content with
-    // any other row, so it is its own link identity with NO content read —
-    // the '' sentinel plus `size` in the identity key keeps two different
-    // unique-size rows at the same path distinct ((path, szA, '') vs
-    // (path, szB, '')); for multi-member size buckets same content implies
-    // same size, so (path, size, hash) ≡ the (path, hash) identity.
-    val scanned = scanFilter(files, cfg)
-    val sizeN = scanned.groupBy("size").agg(count(lit(1)).as("__n"))
-    scanned.join(sizeN, Seq("size"))
-      .withColumn("h",
-        when(col("__n") >= 2, sha2(col("content"), 256)).otherwise(lit("")))
+    * table model identity = (path, content-hash); keep the lowest file_id.
+    * A unique-size row cannot share content with any other row, so it is
+    * its own identity with no content read: the '' sentinel plus `size` in
+    * the identity key keeps two unique-size rows at one path distinct, and
+    * in multi-member size buckets same content implies same size, so
+    * (path, size, hash) ≡ the (path, hash) identity. */
+  def hardlinkUnique(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    sizeGuardedHash(scanFilter(files, cfg), "h", sha2(col("content"), 256))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("path"), col("size"), col("h"))
           .orderBy(col("file_id"))))
       .filter(col("rn") === 1)
       .select("file_id", "repo", "path", "size")
-  }
 
   /** A9/S9 — scan counters as a metrics row (the reference's ~60 counters,
     * /root/reference/src/stats.h:33-125, reduced to the semantic ones). */

@@ -97,7 +97,7 @@ object NearDup {
     * representative rows of `scanned`; the first and last pass through
     * `hold`, so member expansion can materialize them.
     *
-    * Conditional hash, NOT row routing: a size-count broadcast join guards
+    * Conditional hash, NOT row routing: `ExactDedup.sizeGuardedHash` guards
     * sha256 behind `when(n >= 2)`, with the empty string as the unique-size
     * sentinel group key (one row per unique size, so (size, '') is its own
     * group). Both join right sides are aggregates, so they broadcast; an
@@ -107,11 +107,8 @@ object NearDup {
     * 3-15× (bench A/B, round 4). */
   private def repSelection(scanned: DataFrame, hold: DataFrame => DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val sizeN = scanned.groupBy("size").agg(count(lit(1)).as("__n"))
-    val narrow = hold(scanned.join(sizeN, Seq("size"))
-      .select(col("file_id"), col("size"),
-        when(col("__n") >= 2, sha2(col("content"), 256))
-          .otherwise(lit("")).as("hash")))
+    val narrow = hold(ExactDedup.sizeGuardedHash(scanned, "hash", sha2(col("content"), 256))
+      .select("file_id", "size", "hash"))
     val repOf = narrow.groupBy("size", "hash").agg(min("file_id").as("rep_id"))
     // INNER join, not left-semi: rep ids are unique (each row belongs to
     // exactly one (size, hash) group, so the per-group min ids are

@@ -189,7 +189,7 @@ object Checkpoints {
 
   /** Bucket predicate: all grouping keys downstream contain `size`, so the
     * bucket is self-contained (and partition-prunable at Iceberg scale). */
-  private def bucketOf(n: Int): Column = pmod(col("size"), n)
+  private def bucketOf(n: Int): Column = pmod(col("size"), lit(n))
 
   /** Fingerprints of EVERY bucket's input slice in ONE narrow pass (no
     * content): row count + an order-independent XOR of per-row hashes over
@@ -253,11 +253,11 @@ object Checkpoints {
       s"simBits=${cfg.simBits}:nBuckets=$nBuckets"
     graft.util.PersistScope.using { scope =>
       val reps = scope.persist(graft.near.NearDup.representatives(files, cfg))
-      val fps = inputFingerprintsBy(reps, nBuckets, pmod(col("file_id"), nBuckets))
+      val fps = inputFingerprintsBy(reps, nBuckets, pmod(col("file_id"), lit(nBuckets)))
       runStage(spark, root, "nearsig", nBuckets,
         b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { b =>
         graft.near.NearDup.signalFrame(
-          reps.filter(pmod(col("file_id"), nBuckets) === b), cfg)
+          reps.filter(pmod(col("file_id"), lit(nBuckets)) === b), cfg)
       }
     }
   }
@@ -283,7 +283,4 @@ object Checkpoints {
       graft.near.NearDup.verifiedPairs(files, cfg)
     }
   }
-
-  /** Non-negative modulus (sizes/file_ids are non-negative; kept explicit). */
-  private def pmod(c: Column, n: Int) = c % n
 }

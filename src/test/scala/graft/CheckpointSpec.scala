@@ -152,6 +152,25 @@ class CheckpointSpec extends SparkSpec {
     assert(drifted.selectExpr("size(sig)").head().getInt(0) == 64)
   }
 
+  test("near signal buckets keep negative file ids (non-negative modulus)") {
+    import graft.near.{NearConfig, NearDup}
+    import graft.util.PersistScope
+    val ncfg = NearConfig()
+    // three distinct base files renumbered to -12, -7 and 3: with a plain
+    // `%`, -7 lands in bucket -3, which the 4-bucket stage never computes
+    val files = corpus.filter(col("file_id").isin(0L, 1L, 2L))
+      .withColumn("file_id", when(col("file_id") === 0L, -12L)
+        .when(col("file_id") === 1L, -7L).otherwise(3L))
+    val direct = PersistScope.using { s =>
+      NearDup.signalFrame(s.persist(NearDup.representatives(files, ncfg)), ncfg)
+        .select("file_id").collect().map(_.getLong(0)).toSet
+    }
+    assert(direct == Set(-12L, -7L, 3L))
+    val ids = Checkpoints.checkpointedNearSignatures(spark, files, freshRoot(), 4, ncfg)
+      .select("file_id").collect().map(_.getLong(0)).toSet
+    assert(ids == direct)
+  }
+
   test("checkpointed verified pairs: computed once, read thereafter, drift recomputes") {
     import graft.near.{NearConfig, NearDup}
     val root = freshRoot()

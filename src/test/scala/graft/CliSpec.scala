@@ -54,6 +54,48 @@ class CliSpec extends SparkSpec {
     assert(byPath("mirror2/doc_9.txt") == "DUPLICATE")
   }
 
+  test("uniques/dups/ls --db print the live lines, with and without --exclude-path") {
+    val db = java.nio.file.Files.createTempDirectory("graft_cli_db").toString
+    assert(run(Seq("scan", "--out", db) ++ data: _*)._1 == 0)
+    for (op <- Seq("uniques", "dups", "ls"); excl <- Seq(Nil, Seq("--exclude-path", "mirror/"))) {
+      val (cl, live) = run(Seq(op) ++ excl ++ data: _*)
+      val (cs, stored) = run(Seq(op, "--db", db) ++ excl ++ data: _*)
+      assert(cl == 0 && cs == 0 && live.nonEmpty)
+      assert(stored == live, s"$op ${excl.mkString(" ")}: --db listing differs from live")
+    }
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get()
+  }
+
+  test("CLI uniques runs about as many jobs as the library uniques") {
+    // the CLI listing is ExactDedup.uniquesIn, so it plans like
+    // ExactDedup.uniques; a left_anti join there is pushed into each
+    // branch of the corpus Union and runs 4-8x the jobs
+    import graft.exact.{DedupConfig, ExactDedup}
+    spark.catalog.clearCache()
+    val lib = jobsOf(ExactDedup.uniques(Tables.corpus(spark, sf), DedupConfig())
+      .orderBy("file_id").toLocalIterator().forEachRemaining(_ => ()))
+    for (excl <- Seq(Nil, Seq("--exclude-path", "mirror/"))) {
+      spark.catalog.clearCache()
+      val cli = jobsOf(assert(run(Seq("uniques") ++ excl ++ data: _*)._1 == 0))
+      info(s"uniques ${excl.mkString(" ")}: CLI $cli jobs, library $lib jobs")
+      assert(cli <= lib + 4, s"CLI uniques ${excl.mkString(" ")} ran $cli jobs, library $lib")
+    }
+  }
+
   test("hash --path equals hash --id, and matches sha256 of the content") {
     val (ci, byId) = run(Seq("hash", "--id", "0") ++ data: _*)
     val (cp, byPath) = run(Seq("hash", "--path", "src0/doc_0.txt") ++ data: _*)

@@ -174,13 +174,11 @@ class PlanShapeSpec extends SparkSpec {
       "being pushed through the corpus Union again")
   }
 
-  test("exact cascade builds its size set ONCE (same union-pushdown guard)") {
-    spark.catalog.clearCache()
-    val df = ExactDedup.duplicates(Tables.corpus(spark, sf), DedupConfig())
-    df.collect()
-    // count each CACHED subtree once: the plan references the persisted
-    // narrow relation several times, but its build executes once — kids()
-    // pierces every reference, which would multiply-count the same scans
+  /** Parquet scans `df`'s executed plan runs (after a forced run), counting
+    * each CACHED subtree once: the plan references the persisted narrow
+    * relation several times, but its build executes once — kids() pierces
+    * every reference, which would multiply-count the same scans. */
+  private def executedScans(df: DataFrame): Int = {
     val seen = new java.util.IdentityHashMap[SparkPlan, Boolean]()
     def count(p: SparkPlan): Int = {
       val here = p match {
@@ -196,7 +194,12 @@ class PlanShapeSpec extends SparkSpec {
         case _ => here
       }
     }
-    val n = count(df.queryExecution.executedPlan)
+    count(executedPlan(df))
+  }
+
+  test("exact cascade builds its size set ONCE (same union-pushdown guard)") {
+    spark.catalog.clearCache()
+    val n = executedScans(ExactDedup.duplicates(Tables.corpus(spark, sf), DedupConfig()))
     assert(n <= 15, s"exact cascade executes $n parquet scans (10 at round " +
       "5); the stage-1 size filter is being pushed through the corpus Union")
   }
@@ -208,24 +211,7 @@ class PlanShapeSpec extends SparkSpec {
     // became LEFT OUTER + IS NULL, which is not distributed. This pins the
     // executed scan count the same way the cascade test above does.
     spark.catalog.clearCache()
-    val df = ExactDedup.uniques(Tables.corpus(spark, sf), DedupConfig())
-    df.collect()
-    val seen = new java.util.IdentityHashMap[SparkPlan, Boolean]()
-    def count(p: SparkPlan): Int = {
-      val here = p match {
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          if (seen.containsKey(im.relation.cachedPlan)) 0
-          else { seen.put(im.relation.cachedPlan, true); count(im.relation.cachedPlan) }
-        case _: FileSourceScanExec => 1
-        case o => (o.children ++ o.subqueries).map(count).sum
-      }
-      p match {
-        case a: AdaptiveSparkPlanExec => count(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => count(q.plan)
-        case _ => here
-      }
-    }
-    val n = count(df.queryExecution.executedPlan)
+    val n = executedScans(ExactDedup.uniques(Tables.corpus(spark, sf), DedupConfig()))
     assert(n <= 20, s"uniques executes $n parquet scans; expected <= 20 " +
       "(the cascade's ~10 + one probe pass) — the dup-id anti/semi join is " +
       "being pushed through the corpus Union again")

@@ -40,14 +40,6 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(ExactDedup.fileLookup(corpus, -42L, cfg).count() == 0)
   }
 
-  test("stored-db lookup (fileLookupIn) matches the live lookup") {
-    val live = ExactDedup.fileLookup(corpus, 0L, cfg)
-      .collect().map(r => (r.getLong(0), r.getString(3))).toSet
-    val stored = ExactDedup.fileLookupIn(dups, 0L)
-      .collect().map(r => (r.getLong(0), r.getString(3))).toSet
-    assert(stored == live)
-  }
-
   test("db meta: version + dbtime round-trip, staleness warns, mismatch errors") {
     import graft.state.DbMeta
     val dir = java.nio.file.Files.createTempDirectory("graft_db").toString
