@@ -188,7 +188,7 @@ object Main {
         graft.state.DbMeta.write(spark, out, cfg)
         // S9 — append counters to --stats-file (src/stats.c:183-201)
         opts.get("stats-file").foreach { f =>
-          val s = ExactDedup.stats(corpus, cfg).head()
+          val s = ExactDedup.statsIn(ExactDedup.scanFilter(corpus, cfg), d).head()
           val line = s.schema.fieldNames.zipWithIndex
             .map { case (n, i) => s""""$n":${s.get(i)}""" }
             .mkString("{", ",", s""","dbtime":${System.currentTimeMillis()}}""")
@@ -205,19 +205,18 @@ object Main {
         }
         0
       case "uniques" | "dups" | "ls" =>
-        // the library listings over the scan and the (stored, checkpointed
-        // or live) duplicates relation; `ls` lists EVERY file (reference
-        // prints both kinds, /root/reference/src/report.c:485-542);
-        // --exclude-path demotes files whose partners all fall under the
-        // prefix; streamed with --cut applied to the printed path
-        val d = dupsDf
-        def scanned = ExactDedup.scanFilter(corpus, qcfg)
-        val (rows, status) = op match {
-          case "uniques" => (ExactDedup.uniquesIn(scanned, d, exclP), lit("UNIQUE"))
-          case "dups" => (ExactDedup.dupsIn(d, exclP), lit("DUPLICATE"))
-          case _ => (ExactDedup.lsIn(scanned, d, exclP), col("status"))
-        }
-        stream(rows.select(col("file_id"), cutPath.as("p"), status.as("status"))
+        // every file's status: one window pass over a live scan, or the scan
+        // against the stored / checkpointed duplicates relation. `ls` lists
+        // EVERY file (reference prints both kinds, src/report.c:485-542),
+        // uniques/dups one status; --exclude-path demotes files whose
+        // partners all fall under the prefix; --cut applies to printed paths
+        val statuses =
+          if (opts.contains("db") || opts.contains("checkpoint"))
+            ExactDedup.lsIn(ExactDedup.scanFilter(corpus, qcfg), dupsDf, exclP)
+          else ExactDedup.fileStatusesAll(corpus, cfg, exclP)
+        val rows = if (op == "ls") statuses
+          else statuses.filter(col("status") === (if (op == "uniques") "UNIQUE" else "DUPLICATE"))
+        stream(rows.select(col("file_id"), cutPath.as("p"), col("status"))
           .orderBy("file_id"))(r => f"${r.getString(2)}%9s: ${r.get(1)}"); 0
       case "file" =>
         resolveId("") match {

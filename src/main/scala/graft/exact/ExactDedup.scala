@@ -3,6 +3,7 @@ package graft.exact
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.PersistScope
 
 /** Configuration of the exact-dedup cascade, mirroring the reference's knobs:
   *   - `minSize`   — minimum content size scanned; default 1 so empty files
@@ -13,17 +14,17 @@ import org.apache.spark.sql.functions._
   *                   (/root/reference/src/main.c:67-68,408-412); sized for
   *                   document-scale content here, configurable for file-scale
   *   - `includeHidden` — the `--hidden` flag (/root/reference/src/scan.c:246-249)
+  *   - `hashAlg` — digest selection, the reference's `--hash`
+  *     (/root/reference/src/options.conf:90, src/main.c:357-370; digest
+  *     widths src/hash.c:258-278): "sha256" (default invariant per
+  *     input_hint), "md5", "sha1", "sha512", or "xxh64" (Spark's xxhash64 —
+  *     NOT byte-compatible with the reference's seed-1 xxHash, same role)
+  *   - `repos` — scan roots: the reference's multiple `--path` roots
+  *     (/root/reference/src/scan.c:440-452, max 10) and the one-file-system
+  *     filter F5 (/root/reference/src/scan.c:327-333: never cross a device
+  *     boundary); in the table model a repo IS the device/root, so
+  *     restricting the scan to named repos is both operators. Empty = all.
   */
-/** @param hashAlg digest selection, the reference's `--hash`
-  *   (/root/reference/src/options.conf:90, src/main.c:357-370; digest widths
-  *   src/hash.c:258-278): "sha256" (default invariant per input_hint),
-  *   "md5", "sha1", "sha512", or "xxh64" (Spark's xxhash64 — NOT
-  *   byte-compatible with the reference's seed-1 xxHash, same role only). */
-/** @param repos scan roots — the reference's multiple `--path` roots
-  *   (/root/reference/src/scan.c:440-452, max 10) and the one-file-system
-  *   filter F5 (/root/reference/src/scan.c:327-333: never cross a device
-  *   boundary): in the table model a repo IS the device/root, so
-  *   restricting the scan to named repos is both operators. Empty = all. */
 final case class DedupConfig(
     minSize: Long = 1L,
     prefixLen: Int = 64,
@@ -57,14 +58,16 @@ final case class DedupConfig(
   *     (`duplicateSets`) is derived from it for report-scale data.
   *
   * Query entry points come in two kinds. Those taking `files` read a live
-  * scan and run the cascade (or a probe pushdown) themselves: `uniques`,
-  * `dups`, `fileStatusesAll`, `fileLookup`, `fileStatuses`. Those taking a
-  * flat duplicates relation `dups` read it as given — a stored scan db, a
-  * checkpointed scan, or [[duplicates]]: `dupsIn`, `uniquesIn`, `lsIn`,
-  * `withExcludeStatus`, `fileStatusesIn`, `refresh`. Both kinds share one
-  * `--exclude-path` rule (`excluded`, `withLiveCounts`) and one
-  * re-verify-and-status chain (`verifiedStatuses`); the CLI listings are
-  * these functions, not joins of their own.
+  * scan themselves: `uniques`, `dups`, `fileStatusesAll`, `fileLookup`,
+  * `fileStatuses`. Those taking a flat duplicates relation `dups` read it
+  * as given — a stored scan db, a checkpointed scan, or [[duplicates]]:
+  * `dupsIn`, `lsIn`, `withExcludeStatus`, `fileStatusesIn`, `refresh`. Both
+  * kinds share one `--exclude-path` rule (`withLiveCounts`,
+  * `hasLivePartner`) and one re-verify-and-status chain (`verifiedStatuses`).
+  * The listings have one live form, [[fileStatusesAll]] (one window pass),
+  * and one stored form, [[lsIn]]; the CLI's `ls`/`uniques`/`dups` filter
+  * one of them on its status. `duplicates` and `hashedSurvivors` own the
+  * narrow relation in their own [[PersistScope]].
   */
 object ExactDedup {
 
@@ -120,22 +123,19 @@ object ExactDedup {
   /** The narrow fact relation: ONE content pass over stage-1 survivors
     * computing both hashes, content projected away immediately —
     * (file_id, repo, path, commit, size, prefix_hash, hash) is ~0.1% of the
-    * input width, so persisting it is cheap even at 10^12 rows (dupd's hash
-    * cache db plays this role, /root/reference/src/dbops.c:84-96).
+    * input width, so materializing it is cheap even at 10^12 rows (dupd's
+    * hash cache db plays this role, /root/reference/src/dbops.c:84-96).
     *
-    * Persisting matters for plan shape too: the cascade's stages each
-    * aggregate over and semi-join back to this relation; without a
-    * materialization point Catalyst duplicates the whole upstream subtree
-    * per consumer — the un-persisted form of `uniques` planned at 8.7k
-    * physical nodes (45 parquet scans). Spark's CacheManager matches by
-    * canonicalized plan, so every query deriving from the same files/config
-    * shares one cached copy. */
+    * A lazy projection, owned by the entry that consumes it. The cascade's
+    * stages each aggregate over and join back to it, so [[survivors]]
+    * persists it as a leaf of its caller's [[PersistScope]] (without one,
+    * Catalyst copies the upstream subtree per consumer: 45 parquet scans in
+    * one plan). [[partialHashGroups]] reads it once and needs no leaf. */
   def hashedNarrow(files: DataFrame, cfg: DedupConfig): DataFrame =
     sizeSurvivors(files, cfg)
       .select(col("file_id"), col("repo"), col("path"), col("commit"),
         col("size"), prefixHash(cfg).as("prefix_hash"),
         digest(col("content"), cfg).as("hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Stage 2 (A3): (size, partial-hash) groups with ≥ 2 members among
     * stage-1 survivors — the first-K-bytes prune. */
@@ -145,13 +145,18 @@ object ExactDedup {
   private def prefixGroups(narrow: DataFrame): DataFrame =
     multiGroups(narrow, "n_files", "size", "prefix_hash")
 
-  /** Stage 2 survivors — (identity, size, hashes); content never enters a
-    * shuffle anywhere in the cascade. */
-  def hashedSurvivors(files: DataFrame, cfg: DedupConfig): DataFrame = {
-    val narrow = hashedNarrow(files, cfg)
+  /** Stage 2 survivors over the narrow relation persisted in `scope`; the
+    * caller materializes the result before releasing `scope`. */
+  private def survivors(files: DataFrame, cfg: DedupConfig, scope: PersistScope): DataFrame = {
+    val narrow = scope.persist(hashedNarrow(files, cfg))
     narrow.join(prefixGroups(narrow).select("size", "prefix_hash"),
       Seq("size", "prefix_hash"), "left_semi")
   }
+
+  /** Stage 2 survivors — (identity, size, hashes); content never enters a
+    * shuffle anywhere in the cascade. */
+  def hashedSurvivors(files: DataFrame, cfg: DedupConfig): DataFrame =
+    PersistScope.scoped(survivors(files, cfg, _))
 
   /** The rows of `df` in a (size, hash) set of ≥ 2, joined back with the
     * set's `set_size`, in the flat duplicates layout. */
@@ -161,9 +166,10 @@ object ExactDedup {
 
   /** Stage 3 (A4/A5): confirmed duplicates, one row per member — columns
     * (file_id, repo, path, commit, size, hash, set_size). The flat form is
-    * the scale path (no giant arrays on hot hashes). */
+    * the scale path (no giant arrays on hot hashes). The entries below
+    * build on this checkpoint leaf, so freeing their result frees it. */
   def duplicates(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    setMembers(hashedSurvivors(files, cfg))
+    PersistScope.scoped(s => setMembers(survivors(files, cfg, s)))
 
   /** A5 set-level publication — one row per duplicate set with sorted member
     * ids (the relational form of the reference's `\x1C`-joined `paths` TEXT,
@@ -186,9 +192,11 @@ object ExactDedup {
       .orderBy(col("total"), col("hash"))
 
   /** §2.7 set operations — `uniques`: files NOT in any duplicate set
-    * (/root/reference/src/report.c:485-542); the live form of [[uniquesIn]]. */
+    * (/root/reference/src/report.c:485-542): the UNIQUE rows of
+    * [[fileStatusesAll]]. Columns: (file_id, repo, path, size). */
   def uniques(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    uniquesIn(scanFilter(files, cfg), duplicates(files, cfg), None)
+    fileStatusesAll(files, cfg).filter(col("status") === "UNIQUE")
+      .select("file_id", "repo", "path", "size")
 
   /** `dups`: files that ARE members of a duplicate set; the live form of
     * [[dupsIn]]. */
@@ -201,15 +209,24 @@ object ExactDedup {
   private def excluded(excludePrefix: Option[String]): Column =
     excludePrefix.fold(lit(false))(concat(col("repo"), lit("/"), col("path")).startsWith(_))
 
-  /** The flat duplicates relation with each member's `excluded` flag and its
-    * set's non-excluded member count `live_set_size` (0 when none). A window
-    * count reads `dups` once; an aggregate joined back reads it twice, and
-    * column pruning keeps the two reads from sharing their exchanges (on
-    * sf0.001 the CLI `uniques --exclude-path` ran 25 jobs that way, 14 so). */
-  private def withLiveCounts(dups: DataFrame, excludePrefix: String): DataFrame =
-    dups.withColumn("excluded", excluded(Some(excludePrefix)))
+  /** `df` with each row's `excluded` flag and its (size, hash) group's
+    * non-excluded row count `live_set_size` (0 when none). A window count
+    * reads `df` once; an aggregate joined back reads it twice, and column
+    * pruning keeps the two reads from sharing their exchanges (on sf0.001
+    * the CLI `uniques --exclude-path` ran 25 jobs that way, 14 so). */
+  private def withLiveCounts(df: DataFrame, excludePrefix: Option[String]): DataFrame =
+    df.withColumn("excluded", excluded(excludePrefix))
       .withColumn("live_set_size", count(when(!col("excluded"), 1)).over(
         Window.partitionBy("size", "hash")))
+
+  /** The partner rule over [[withLiveCounts]] that the reference's
+    * listings apply under `--exclude-path`: a row is a duplicate while ≥ 1
+    * non-excluded row other than itself shares its (size, hash). A file whose
+    * only partners are excluded reads UNIQUE; the listed file itself is NOT
+    * exempted by being under the prefix (/root/reference/src/report.c:
+    * 243-251,413-452 — excluded partners do not count toward verified_dups). */
+  private def hasLivePartner: Column =
+    col("live_set_size") - when(col("excluded"), 0L).otherwise(1L) >= 1
 
   /** F6 status view: members under the prefix are marked `xxx` and never
     * counted as duplicates; sets whose non-excluded membership drops below 2
@@ -217,7 +234,7 @@ object ExactDedup {
     * adds (status, live_set_size) where status ∈ {DUP, xxx, UNIQUE} —
     * UNIQUE = survivor of a set the exclusion broke. */
   def withExcludeStatus(duplicates: DataFrame, excludePrefix: String): DataFrame =
-    withLiveCounts(duplicates, excludePrefix)
+    withLiveCounts(duplicates, Some(excludePrefix))
       .withColumn("status",
         when(col("excluded"), "xxx")
           .when(col("live_set_size") >= 2, "DUP")
@@ -225,53 +242,26 @@ object ExactDedup {
       .select("file_id", "repo", "path", "size", "hash", "status", "live_set_size")
 
   /** `dups` listing over a flat duplicates relation (live or stored): the
-    * members that still have ≥ 1 non-excluded partner — the classification
-    * the reference's uniques/dups/ls listings apply under `--exclude-path`:
-    * partners under the prefix get STATUS_EXCLUDE and do not count toward
-    * verified_dups, so a file whose only partners are excluded reads UNIQUE;
-    * the listed file itself is NOT exempted by being under the prefix (its
-    * non-excluded partners still count) —
-    * /root/reference/src/report.c:243-251,413-452. With no prefix this is
-    * every member. Columns: (file_id, repo, path, size, hash, set_size). */
-  def dupsIn(dups: DataFrame, excludePrefix: Option[String]): DataFrame = {
-    // partners = live members other than the listed one
-    val members = excludePrefix.fold(dups)(p => withLiveCounts(dups, p)
-      .filter(col("live_set_size") - when(col("excluded"), 0L).otherwise(1L) >= 1))
-    members.select("file_id", "repo", "path", "size", "hash", "set_size")
-  }
-
-  /** `scanned` left-outer-joined with the [[dupsIn]] ids as `__dup` (null
-    * for a unique file).
-    *
-    * LEFT OUTER + null test, not `left_anti`/`left_semi`: member ids are
-    * unique in the flat duplicates relation (no fanout, so the forms are
-    * row-identical), but Catalyst pushes a LEFT-ANTI or LEFT-SEMI through
-    * the corpus Union (PushdownLeftSemiAntiJoin), replicating the join into
-    * every branch — 5 probe joins and the plan fragmentation that came with
-    * them (round-6 job accounting: 59 executions for `uniques`, 4× the
-    * duplicates pipeline it wraps). Left-outer joins are not distributed
-    * over unions; this plan probes once. */
-  private def flagDups(scanned: DataFrame, dups: DataFrame,
-                       excludePrefix: Option[String]): DataFrame =
-    scanned.join(dupsIn(dups, excludePrefix).select(col("file_id"), lit(true).as("__dup")),
-      Seq("file_id"), "left")
+    * members with a live partner ([[hasLivePartner]]); with no prefix this
+    * is every member. Columns: (file_id, repo, path, size, hash, set_size). */
+  def dupsIn(dups: DataFrame, excludePrefix: Option[String]): DataFrame =
+    excludePrefix.fold(dups)(p => withLiveCounts(dups, Some(p)).filter(hasLivePartner))
+      .select("file_id", "repo", "path", "size", "hash", "set_size")
 
   /** `ls` listing: every `scanned` file (see [[scanFilter]]) with its
-    * DUPLICATE/UNIQUE status against a flat duplicates relation (live or
-    * stored), classified as [[dupsIn]]. Columns: (file_id, repo, path, size,
-    * status). */
+    * DUPLICATE/UNIQUE status against a flat duplicates relation (stored or
+    * checkpointed), classified as [[dupsIn]]. Columns: (file_id, repo, path,
+    * size, status). LEFT OUTER + null test, not `left_anti`/`left_semi`
+    * (row-identical, member ids being unique): Catalyst pushes those through
+    * the corpus Union (PushdownLeftSemiAntiJoin), one probe join per branch
+    * (59 executions for `uniques` in round-6 job accounting); a left-outer
+    * join probes once. */
   def lsIn(scanned: DataFrame, dups: DataFrame,
            excludePrefix: Option[String]): DataFrame =
-    flagDups(scanned, dups, excludePrefix)
+    scanned.join(dupsIn(dups, excludePrefix).select(col("file_id"), lit(true).as("__dup")),
+      Seq("file_id"), "left")
       .withColumn("status", when(col("__dup").isNull, "UNIQUE").otherwise("DUPLICATE"))
       .select("file_id", "repo", "path", "size", "status")
-
-  /** `uniques` listing: the `scanned` files not in [[dupsIn]] (anti-join of
-    * the scan against confirmed dups). Columns: (file_id, repo, path, size). */
-  def uniquesIn(scanned: DataFrame, dups: DataFrame,
-                excludePrefix: Option[String]): DataFrame =
-    flagDups(scanned, dups, excludePrefix).filter(col("__dup").isNull)
-      .select("file_id", "repo", "path", "size")
 
   /** J1/J2 — `dupd file <path>` lookup with re-verification semantics:
     * claimed members are re-evaluated against the CURRENT snapshot (content
@@ -330,11 +320,15 @@ object ExactDedup {
   /** `ls` — every scanned file with its DUPLICATE/UNIQUE status: the
     * reference's operation_ls sets BOTH print_uniques and print_duplicates
     * (/root/reference/src/report.c:485-542 — every file listed). Classified
-    * in one window pass over the conditional hash, without the cascade. */
-  def fileStatusesAll(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    sizeGuardedHash(scanFilter(files, cfg), "hash", digest(col("content"), cfg))
-      .withColumn("__m", count(lit(1)).over(Window.partitionBy("size", "hash")))
-      .withColumn("status", when(col("__m") >= 2, "DUPLICATE").otherwise("UNIQUE"))
+    * in one window pass over the conditional hash, without the cascade, by
+    * the same partner rule as [[dupsIn]] (a unique-size file's (size, '')
+    * group is a singleton, so it has no partner). Columns: (file_id, repo,
+    * path, size, status). */
+  def fileStatusesAll(files: DataFrame, cfg: DedupConfig = DedupConfig(),
+                      excludePrefix: Option[String] = None): DataFrame =
+    withLiveCounts(sizeGuardedHash(scanFilter(files, cfg), "hash",
+      digest(col("content"), cfg)), excludePrefix)
+      .withColumn("status", when(hasLivePartner, "DUPLICATE").otherwise("UNIQUE"))
       .select("file_id", "repo", "path", "size", "status")
 
   /** J2 verbose — `dupd file -v` member statuses evaluated against the
@@ -459,17 +453,24 @@ object ExactDedup {
       .select("file_id", "repo", "path", "size")
 
   /** A9/S9 — scan counters as a metrics row (the reference's ~60 counters,
-    * /root/reference/src/stats.h:33-125, reduced to the semantic ones). */
-  def stats(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val scanned = scanFilter(files, cfg)
-    val d = duplicates(files, cfg)
-    val totals = scanned.agg(
-      count(lit(1)).as("files_scanned"),
-      sum("size").as("bytes_scanned"))
-    val dupTotals = d.agg(
-      count(lit(1)).as("dup_files"),
-      countDistinct(col("hash"), col("size")).as("dup_sets"),
-      sum("size").as("dup_bytes"))
-    totals.crossJoin(dupTotals)
+    * /root/reference/src/stats.h:33-125, reduced to the semantic ones); the
+    * live form of [[statsIn]]. */
+  def stats(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    statsIn(scanFilter(files, cfg), duplicates(files, cfg))
+
+  /** The [[stats]] counters of `scanned` and its flat duplicates relation
+    * `d`, as ONE aggregate over both (a cross join of two aggregates ran 6
+    * jobs on sf0.001, this 4); `countDistinct` skips the scanned rows'
+    * null hash. */
+  def statsIn(scanned: DataFrame, d: DataFrame): DataFrame = {
+    val dup = col("__dup")
+    scanned.select(col("size"), lit(null).cast("string").as("hash"), lit(false).as("__dup"))
+      .unionByName(d.select(col("size"), col("hash"), lit(true).as("__dup")))
+      .agg(
+        count(when(!dup, 1)).as("files_scanned"),
+        sum(when(!dup, col("size"))).as("bytes_scanned"),
+        count(when(dup, 1)).as("dup_files"),
+        countDistinct(col("hash"), col("size")).as("dup_sets"),
+        sum(when(dup, col("size"))).as("dup_bytes"))
   }
 }

@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.PersistScope
 
 /** Per-partition checkpointing + lineage + metrics — the Spark-native role
   * of dupd's SQLite state/cache db (north_rule: "resumable from checkpoint
@@ -140,15 +141,16 @@ object Checkpoints {
     f.delete(): Unit
   }
 
-  /** Run `compute(bucket)` for every bucket lacking a lineage-valid manifest
-    * row, persisting each bucket's output and a manifest row; returns the
-    * stage's full output (all buckets, computed now or reused). `lineageOf`
-    * ties a bucket's output to its input + config — any drift in either
-    * recomputes that bucket. */
+  /** Run `compute(bucket, scope)` for every bucket lacking a lineage-valid
+    * manifest row, persisting each bucket's output and a manifest row;
+    * returns the stage's full output (all buckets, computed now or reused).
+    * `scope` owns the bucket's own intermediates and is released once the
+    * bucket is written. `lineageOf` ties a bucket's output to its input +
+    * config — any drift in either recomputes that bucket. */
   def runStage(spark: SparkSession, root: String, stage: String,
                nBuckets: Int, lineageOf: Int => String,
                onlyBuckets: Option[Set[Int]] = None)
-              (compute: Int => DataFrame): DataFrame = {
+              (compute: (Int, PersistScope) => DataFrame): DataFrame = {
     import spark.implicits._
     val valid = validBuckets(spark, root, stage, nBuckets, lineageOf)
     val todo = (0 until nBuckets)
@@ -164,8 +166,8 @@ object Checkpoints {
         "until they are recomputed")
     todo.foreach { b =>
       val t0 = System.nanoTime()
-      val out = compute(b)
-      out.write.mode(SaveMode.Overwrite).parquet(s"$root/$stage/bucket=$b")
+      PersistScope.using(s =>
+        compute(b, s).write.mode(SaveMode.Overwrite).parquet(s"$root/$stage/bucket=$b"))
       val written = spark.read.parquet(s"$root/$stage/bucket=$b")
       // bytes metric = sum(size) when the stage output carries one (file
       // relations do; pair relations have no byte dimension — record 0)
@@ -230,9 +232,9 @@ object Checkpoints {
     // this is one pass over Iceberg manifests, not data
     val fps: Map[Int, String] = inputFingerprints(files, nBuckets)
     runStage(spark, root, "exact", nBuckets,
-      b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { b =>
-      graft.exact.ExactDedup.duplicates(
-        files.filter(bucketOf(nBuckets) === b), cfg)
+      b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { (b, s) =>
+      s.track(graft.exact.ExactDedup.duplicates(
+        files.filter(bucketOf(nBuckets) === b), cfg))
     }
   }
 
@@ -251,11 +253,11 @@ object Checkpoints {
                                  onlyBuckets: Option[Set[Int]] = None): DataFrame = {
     val cfgLineage = s"nearsig:v1:code=$codeVersion:k=${cfg.shingleK}:perms=${cfg.numPerms}:" +
       s"simBits=${cfg.simBits}:nBuckets=$nBuckets"
-    graft.util.PersistScope.using { scope =>
+    PersistScope.using { scope =>
       val reps = scope.persist(graft.near.NearDup.representatives(files, cfg))
       val fps = inputFingerprintsBy(reps, nBuckets, pmod(col("file_id"), lit(nBuckets)))
       runStage(spark, root, "nearsig", nBuckets,
-        b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { b =>
+        b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { (b, _) =>
         graft.near.NearDup.signalFrame(
           reps.filter(pmod(col("file_id"), lit(nBuckets)) === b), cfg)
       }
@@ -279,8 +281,8 @@ object Checkpoints {
     // shapes candidates or verification participates in the lineage
     val cfgLineage = s"nearpairs:v1:code=$codeVersion:$cfg"
     val fps = inputFingerprintsBy(files, 1, lit(0))
-    runStage(spark, root, "nearpairs", 1, b => s"$cfgLineage:fp(${fps(b)})") { _ =>
-      graft.near.NearDup.verifiedPairs(files, cfg)
+    runStage(spark, root, "nearpairs", 1, b => s"$cfgLineage:fp(${fps(b)})") { (_, s) =>
+      s.track(graft.near.NearDup.verifiedPairs(files, cfg))
     }
   }
 }

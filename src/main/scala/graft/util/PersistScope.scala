@@ -14,15 +14,12 @@ import org.apache.spark.sql.graftshim.CheckpointShim
   * `release` frees the tracked blocks once the composite's result is
   * materialized.
   *
-  * Two materializations deliberately stay outside any scope:
-  *   - ConnectedComponents' per-round `localCheckpoint(false)`: the round's
-  *     signature aggregate is the action that materializes it, and an eager
-  *     round would double the Spark executions per round. Each round frees
-  *     its predecessor; the final round's frame is handed to the caller's
-  *     scope through [[track]].
-  *   - `ExactDedup.hashedNarrow`'s session-cached `persist`: it is on the
-  *     exact tier's path and is shared across queries through the
-  *     CacheManager, so no single composite owns its lifetime.
+  * One materialization deliberately stays outside any scope:
+  * ConnectedComponents' per-round `localCheckpoint(false)`. The round's
+  * signature aggregate is the action that materializes it, and an eager
+  * round would double the Spark executions per round. Each round frees its
+  * predecessor; the final round's frame is handed to the caller's scope
+  * through [[track]].
   */
 class PersistScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

@@ -81,19 +81,46 @@ class CliSpec extends SparkSpec {
   }
 
   test("CLI uniques runs about as many jobs as the library uniques") {
-    // the CLI listing is ExactDedup.uniquesIn, so it plans like
-    // ExactDedup.uniques; a left_anti join there is pushed into each
-    // branch of the corpus Union and runs 4-8x the jobs
+    // every live listing (ls, uniques, dups; with or without
+    // --exclude-path) is ExactDedup.fileStatusesAll filtered on its status,
+    // as the library uniques is: one size-guarded window pass. A listing
+    // over the cascade costs 10-18 jobs here
     import graft.exact.{DedupConfig, ExactDedup}
     spark.catalog.clearCache()
-    val lib = jobsOf(ExactDedup.uniques(Tables.corpus(spark, sf), DedupConfig())
+    val lib = jobsOf(ExactDedup.fileStatusesAll(Tables.corpus(spark, sf), DedupConfig())
       .orderBy("file_id").toLocalIterator().forEachRemaining(_ => ()))
-    for (excl <- Seq(Nil, Seq("--exclude-path", "mirror/"))) {
+    for (op <- Seq("ls", "uniques", "dups"); excl <- Seq(Nil, Seq("--exclude-path", "mirror/"))) {
       spark.catalog.clearCache()
-      val cli = jobsOf(assert(run(Seq("uniques") ++ excl ++ data: _*)._1 == 0))
-      info(s"uniques ${excl.mkString(" ")}: CLI $cli jobs, library $lib jobs")
-      assert(cli <= lib + 4, s"CLI uniques ${excl.mkString(" ")} ran $cli jobs, library $lib")
+      val cli = jobsOf(assert(run(Seq(op) ++ excl ++ data: _*)._1 == 0))
+      val what = (op +: excl).mkString(" ")
+      info(s"$what: CLI $cli jobs, library fileStatusesAll $lib jobs")
+      assert(cli <= lib + 2, s"CLI $what ran $cli jobs, library fileStatusesAll $lib")
     }
+  }
+
+  test("scan --stats-file appends the stats of the relation it wrote") {
+    // the counters come from the scan's own duplicates relation; a second
+    // cascade would cost >= 9 more jobs
+    import graft.exact.{DedupConfig, ExactDedup}
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_stats")
+    val db = tmp.resolve("db").toString
+    val statsFile = tmp.resolve("stats.jsonl").toString
+    spark.catalog.clearCache()
+    val plain = jobsOf(assert(run(Seq("scan", "--out", db) ++ data: _*)._1 == 0))
+    spark.catalog.clearCache()
+    val withStats = jobsOf(assert(run(Seq("scan", "--out", db,
+      "--stats-file", statsFile) ++ data: _*)._1 == 0))
+    info(s"scan: $plain jobs, scan --stats-file: $withStats jobs")
+    assert(withStats <= plain + 4, s"scan --stats-file ran $withStats jobs, scan $plain")
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(statsFile))
+    assert(lines.size == 1)
+    val fields = lines.get(0).stripPrefix("{").stripSuffix("}").split(",").map { kv =>
+      val Array(k, v) = kv.split(":", 2); k.stripPrefix("\"").stripSuffix("\"") -> v
+    }.toMap
+    val expect = ExactDedup.stats(Tables.corpus(spark, sf), DedupConfig()).head()
+    assert(fields - "dbtime" ==
+      expect.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> String.valueOf(expect.get(i)) }.toMap)
+    assert(fields.contains("dbtime"))
   }
 
   test("hash --path equals hash --id, and matches sha256 of the content") {

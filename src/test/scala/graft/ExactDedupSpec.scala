@@ -8,7 +8,7 @@ import graft.exact.{DedupConfig, ExactDedup}
   * split, validate invariant (members byte-equal), uniques/dups partition. */
 class ExactDedupSpec extends SparkSpec {
   private val cfg = DedupConfig()
-  private lazy val corpus = Tables.corpus(spark, sf).cache()
+  private lazy val corpus = SparkSpec.corpus
   private lazy val dups = ExactDedup.duplicates(corpus, cfg).cache()
 
   test("every mirrored doc lands in a duplicate set with its base") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.exact.{DedupConfig, ExactDedup}
 
@@ -26,15 +27,50 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   /** Children traversal that pierces the wrappers a real executed plan
-    * hides behind: finalized AQE plans, materialized query stages, and
-    * cached InMemoryRelations (the cascade persists its narrow relation —
-    * the interesting scans/exchanges live INSIDE the cached build plan). */
+    * hides behind: finalized AQE plans, materialized query stages and
+    * reused exchanges. A reused exchange's subtree counts at every reuse:
+    * reuse hides a plan that copies one subtree per union branch (a
+    * left-semi pushed through the corpus Union) without removing it. */
   private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
     case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-    case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      Seq(im.relation.cachedPlan)
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r.child)
     case o => o.children ++ o.subqueries
+  }
+
+  /** Every physical plan Spark executes while `body` runs: the final
+    * action's and those of the eager checkpoints that materialize a
+    * composite's intermediates. A composite's final plan only reads its
+    * checkpoint leaves; the scans and exchanges that built them live in the
+    * earlier executions. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  /** The ShuffleExchanges of every plan executed while `df` is built and
+    * collected; asserts none carries content/text. */
+  private def contentFreeExchanges(df: => DataFrame, what: String): Seq[ShuffleExchangeExec] = {
+    val exs = executedPlans(df.collect()).flatMap(collectPlan(_) {
+      case e: ShuffleExchangeExec => e
+    })
+    exs.foreach { e =>
+      val shuffled = e.child.output.map(_.name).toSet
+      assert(!shuffled.contains("content") && !shuffled.contains("text"),
+        s"$what: content crosses a shuffle: ${shuffled.mkString(",")}")
+    }
+    exs
   }
 
   private def collectPlan[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
@@ -84,35 +120,11 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("content never enters an Exchange in the exact cascade") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     spark.catalog.clearCache() // measure this pipeline's own plan, not
                                // another suite's cached substitutions
-    val df = ExactDedup.duplicates(Tables.corpus(spark, sf), DedupConfig())
-    df.collect()
-    val exs = collectPlan(df.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec => e
-    }
+    val exs = contentFreeExchanges(
+      ExactDedup.duplicates(Tables.corpus(spark, sf), DedupConfig()), "duplicates")
     assert(exs.nonEmpty, "cascade is expected to shuffle on its keys")
-    exs.foreach { e =>
-      val shuffled = e.child.output.map(_.name).toSet
-      assert(!shuffled.contains("content") && !shuffled.contains("text"),
-        s"content crosses a shuffle: ${shuffled.mkString(",")}")
-    }
-  }
-
-  /** All ShuffleExchanges in df's executed plan (collected after a forced
-    * run so AQE finalizes); asserts none carries content/text. */
-  private def assertContentFreeExchanges(df: DataFrame, what: String): Unit = {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    df.collect()
-    val exs = collectPlan(df.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec => e
-    }
-    exs.foreach { e =>
-      val shuffled = e.child.output.map(_.name).toSet
-      assert(!shuffled.contains("content") && !shuffled.contains("text"),
-        s"$what: content crosses a shuffle: ${shuffled.mkString(",")}")
-    }
   }
 
   test("validate never shuffles content (second-digest divergence check)") {
@@ -120,7 +132,7 @@ class PlanShapeSpec extends SparkSpec {
     // million-member vendored set must never move its bytes through the
     // partial-distinct Exchange to answer a yes/no question
     spark.catalog.clearCache()
-    assertContentFreeExchanges(
+    contentFreeExchanges(
       ExactDedup.validate(Tables.corpus(spark, sf), DedupConfig()), "validate")
   }
 
@@ -129,10 +141,10 @@ class PlanShapeSpec extends SparkSpec {
     // size-count guard; only (size, hash, identity) columns shuffle into
     // the window/dedup stages
     spark.catalog.clearCache()
-    assertContentFreeExchanges(
+    contentFreeExchanges(
       ExactDedup.fileStatusesAll(Tables.corpus(spark, sf), DedupConfig()),
       "fileStatusesAll")
-    assertContentFreeExchanges(
+    contentFreeExchanges(
       ExactDedup.hardlinkUnique(Tables.corpus(spark, sf), DedupConfig()),
       "hardlinkUnique")
   }
@@ -153,7 +165,7 @@ class PlanShapeSpec extends SparkSpec {
       s"rep selection planned ${smjs.size} sort-merge join(s); expected all-broadcast")
     val bhjs = collectPlan(plan) { case j: BroadcastHashJoinExec => j }
     assert(bhjs.nonEmpty, "rep selection should join via broadcast")
-    assertContentFreeExchanges(df, "representatives")
+    contentFreeExchanges(df, "representatives")
   }
 
   test("rep selection builds its id set ONCE (no semi-through-union blowup)") {
@@ -174,32 +186,16 @@ class PlanShapeSpec extends SparkSpec {
       "being pushed through the corpus Union again")
   }
 
-  /** Parquet scans `df`'s executed plan runs (after a forced run), counting
-    * each CACHED subtree once: the plan references the persisted narrow
-    * relation several times, but its build executes once — kids() pierces
-    * every reference, which would multiply-count the same scans. */
-  private def executedScans(df: DataFrame): Int = {
-    val seen = new java.util.IdentityHashMap[SparkPlan, Boolean]()
-    def count(p: SparkPlan): Int = {
-      val here = p match {
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          if (seen.containsKey(im.relation.cachedPlan)) 0
-          else { seen.put(im.relation.cachedPlan, true); count(im.relation.cachedPlan) }
-        case _: FileSourceScanExec => 1
-        case o => (o.children ++ o.subqueries).map(count).sum
-      }
-      p match {
-        case a: AdaptiveSparkPlanExec => count(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => count(q.plan)
-        case _ => here
-      }
-    }
-    count(executedPlan(df))
-  }
+  /** Parquet scans executed while `df` is built and collected, over every
+    * plan that runs (see [[executedPlans]]). A checkpoint leaf's build runs
+    * once, however many branches read it. */
+  private def executedScans(df: => DataFrame): Int =
+    executedPlans(df.collect()).map(scans(_).size).sum
 
   test("exact cascade builds its size set ONCE (same union-pushdown guard)") {
     spark.catalog.clearCache()
     val n = executedScans(ExactDedup.duplicates(Tables.corpus(spark, sf), DedupConfig()))
+    info(s"$n executed parquet scans")
     assert(n <= 15, s"exact cascade executes $n parquet scans (10 at round " +
       "5); the stage-1 size filter is being pushed through the corpus Union")
   }
@@ -212,6 +208,7 @@ class PlanShapeSpec extends SparkSpec {
     // executed scan count the same way the cascade test above does.
     spark.catalog.clearCache()
     val n = executedScans(ExactDedup.uniques(Tables.corpus(spark, sf), DedupConfig()))
+    info(s"$n executed parquet scans")
     assert(n <= 20, s"uniques executes $n parquet scans; expected <= 20 " +
       "(the cascade's ~10 + one probe pass) — the dup-id anti/semi join is " +
       "being pushed through the corpus Union again")

@@ -10,7 +10,7 @@ import graft.exact.{DedupConfig, ExactDedup}
   * live pipeline. */
 class QuerySurfaceSpec extends SparkSpec {
   private val cfg = DedupConfig()
-  private lazy val corpus = Tables.corpus(spark, sf).cache()
+  private lazy val corpus = SparkSpec.corpus
   private lazy val dups = ExactDedup.duplicates(corpus, cfg).cache()
 
   test("ls lists EVERY scanned file, statuses partition into dups + uniques") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
@@ -16,6 +16,10 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The sf0.001 corpus, cached ONCE for every suite that shares it: a
+    * second `cache()` of the same plan only logs a CacheManager warning. */
+  lazy val corpus: DataFrame = Tables.corpus(spark, "/root/testdata/sf0.001").cache()
 }
 
 trait SparkSpec extends AnyFunSuite {
