@@ -6,6 +6,8 @@ import graft.Tables
 import graft.exact.{DedupConfig, ExactDedup}
 import graft.near.{NearConfig, NearDup}
 import graft.query.Report
+import graft.state.DbMeta
+import graft.util.Blocks
 
 /** spark-submit entry mirroring the reference CLI's operations
   * (/root/reference/src/options.conf, src/main.c:558-583):
@@ -98,12 +100,12 @@ object Main {
           Seq("file_id"))
       else rawCorpus
 
-    /** Open a stored scan db: meta version + staleness checks
-      * (/root/reference/src/dbops.c:244-293). */
-    def openDb(dir: String): DataFrame = {
-      graft.state.DbMeta.check(spark, dir)
-        .foreach(w => System.err.println(s"[graft] WARNING: $w"))
-      spark.read.parquet(s"$dir/duplicates")
+    /** The stored db's meta (`--db`), read once per op: the open-time
+      * checks (dupd src/dbops.c:244-293) and [[qcfg]] use it. */
+    lazy val dbMeta: Option[DbMeta.Meta] = opts.get("db").flatMap { dir =>
+      val m = DbMeta.read(spark, dir)
+      DbMeta.warnings(dir, m).foreach(w => System.err.println(s"[graft] WARNING: $w"))
+      m
     }
 
     /** Effective config for query ops: when reading a stored db, fields the
@@ -113,33 +115,37 @@ object Main {
       * explicitly conflicting flags warn — stored results always reflect
       * the scan-time config (dupd's open_database strictness,
       * /root/reference/src/dbops.c:244-293). */
-    lazy val qcfg: DedupConfig = opts.get("db")
-      .flatMap(dir => graft.state.DbMeta.read(spark, dir)).map { m =>
-        val conflicts = Seq(
-          (opts.contains("alg") && m.alg != cfg.hashAlg) ->
-            s"db scanned with --alg ${m.alg}, requested ${cfg.hashAlg}",
-          (opts.contains("minsize") && m.minsize != cfg.minSize) ->
-            s"db scanned with --minsize ${m.minsize}, requested ${cfg.minSize}",
-          (opts.contains("hidden") && !m.hidden) ->
-            s"db scanned with hidden=false, requested true")
-        conflicts.collect { case (true, msg) => msg }.foreach(msg =>
-          System.err.println(s"[graft] WARNING: $msg — stored results " +
-            "reflect the scan-time config; re-run scan to change it"))
-        cfg.copy(
-          hashAlg = if (opts.contains("alg")) cfg.hashAlg else m.alg,
-          minSize = if (opts.contains("minsize")) cfg.minSize else m.minsize,
-          includeHidden = if (opts.contains("hidden")) cfg.includeHidden
-                          else m.hidden)
-      }.getOrElse(cfg)
+    lazy val qcfg: DedupConfig = dbMeta.map { m =>
+      val conflicts = Seq(
+        (opts.contains("alg") && m.alg != cfg.hashAlg) ->
+          s"db scanned with --alg ${m.alg}, requested ${cfg.hashAlg}",
+        (opts.contains("minsize") && m.minsize != cfg.minSize) ->
+          s"db scanned with --minsize ${m.minsize}, requested ${cfg.minSize}",
+        (opts.contains("hidden") && !m.hidden) ->
+          s"db scanned with hidden=false, requested true")
+      conflicts.collect { case (true, msg) => msg }.foreach(msg =>
+        System.err.println(s"[graft] WARNING: $msg — stored results " +
+          "reflect the scan-time config; re-run scan to change it"))
+      cfg.copy(
+        hashAlg = if (opts.contains("alg")) cfg.hashAlg else m.alg,
+        minSize = if (opts.contains("minsize")) cfg.minSize else m.minsize,
+        includeHidden = if (opts.contains("hidden")) cfg.includeHidden
+                        else m.hidden)
+    }.getOrElse(cfg)
 
-    /** duplicates relation: stored (--db), checkpointed (--checkpoint), or
-      * computed from the data. */
-    def dupsDf: DataFrame = opts.get("db") match {
-      case Some(dir) => openDb(dir)
+    /** The frame over a live duplicates leaf this op built, freed at its end. */
+    var owned: Option[DataFrame] = None
+
+    /** duplicates relation, built once per op: stored (--db, opened after
+      * its checks), checkpointed (--checkpoint), or computed from the data. */
+    lazy val dupsDf: DataFrame = opts.get("db") match {
+      case Some(dir) =>
+        dbMeta
+        spark.read.schema(ExactDedup.DuplicatesSchema).parquet(s"$dir/duplicates")
       case None => opts.get("checkpoint") match {
         case Some(root) => graft.state.Checkpoints.checkpointedDuplicates(
           spark, corpus, root, opts.getOrElse("buckets", "8").toInt, cfg)
-        case None => ExactDedup.duplicates(corpus, cfg)
+        case None => owned = Some(ExactDedup.duplicates(corpus, cfg)); owned.get
       }
     }
     def reportRows(minTotal: Long = 0L) =
@@ -180,12 +186,12 @@ object Main {
     def stream(df: DataFrame)(render: org.apache.spark.sql.Row => String): Unit =
       df.toLocalIterator().forEachRemaining(r => println(render(r)))
 
-    op match {
+    try op match {
       case "scan" =>
         val out = opts.getOrElse("out", "/tmp/graft_db")
         val d = dupsDf
         d.write.mode("overwrite").parquet(s"$out/duplicates")
-        graft.state.DbMeta.write(spark, out, cfg)
+        DbMeta.write(spark, out, cfg)
         // S9 — append counters to --stats-file (src/stats.c:183-201)
         opts.get("stats-file").foreach { f =>
           val s = ExactDedup.statsIn(ExactDedup.scanFilter(corpus, cfg), d).head()
@@ -230,8 +236,9 @@ object Main {
               case None => ExactDedup.fileStatuses(corpus, corpus, id,
                 exclP, cfg)
             }
-            stream(res.withColumn("p", cutPath).orderBy("file_id"))(r =>
-              f"${r.getString(3)}%8s: ${r.get(4)}")
+            // a set is small: print it collected, ordered on the driver
+            res.withColumn("p", cutPath).collect().sortBy(_.getLong(0))
+              .foreach(r => println(f"${r.getString(3)}%8s: ${r.get(4)}"))
             0
         }
       case "cmp-two" =>
@@ -260,7 +267,8 @@ object Main {
         refreshed.write.mode("overwrite").parquet(out)
         println(s"refreshed duplicates written to $out"); 0
       case "validate" =>
-        val bad = ExactDedup.validate(corpus, cfg).count()
+        owned = Some(ExactDedup.validate(corpus, cfg))
+        val bad = owned.get.count()
         println(if (bad == 0) "validate: OK" else s"validate: $bad sets diverged")
         if (bad == 0) 0 else 1
       case "rmsh" =>
@@ -303,9 +311,8 @@ object Main {
             val hcfg = qcfg
             // read-through: a stored scan already has this file's digest
             // (the reference reads the hash cache first)
-            val cached = opts.get("db").toSeq.flatMap(dir =>
-              openDb(dir).filter(col("file_id") === id)
-                .select("hash").limit(1).collect())
+            val cached = if (!opts.contains("db")) Nil
+              else dupsDf.filter(col("file_id") === id).select("hash").limit(1).collect().toSeq
             val h = cached.headOption.map(_.getString(0)).orElse {
               corpus.filter(col("file_id") === id)
                 .select(ExactDedup.digest(col("content"), hcfg))
@@ -336,6 +343,6 @@ object Main {
         println("usage: graft.cli.Main <scan|report|uniques|dups|ls|file|" +
           "cmp-two|refresh|validate|rmsh|near|clusters|hash|cache> " +
           "--data DIR [flags]"); 2
-    }
+    } finally owned.foreach(Blocks.free(_))
   }
 }

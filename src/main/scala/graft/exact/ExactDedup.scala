@@ -3,6 +3,7 @@ package graft.exact
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.util.PersistScope
 
 /** Configuration of the exact-dedup cascade, mirroring the reference's knobs:
@@ -63,7 +64,9 @@ final case class DedupConfig(
   * as given — a stored scan db, a checkpointed scan, or [[duplicates]]:
   * `dupsIn`, `lsIn`, `withExcludeStatus`, `fileStatusesIn`, `refresh`. Both
   * kinds share one `--exclude-path` rule (`withLiveCounts`,
-  * `hasLivePartner`) and one re-verify-and-status chain (`verifiedStatuses`).
+  * `hasLivePartner`) and one `file` status rule (`memberStatus`), written
+  * once: `fileStatuses` applies it over a join, `fileStatusesIn` over a
+  * local relation.
   * The listings have one live form, [[fileStatusesAll]] (one window pass),
   * and one stored form, [[lsIn]]; the CLI's `ls`/`uniques`/`dups` filter
   * one of them on its status. `duplicates` and `hashedSurvivors` own the
@@ -158,11 +161,16 @@ object ExactDedup {
   def hashedSurvivors(files: DataFrame, cfg: DedupConfig): DataFrame =
     PersistScope.scoped(survivors(files, cfg, _))
 
+  /** The flat duplicates layout that [[setMembers]] writes and a stored db
+    * holds; a stored db read with it runs no schema-inference job. */
+  val DuplicatesSchema: StructType = StructType.fromDDL("file_id BIGINT, repo STRING, " +
+    "path STRING, commit STRING, size BIGINT, hash STRING, set_size BIGINT")
+
   /** The rows of `df` in a (size, hash) set of ≥ 2, joined back with the
     * set's `set_size`, in the flat duplicates layout. */
   private def setMembers(df: DataFrame): DataFrame =
     df.join(multiGroups(df, "set_size", "size", "hash"), Seq("size", "hash"))
-      .select("file_id", "repo", "path", "commit", "size", "hash", "set_size")
+      .select(DuplicatesSchema.fieldNames.map(col).toSeq: _*)
 
   /** Stage 3 (A4/A5): confirmed duplicates, one row per member — columns
     * (file_id, repo, path, commit, size, hash, set_size). The flat form is
@@ -338,49 +346,59 @@ object ExactDedup {
     * (/root/reference/src/report.c:260-264, tests/test.44-48), same `path`
     * in the table model (identity = (path, content), as [[hardlinkUnique]]);
     * `---` = gone from the snapshot; `xxx` = under the exclude prefix. The
-    * probed file's row is SELF. `members` carry the probe's path as
-    * `__probe_path`, so the HL test needs no driver-side probe resolution.
-    *
-    * Re-verify NOW: a member counts as DUP only if the snapshot still has
-    * its file_id with identical content; only claimed members are
-    * re-hashed (join first), never the whole snapshot. */
-  private def verifiedStatuses(members: DataFrame, snapshot: DataFrame,
-                               probeFileId: Long, excludePrefix: Option[String],
-                               cfg: DedupConfig): DataFrame = {
+    * probed file's row is SELF. Over a member row with its stored `hash`,
+    * its digest now `now_hash` (null when gone) and `__probe_path`. */
+  private def memberStatus(probeFileId: Long, excludePrefix: Option[String]): Column =
+    when(col("file_id") === probeFileId, "SELF")
+      .when(excluded(excludePrefix), "xxx")
+      .when(col("now_hash").isNull, "---")
+      .when(col("now_hash") === col("hash") &&
+        col("path") === col("__probe_path"), "HL")
+      .when(col("now_hash") === col("hash"), "DUP")
+      .otherwise("---")
+
+  /** [[memberStatus]] of the probe's set in a live scan, as one plan:
+    * members found by probe pushdown ([[probeSetMembers]]); only they are
+    * re-hashed from the snapshot (join first). */
+  def fileStatuses(scanned: DataFrame, snapshot: DataFrame, probeFileId: Long,
+                   excludePrefix: Option[String] = None,
+                   cfg: DedupConfig = DedupConfig()): DataFrame = {
+    val members = probeSetMembers(scanFilter(scanned, cfg), probeFileId, cfg)
     val current = snapshot
       .join(members.select("file_id"), Seq("file_id")) // inner ≡ semi: member ids unique
       .select(col("file_id"), digest(col("content"), cfg).as("now_hash"))
     members.join(current, Seq("file_id"), "left")
-      .withColumn("status",
-        when(col("file_id") === probeFileId, "SELF")
-          .when(excluded(excludePrefix), "xxx")
-          .when(col("now_hash").isNull, "---")
-          .when(col("now_hash") === col("hash") &&
-            col("path") === col("__probe_path"), "HL")
-          .when(col("now_hash") === col("hash"), "DUP")
-          .otherwise("---"))
-      .select("file_id", "repo", "path", "status")
+      .select(col("file_id"), col("repo"), col("path"),
+        memberStatus(probeFileId, excludePrefix).as("status"))
   }
 
-  /** [[verifiedStatuses]] of the probe's set in a live scan: members found by
-    * probe pushdown over `scanned` (see [[probeSetMembers]]). */
-  def fileStatuses(scanned: DataFrame, snapshot: DataFrame, probeFileId: Long,
-                   excludePrefix: Option[String] = None,
-                   cfg: DedupConfig = DedupConfig()): DataFrame =
-    verifiedStatuses(probeSetMembers(scanFilter(scanned, cfg), probeFileId, cfg),
-      snapshot, probeFileId, excludePrefix, cfg)
-
-  /** [[verifiedStatuses]] of the probe's set in a STORED duplicates relation
-    * (the dupd scan/query split: query ops read the db, they do not rescan —
-    * /root/reference/src/dbops.c:508-642); `dups` is the flat output of
-    * [[duplicates]] (or the checkpointed scan). */
+  /** [[memberStatus]] of the probe's set in a STORED duplicates relation
+    * (scan db or checkpointed scan), looked up as dupd's `file` reads one
+    * set row (dupd src/dbops.c:420-452,508-642): three filtered
+    * reads, each collected — the probe's (size, hash, path), its set's
+    * members (`size = s AND hash = h`), and only those members re-hashed
+    * from the snapshot read on `size = s` (partition-prunable at Iceberg
+    * scale) and their ids. The status projection over the set's local
+    * relation runs no job. Columns: (file_id, repo, path, status). */
   def fileStatusesIn(dups: DataFrame, snapshot: DataFrame, probeFileId: Long,
                      excludePrefix: Option[String] = None,
                      cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val probe = dups.filter(col("file_id") === probeFileId)
-      .select(col("size"), col("hash"), col("path").as("__probe_path"))
-    verifiedStatuses(dups.join(broadcast(probe), Seq("size", "hash")),
-      snapshot, probeFileId, excludePrefix, cfg)
+    val spark = dups.sparkSession
+    import spark.implicits._
+    val rows = dups.filter(col("file_id") === probeFileId).select("size", "hash", "path")
+      .as[(Long, String, String)].collect().toSeq.take(1).flatMap { case (size, hash, probePath) =>
+        val members = dups.filter(col("size") === size && col("hash") === hash)
+          .select("file_id", "repo", "path").as[(Long, String, String)].collect().toSeq
+        val now = snapshot.filter(col("size") === size && col("file_id").isin(members.map(_._1): _*))
+          .select(col("file_id"), digest(col("content"), cfg)).as[(Long, String)].collect()
+          .groupMap(_._1)(_._2)
+        members.flatMap { case (id, repo, path) => // left join: null when gone
+          now.getOrElse(id, Array[String](null)).toSeq.map((id, repo, path, hash, _, probePath))
+        }
+      }
+    rows.toDF("file_id", "repo", "path", "hash", "now_hash", "__probe_path")
+      .select(col("file_id"), col("repo"), col("path"),
+        memberStatus(probeFileId, excludePrefix).as("status"))
   }
 
   /** S8 — rm-shell projection: keep the first (lowest-id) member of each

@@ -15,7 +15,7 @@ object Fixtures {
   final case class FileRow(file_id: Long, repo: String, path: String,
                            commit: String, lang: String, content: String)
 
-  private def df(spark: SparkSession, rows: Seq[FileRow]): DataFrame = {
+  private[graft] def df(spark: SparkSession, rows: Seq[FileRow]): DataFrame = {
     import spark.implicits._
     rows.toDF().withColumn("size", length(col("content")).cast("long"))
   }
@@ -105,43 +105,6 @@ object Fixtures {
       FileRow(3, "b", "link2", "c0", "txt", c2), // hardlink of 2
       FileRow(4, "c", "link2", "c0", "txt", c2), // hardlink of 2
       FileRow(5, "a", "indep", "c0", "txt", c2)))// content-equal, different path
-  }
-
-  /** Near-dup mutation fixture (FIXTURES.md "Near-dup fixtures"): seeded
-    * mutations of base docs with an analytically-known expected pair set.
-    *   - ws_N    (id+10000): doubled whitespace — high Jaccard, MUST pair
-    *   - ren_N   (id+20000): one identifier renamed — moderate Jaccard,
-    *               MUST pair (SimHash/LCS recall net)
-    *   - trunc_N (id+30000): 50% prefix truncation — Jaccard ≈ 0.33,
-    *               must NOT pair with its base
-    *   - vend_N  (id+40000): exact vendored copy — collapses to the base's
-    *               representative before the near tier
-    */
-  def nearDupCorpus(spark: SparkSession, nBase: Int = 60): DataFrame = {
-    val rows = Seq.newBuilder[FileRow]
-    (0 until nBase).foreach { i =>
-      val id = i.toLong
-      // word-shaped content with a repeated identifier token
-      val words = (0 until 40).map(w => content(s"w$i-$w", 6).trim)
-      val ident = s"ident${i}xx"
-      val base = (words.take(10) :+ ident) ++ (words.slice(10, 25) :+ ident) ++
-        words.drop(25)
-      val baseText = base.mkString(" ")
-      rows += FileRow(id, "base", s"src_$i.txt", "c0", "scala", baseText)
-      if (i % 3 == 0) // light edit: one doubled separator (~10 shingles move)
-        rows += FileRow(id + 10000, "ws", s"src_$i.txt", "c0", "scala",
-          baseText.replaceFirst(" ", "  "))
-      if (i % 3 == 1)
-        rows += FileRow(id + 20000, "ren", s"src_$i.txt", "c0", "scala",
-          baseText.replace(ident, s"renam${i}yy"))
-      if (i % 3 == 2)
-        rows += FileRow(id + 30000, "trunc", s"src_$i.txt", "c0", "scala",
-          baseText.substring(0, baseText.length / 2))
-      if (i % 5 == 0)
-        rows += FileRow(id + 40000, "vend", s"src_$i.txt", "c0", "scala",
-          baseText)
-    }
-    df(spark, rows.result())
   }
 
   /** tests/files8 analogue: dup candidates with unreadable members (null

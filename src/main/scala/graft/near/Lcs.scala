@@ -181,27 +181,6 @@ object Lcs {
     best
   }
 
-  /** O(n·m) dynamic-programming LCS — the brute-force oracle for tests. */
-  def lcsLengthBrute(x: String, y: String): Int = {
-    val xs = x.codePoints().toArray
-    val ys = y.codePoints().toArray
-    var best = 0
-    val prev = new Array[Int](ys.length + 1)
-    val cur = new Array[Int](ys.length + 1)
-    var i = 1
-    while (i <= xs.length) {
-      var j = 1
-      while (j <= ys.length) {
-        cur(j) = if (xs(i - 1) == ys(j - 1)) prev(j - 1) + 1 else 0
-        if (cur(j) > best) best = cur(j)
-        j += 1
-      }
-      System.arraycopy(cur, 0, prev, 0, cur.length)
-      i += 1
-    }
-    best
-  }
-
   private val lcsUdf =
     udf((x: String, y: String) => if (x == null || y == null) 0 else lcsLength(x, y))
 

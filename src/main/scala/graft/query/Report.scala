@@ -51,10 +51,6 @@ object Report {
   }
 
   /** Human footer numbers (text report, src/report.c:371-378). */
-  def totalUsed(rows: DataFrame): Long =
-    rows.select("total", "hash").distinct()
-      .agg(coalesce(sum("total"), lit(0L))).head().getLong(0)
-
   def footer(total: Long): String = {
     val kib = total / 1024.0
     val mib = kib / 1024.0

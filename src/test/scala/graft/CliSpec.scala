@@ -98,6 +98,54 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("live scan/report/rmsh/validate free the duplicates leaf they build") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_leak").toString
+    for (args <- Seq(Seq("scan", "--out", tmp), Seq("report"), Seq("rmsh"), Seq("validate"))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(run(args ++ data: _*)._1 == 0)
+      val held = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+      assert(held.isEmpty, s"${args.head} left ${held.size} persisted RDD(s)")
+    }
+  }
+
+  /** A scan db of the fixture, and the fixture's first unique file id. */
+  private lazy val scanDb: String = {
+    val db = java.nio.file.Files.createTempDirectory("graft_cli_scan").toString
+    assert(run(Seq("scan", "--out", db) ++ data: _*)._1 == 0)
+    db
+  }
+  private lazy val uniqueId: Long =
+    graft.exact.ExactDedup.uniques(Tables.corpus(spark, sf))
+      .orderBy("file_id").select("file_id").head().getLong(0)
+
+  test("stored file lookups and report run a bounded number of jobs") {
+    // file --db is an index lookup: the documents schema, the probe row,
+    // the probe's set, the set's members re-hashed; report --db adds no
+    // meta or schema job to its window, sort and stream
+    for ((what, args, bound) <- Seq(
+        ("file --db --id 0", Seq("file", "--db", scanDb, "--id", "0"), 4),
+        (s"file --db --id $uniqueId", Seq("file", "--db", scanDb, "--id", uniqueId.toString), 2),
+        ("report --db", Seq("report", "--db", scanDb), 4))) {
+      graft.util.Blocks.sweep(spark)
+      val n = jobsOf(assert(run(args ++ data: _*)._1 == 0))
+      info(s"$what: $n jobs")
+      assert(n <= bound, s"$what ran $n jobs, bound $bound")
+    }
+  }
+
+  test("file --db --id prints the live lookup's lines") {
+    for (id <- Seq(0L, 1000000L, uniqueId, -42L);
+         flags <- Seq(Nil, Seq("--exclude-path", "mirror/"), Seq("--cut", "src3/"))) {
+      val args = Seq("file", "--id", id.toString) ++ flags ++ data
+      val (cl, live) = run(args: _*)
+      val (cs, stored) = run(args ++ Seq("--db", scanDb): _*)
+      val what = (Seq("file --id", id) ++ flags).mkString(" ")
+      assert(cl == 0 && cs == 0, what)
+      assert(stored == live, s"$what: --db printed $stored, live $live")
+      assert(live.nonEmpty == (id == 0L || id == 1000000L), what)
+    }
+  }
+
   test("scan --stats-file appends the stats of the relation it wrote") {
     // the counters come from the scan's own duplicates relation; a second
     // cascade would cost >= 9 more jobs

@@ -9,6 +9,27 @@ import graft.near.Lcs
   * classpath, so forAll is hand-rolled.) */
 class LcsSpec extends AnyFunSuite {
 
+  /** O(n·m) dynamic-programming LCS — the brute-force oracle. */
+  private def lcsLengthBrute(x: String, y: String): Int = {
+    val xs = x.codePoints().toArray
+    val ys = y.codePoints().toArray
+    var best = 0
+    val prev = new Array[Int](ys.length + 1)
+    val cur = new Array[Int](ys.length + 1)
+    var i = 1
+    while (i <= xs.length) {
+      var j = 1
+      while (j <= ys.length) {
+        cur(j) = if (xs(i - 1) == ys(j - 1)) prev(j - 1) + 1 else 0
+        if (cur(j) > best) best = cur(j)
+        j += 1
+      }
+      System.arraycopy(cur, 0, prev, 0, cur.length)
+      i += 1
+    }
+    best
+  }
+
   test("known cases") {
     assert(Lcs.lcsLength("", "") == 0)
     assert(Lcs.lcsLength("abc", "") == 0)
@@ -28,7 +49,7 @@ class LcsSpec extends AnyFunSuite {
         .mkString
     (1 to rounds).foreach { _ =>
       val x = gen(); val y = gen()
-      assert(Lcs.lcsLength(x, y) == Lcs.lcsLengthBrute(x, y), s"x='$x' y='$y'")
+      assert(Lcs.lcsLength(x, y) == lcsLengthBrute(x, y), s"x='$x' y='$y'")
     }
   }
 
@@ -44,7 +65,7 @@ class LcsSpec extends AnyFunSuite {
   test("near-identical long strings") {
     val base = "the quick brown fox jumps over the lazy dog " * 10
     val mutated = base.substring(0, 200) + "XX" + base.substring(202)
-    assert(Lcs.lcsLength(base, mutated) == Lcs.lcsLengthBrute(base, mutated))
+    assert(Lcs.lcsLength(base, mutated) == lcsLengthBrute(base, mutated))
   }
 
   test("radix fallback equals the packed-long fast path on random inputs") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.near.{NearConfig, NearDup}
 import graft.model.Fixtures
@@ -9,7 +10,45 @@ import graft.model.Fixtures
   * truncations must NOT pair; vendored exact copies collapse pre-tier. */
 class NearDupMutationSpec extends SparkSpec {
   private val cfg = NearConfig()
-  private lazy val corpus = Fixtures.nearDupCorpus(spark).cache()
+
+  /** Near-dup mutation fixture (FIXTURES.md "Near-dup fixtures"): seeded
+    * mutations of base docs with an analytically-known expected pair set.
+    *   - ws_N    (id+10000): doubled whitespace — high Jaccard, MUST pair
+    *   - ren_N   (id+20000): one identifier renamed — moderate Jaccard,
+    *               MUST pair (SimHash/LCS recall net)
+    *   - trunc_N (id+30000): 50% prefix truncation — Jaccard ≈ 0.33,
+    *               must NOT pair with its base
+    *   - vend_N  (id+40000): exact vendored copy — collapses to the base's
+    *               representative before the near tier
+    */
+  private def nearDupCorpus(nBase: Int = 60): DataFrame = {
+    val rows = Seq.newBuilder[Fixtures.FileRow]
+    (0 until nBase).foreach { i =>
+      val id = i.toLong
+      // word-shaped content with a repeated identifier token
+      val words = (0 until 40).map(w => Fixtures.content(s"w$i-$w", 6).trim)
+      val ident = s"ident${i}xx"
+      val base = (words.take(10) :+ ident) ++ (words.slice(10, 25) :+ ident) ++
+        words.drop(25)
+      val baseText = base.mkString(" ")
+      rows += Fixtures.FileRow(id, "base", s"src_$i.txt", "c0", "scala", baseText)
+      if (i % 3 == 0) // light edit: one doubled separator (~10 shingles move)
+        rows += Fixtures.FileRow(id + 10000, "ws", s"src_$i.txt", "c0", "scala",
+          baseText.replaceFirst(" ", "  "))
+      if (i % 3 == 1)
+        rows += Fixtures.FileRow(id + 20000, "ren", s"src_$i.txt", "c0", "scala",
+          baseText.replace(ident, s"renam${i}yy"))
+      if (i % 3 == 2)
+        rows += Fixtures.FileRow(id + 30000, "trunc", s"src_$i.txt", "c0", "scala",
+          baseText.substring(0, baseText.length / 2))
+      if (i % 5 == 0)
+        rows += Fixtures.FileRow(id + 40000, "vend", s"src_$i.txt", "c0", "scala",
+          baseText)
+    }
+    Fixtures.df(spark, rows.result())
+  }
+
+  private lazy val corpus = nearDupCorpus().cache()
   private lazy val found = NearDup.verifiedPairs(corpus, cfg)
     .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 

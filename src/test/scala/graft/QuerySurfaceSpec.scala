@@ -42,6 +42,7 @@ class QuerySurfaceSpec extends SparkSpec {
 
   test("db meta: version + dbtime round-trip, staleness warns, mismatch errors") {
     import graft.state.DbMeta
+    import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("graft_db").toString
     DbMeta.write(spark, dir, cfg)
     val m = DbMeta.read(spark, dir).get
@@ -52,18 +53,41 @@ class QuerySurfaceSpec extends SparkSpec {
     val old = DbMeta.check(spark, dir,
       now = m.dbtime + 4L * 24 * 3600 * 1000)
     assert(old.exists(_.contains("days old")))
-    // unknown version: hard error, like dupd's open_database
-    DbMeta.write(spark, dir, cfg)
-    val raw = spark.read.parquet(s"$dir/_meta")
-      .withColumn("version", org.apache.spark.sql.functions.lit("graft-99"))
-    raw.write.mode("overwrite").parquet(s"$dir/_meta2")
-    // move tampered meta into place
-    val fs = new java.io.File(dir)
-    new java.io.File(s"$dir/_meta").listFiles().foreach(_.delete())
-    new java.io.File(s"$dir/_meta").delete()
-    new java.io.File(s"$dir/_meta2").renameTo(new java.io.File(s"$dir/_meta"))
-    intercept[RuntimeException] { DbMeta.check(spark, dir) }
-    fs.deleteOnExit()
+    // unknown version: hard error, like dupd's open_database. The meta file
+    // is rewritten through the same file system API, checksum included
+    val p = new Path(dir, "meta")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(p)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(text.contains(s"version=${DbMeta.Version}\n"))
+    val out = fs.create(p, true)
+    try out.write(text.replace(s"version=${DbMeta.Version}", "version=graft-99").getBytes("UTF-8"))
+    finally out.close()
+    assert(DbMeta.read(spark, dir).get.version == "graft-99")
+    val e = intercept[RuntimeException] { DbMeta.check(spark, dir) }
+    assert(e.getMessage.contains("re-run scan"))
+  }
+
+  test("db meta: a db with only the old _meta directory fails to open") {
+    import graft.state.DbMeta
+    // the graft-1 layout: a one-row parquet directory, no meta file
+    val dir = java.nio.file.Files.createTempDirectory("graft_db_v1").toString
+    spark.range(1).selectExpr("'graft-1' AS version", "id AS dbtime", "1L AS minsize",
+      "false AS hidden", "'sha256' AS alg").write.parquet(s"$dir/_meta")
+    val e = intercept[RuntimeException] { DbMeta.check(spark, dir) }
+    assert(e.getMessage.contains("re-run scan"))
+    intercept[RuntimeException] { DbMeta.read(spark, dir) }
+    // a db with no meta at all opens with a warning
+    val bare = java.nio.file.Files.createTempDirectory("graft_db_bare").toString
+    assert(DbMeta.check(spark, bare).exists(_.contains("no meta")))
+  }
+
+  test("the stored duplicates schema is the schema duplicates writes") {
+    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(fields(dups.schema) == fields(ExactDedup.DuplicatesSchema))
+    val dir = java.nio.file.Files.createTempDirectory("graft_dups").toString
+    dups.write.mode("overwrite").parquet(dir)
+    assert(fields(spark.read.parquet(dir).schema) == fields(ExactDedup.DuplicatesSchema))
   }
 
   test("stored-db verbose statuses re-verify against the CURRENT snapshot") {

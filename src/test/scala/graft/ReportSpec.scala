@@ -16,13 +16,20 @@ class ReportSpec extends SparkSpec {
   private def nSets = rows.select("each_size", "hash").distinct().count()
   private def nMembers = rows.count()
 
+  /** The footer's total, aggregated over the relation. */
+  private def totalUsed(rows: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.functions._
+    rows.select("total", "hash").distinct()
+      .agg(coalesce(sum("total"), lit(0L))).head().getLong(0)
+  }
+
   test("text: header lines + indented members + Total used footer") {
     val lines = Report.text(rows).toSeq
     assert(lines.last.startsWith("Total used: "))
     assert(lines.last.matches(
       raw"Total used: \d+ bytes \(\d+\.\d\d KiB, \d+\.\d\d MiB, \d+\.\d\d GiB\)"))
     // the streamed footer must equal the relation-side aggregate
-    assert(lines.last == Report.footer(Report.totalUsed(rows)))
+    assert(lines.last == Report.footer(totalUsed(rows)))
     val headers = lines.filter(_.matches(raw"\d+ total bytes used by duplicates of size \d+:"))
     assert(headers.nonEmpty && headers.size.toLong == nSets)
     assert(lines.count(_.startsWith("  ")).toLong == nMembers)
