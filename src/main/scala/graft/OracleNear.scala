@@ -324,7 +324,7 @@ object OracleNear {
 
     // planted-skew fixture under a biting cap (64): the boilerplate family's
     // hot band buckets are dropped (logged on the Spark side), sub-cap
-    // buckets — salted in Spark between hotBucket and the cap — still pair;
+    // buckets — paired in place by Spark's in-bucket kernel — still pair;
     // both engines implement identical blocking
     "q_skew_pairs" -> skew(cap = 64, family = 1000,
       "SELECT a, b FROM lsh_pairs"),

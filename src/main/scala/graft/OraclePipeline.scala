@@ -336,8 +336,8 @@ object OraclePipeline {
     // (identical blocking to Ann.cosineDupPairs at tables=16, bits=4),
     // exact quantized cosine ≥ 0.40 within candidates. The QUALIFY mirrors
     // the engine's Salting.bucketPairs cap (maxBucket=4096): buckets over
-    // the cap generate no pairs in EITHER engine (salting itself is a
-    // result-invariant plan rewrite, so it has no oracle footprint).
+    // the cap generate no pairs in EITHER engine (every kept bucket, hot or
+    // not, pairs in place, so hotBucket has no oracle footprint).
     "q_cosine_pairs" -> (lshSigCte(16, 4) +
       """, sigsk AS (
         |  SELECT * FROM sigs

@@ -104,7 +104,7 @@ object Tables {
     * sharing doc 0's text with a distinct short suffix each — near-dups
     * (high shingle Jaccard) that are NOT exact dups, so the exact-rep
     * collapse cannot absorb them and they flood shared LSH band buckets.
-    * The deterministic skew fixture for the north rule's salted/capped
+    * The deterministic skew fixture for the north rule's capped in-bucket
     * pair-generation path; the DuckDB oracle rebuilds it identically
     * ([[OracleNear]] q_skew_pairs). */
   def skewCorpus(spark: SparkSession, sfDir: String, family: Int = 1000): DataFrame = {

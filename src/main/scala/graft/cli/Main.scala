@@ -232,8 +232,8 @@ object Main {
               // stored-scan lookup, re-verified against the CURRENT data (J2)
               case Some(_) => ExactDedup.fileStatusesIn(dupsDf, corpus, id,
                 exclP, qcfg)
-              // live path honors --exclude-path too (fileStatuses carries it)
-              case None => ExactDedup.fileStatuses(corpus, corpus, id,
+              // live: the same collected reads over the scan itself
+              case None => ExactDedup.fileStatusesCollected(corpus, corpus, id,
                 exclP, cfg)
             }
             // a set is small: print it collected, ordered on the driver

@@ -1,6 +1,6 @@
 package graft.exact
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -60,13 +60,14 @@ final case class DedupConfig(
   *
   * Query entry points come in two kinds. Those taking `files` read a live
   * scan themselves: `uniques`, `dups`, `fileStatusesAll`, `fileLookup`,
-  * `fileStatuses`. Those taking a flat duplicates relation `dups` read it
-  * as given — a stored scan db, a checkpointed scan, or [[duplicates]]:
+  * `fileStatuses`, `fileStatusesCollected`. Those taking a flat duplicates
+  * relation `dups` read it as given — a stored scan db, a checkpointed
+  * scan, or [[duplicates]]:
   * `dupsIn`, `lsIn`, `withExcludeStatus`, `fileStatusesIn`, `refresh`. Both
   * kinds share one `--exclude-path` rule (`withLiveCounts`,
   * `hasLivePartner`) and one `file` status rule (`memberStatus`), written
-  * once: `fileStatuses` applies it over a join, `fileStatusesIn` over a
-  * local relation.
+  * once: `fileStatuses` applies it over a join, `fileStatusesIn` and
+  * `fileStatusesCollected` (the CLI's live `file`) over a local relation.
   * The listings have one live form, [[fileStatusesAll]] (one window pass),
   * and one stored form, [[lsIn]]; the CLI's `ls`/`uniques`/`dups` filter
   * one of them on its status. `duplicates` and `hashedSurvivors` own the
@@ -377,25 +378,59 @@ object ExactDedup {
     * set row (dupd src/dbops.c:420-452,508-642): three filtered
     * reads, each collected — the probe's (size, hash, path), its set's
     * members (`size = s AND hash = h`), and only those members re-hashed
-    * from the snapshot read on `size = s` (partition-prunable at Iceberg
-    * scale) and their ids. The status projection over the set's local
-    * relation runs no job. Columns: (file_id, repo, path, status). */
+    * ([[collectedStatuses]]). Columns: (file_id, repo, path, status). */
   def fileStatusesIn(dups: DataFrame, snapshot: DataFrame, probeFileId: Long,
                      excludePrefix: Option[String] = None,
                      cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val spark = dups.sparkSession
-    import spark.implicits._
-    val rows = dups.filter(col("file_id") === probeFileId).select("size", "hash", "path")
-      .as[(Long, String, String)].collect().toSeq.take(1).flatMap { case (size, hash, probePath) =>
-        val members = dups.filter(col("size") === size && col("hash") === hash)
-          .select("file_id", "repo", "path").as[(Long, String, String)].collect().toSeq
-        val now = snapshot.filter(col("size") === size && col("file_id").isin(members.map(_._1): _*))
-          .select(col("file_id"), digest(col("content"), cfg)).as[(Long, String)].collect()
-          .groupMap(_._1)(_._2)
-        members.flatMap { case (id, repo, path) => // left join: null when gone
-          now.getOrElse(id, Array[String](null)).toSeq.map((id, repo, path, hash, _, probePath))
-        }
+    import dups.sparkSession.implicits._
+    val set = dups.filter(col("file_id") === probeFileId).select("size", "hash", "path")
+      .as[(Long, String, String)].collect().headOption.map { case (size, hash, probePath) =>
+        (size, hash, probePath, dups.filter(col("size") === size && col("hash") === hash)
+          .select("file_id", "repo", "path").as[(Long, String, String)].collect().toSeq)
       }
+    collectedStatuses(dups.sparkSession, set, snapshot, probeFileId, excludePrefix, cfg)
+  }
+
+  /** [[memberStatus]] of the probe's set in a live scan, resolved like
+    * [[fileStatusesIn]] by three collected reads instead of a plan: the
+    * probe's (size, digest, path); the same-size rows' digests (`size = s`
+    * is partition-prunable at Iceberg scale), kept when they equal the
+    * probe's — a set of fewer than 2 is no set; and the members re-hashed
+    * ([[collectedStatuses]]). Same rows as [[fileStatuses]]. */
+  def fileStatusesCollected(scanned: DataFrame, snapshot: DataFrame, probeFileId: Long,
+                            excludePrefix: Option[String] = None,
+                            cfg: DedupConfig = DedupConfig()): DataFrame = {
+    import scanned.sparkSession.implicits._
+    val files = scanFilter(scanned, cfg)
+    val set = files.filter(col("file_id") === probeFileId)
+      .select(col("size"), digest(col("content"), cfg), col("path"))
+      .as[(Long, String, String)].collect().headOption.flatMap { case (size, hash, probePath) =>
+        val members = files.filter(col("size") === size)
+          .select(col("file_id"), col("repo"), col("path"), digest(col("content"), cfg).as("hash"))
+          .filter(col("hash") === hash).drop("hash").as[(Long, String, String)].collect().toSeq
+        if (members.size >= 2) Some((size, hash, probePath, members)) else None
+      }
+    collectedStatuses(scanned.sparkSession, set, snapshot, probeFileId, excludePrefix, cfg)
+  }
+
+  /** The status rows of a collected set — (size, hash, probe path,
+    * members' (file_id, repo, path)), or none: its members re-hashed from
+    * the snapshot read on `size = s` and their ids (one collected read),
+    * then [[memberStatus]] over the set's local relation, which runs no
+    * job. */
+  private def collectedStatuses(spark: SparkSession,
+                                set: Option[(Long, String, String, Seq[(Long, String, String)])],
+                                snapshot: DataFrame, probeFileId: Long,
+                                excludePrefix: Option[String], cfg: DedupConfig): DataFrame = {
+    import spark.implicits._
+    val rows = set.toSeq.flatMap { case (size, hash, probePath, members) =>
+      val now = snapshot.filter(col("size") === size && col("file_id").isin(members.map(_._1): _*))
+        .select(col("file_id"), digest(col("content"), cfg)).as[(Long, String)].collect()
+        .groupMap(_._1)(_._2)
+      members.flatMap { case (id, repo, path) => // left join: null when gone
+        now.getOrElse(id, Array[String](null)).toSeq.map((id, repo, path, hash, _, probePath))
+      }
+    }
     rows.toDF("file_id", "repo", "path", "hash", "now_hash", "__probe_path")
       .select(col("file_id"), col("repo"), col("path"),
         memberStatus(probeFileId, excludePrefix).as("status"))

@@ -476,20 +476,128 @@ case class SketchAgree(left: Expression, right: Expression)
 }
 
 object SketchAgree {
+  private final val Low7 = 0x7f7f7f7f7f7f7f7fL
+
+  /** Zero bytes of a ^ b, counted 8 at a time: a byte's high bit in
+    * `~((x & Low7) + Low7 | x | Low7)` is set iff the byte is 0, and no
+    * carry crosses a byte ((b & 0x7f) + 0x7f ≤ 0xfe). */
   def compute(a: Array[Long], b: Array[Long]): Int = {
     val n = math.min(a.length, b.length)
     var agree = 0
     var i = 0
     while (i < n) {
       val x = a(i) ^ b(i)
-      var k = 0
-      while (k < 8) {
-        if (((x >>> (k << 3)) & 0xffL) == 0L) agree += 1
-        k += 1
-      }
+      agree += java.lang.Long.bitCount(~(((x & Low7) + Low7) | x | Low7))
       i += 1
     }
     agree
+  }
+}
+
+/** The in-bucket pair kernel of the near tier's candidate generation: over
+  * one bucket's collected members, `array<struct<id: bigint[, simhash:
+  * bigint][, sk: array<bigint>]>>`, every member pair (a, b), a < b, that
+  * passes the bucket's filters:
+  *   - `bit_count(simhash_a ^ simhash_b) <= hammingMax` where the bucket's
+  *     `hammingMax` is ≥ 0 (a SimHash chunk bucket; needs `simhash`);
+  *   - `sketch_agree(sk_a, sk_b) >= sketchMin` where members carry `sk`.
+  * Output: `array<struct<a: bigint, b: bigint>>`, one element per passing
+  * member pair (pairs of equal ids are skipped), for `inline` to turn into
+  * rows.
+  *
+  * The members are read in place once, into primitive arrays, and the
+  * i < j loop runs over those: the quadratic raw pair set is never built,
+  * only the survivors are written, into one flat UnsafeArrayData (32 B per
+  * pair, no per-pair object). A member with a null id, or a null payload
+  * that a filter reads, pairs with nothing, as in the equi-join and
+  * filters this replaces. */
+case class BucketPairs(left: Expression, right: Expression, sketchMin: Int)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+
+  @transient private lazy val member =
+    left.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  @transient private lazy val simOrd = member.fieldNames.indexOf("simhash")
+  @transient private lazy val skOrd = member.fieldNames.indexOf("sk")
+
+  override def dataType: DataType = ArrayType(StructType(Seq(StructField("a", LongType, nullable = false),
+    StructField("b", LongType, nullable = false))), containsNull = false)
+  override def prettyName: String = "bucket_pairs"
+
+  override protected def nullSafeEval(m: Any, h: Any): Any =
+    BucketPairs.compute(m.asInstanceOf[ArrayData], h.asInstanceOf[Int],
+      member.length, simOrd, skOrd, sketchMin)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (m, h) =>
+      s"graft.functions.BucketPairs.compute($m, $h, ${member.length}, $simOrd, $skOrd, $sketchMin)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object BucketPairs {
+  def compute(members: ArrayData, hammingMax: Int, numFields: Int,
+              simOrd: Int, skOrd: Int, sketchMin: Int): ArrayData = {
+    val hamming = hammingMax >= 0
+    val n = members.numElements()
+    val ids = new Array[Long](n)
+    val sims = new Array[Long](n)
+    val sks = new Array[Array[Long]](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      val r = members.getStruct(i, numFields)
+      if (!r.isNullAt(0) && !(hamming && r.isNullAt(simOrd)) && !(skOrd >= 0 && r.isNullAt(skOrd))) {
+        ids(m) = r.getLong(0)
+        if (hamming) sims(m) = r.getLong(simOrd)
+        if (skOrd >= 0) sks(m) = r.getArray(skOrd).toLongArray()
+        m += 1
+      }
+      i += 1
+    }
+    var pairs = new Array[Long](64)
+    var np = 0
+    i = 0
+    while (i < m) {
+      var j = i + 1
+      while (j < m) {
+        val (a, b) = (ids(i), ids(j))
+        if (a != b &&
+            (!hamming || java.lang.Long.bitCount(sims(i) ^ sims(j)) <= hammingMax) &&
+            (skOrd < 0 || SketchAgree.compute(sks(i), sks(j)) >= sketchMin)) {
+          if (2 * np + 2 > pairs.length) pairs = java.util.Arrays.copyOf(pairs, pairs.length * 2)
+          pairs(2 * np) = math.min(a, b)
+          pairs(2 * np + 1) = math.max(a, b)
+          np += 1
+        }
+        j += 1
+      }
+      i += 1
+    }
+    unsafePairs(pairs, np)
+  }
+
+  /** `np` pairs as an UnsafeArrayData of struct<a, b> in one long[]: the
+    * element count, the null bits (all clear), one (offset << 32 | 24)
+    * word per element, then each element's UnsafeRow (null word, a, b). */
+  private def unsafePairs(pairs: Array[Long], np: Int): ArrayData = {
+    val header = 1 + (np + 63) / 64
+    val words = header.toLong + 4L * np
+    require(words * 8 <= Int.MaxValue, s"$np pairs exceed one array's 2 GB")
+    val data = new Array[Long](words.toInt)
+    data(0) = np
+    var k = 0
+    while (k < np) {
+      val row = header + np + 3 * k
+      data(header + k) = (row.toLong * 8) << 32 | 24L
+      data(row + 1) = pairs(2 * k)
+      data(row + 2) = pairs(2 * k + 1)
+      k += 1
+    }
+    val out = new org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    out.pointTo(data, org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET, (words * 8).toInt)
+    out
   }
 }
 
@@ -595,6 +703,12 @@ object NearDupFunctions {
 
   def sketchAgree(a: Column, b: Column): Column =
     ExprShim.column(SketchAgree(ExprShim.expression(a), ExprShim.expression(b)))
+
+  /** [[BucketPairs]] over one bucket's collected `members`, with the
+    * bucket's Hamming bound (`hammingMax < 0`: none). */
+  def bucketPairs(members: Column, hammingMax: Column, sketchMin: Int): Column =
+    ExprShim.column(BucketPairs(ExprShim.expression(members),
+      ExprShim.expression(hammingMax), sketchMin))
 
   def sortedIntersectSize(a: Column, b: Column): Column =
     ExprShim.column(SortedIntersectSize(ExprShim.expression(a), ExprShim.expression(b)))

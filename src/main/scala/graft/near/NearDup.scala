@@ -29,11 +29,11 @@ final case class NearConfig(
       * default per the north rule; members keep recall through their other
       * bands/chunks. */
     maxBucket: Int = 4096,
-    /** Buckets above this (but under the cap) generate pairs through the
-      * salted two-phase join ([[graft.skew.Salting]]) so one hot bucket's
-      * quadratic work spreads across `salts` tasks. */
-    hotBucket: Int = 512,
-    salts: Int = 16) {
+    /** The skew report's threshold: kept buckets above this size are
+      * counted, with the largest kept bucket, in the `[graft.skew]` line and
+      * its observation ([[graft.skew.Salting]]). It routes nothing: every
+      * kept bucket runs the same in-place pair kernel (0 = no report). */
+    hotBucket: Int = 512) {
   require(bands * rowsPerBand == numPerms, "bands × rowsPerBand must equal numPerms")
   require(simChunks * (simBits / simChunks) == simBits)
   require(numPerms % 8 == 0, "byte sketch packs 8 signature bytes per long")
@@ -146,68 +146,46 @@ object NearDup {
     bandsOf(signalFrame(representatives(files, cfg), cfg), cfg)
 
   /** Banding from a precomputed signatures frame (lets composite pipelines
-    * persist `signatures` once instead of re-deriving it per stage).
-    * `carryCols` rides extra per-file columns into every band row (the
-    * fused verification path carries the 136 B byte sketch this way). */
-  def bandsOf(sigs: DataFrame, cfg: NearConfig,
-              carryCols: Seq[String] = Nil): DataFrame = {
+    * persist `signatures` once instead of re-deriving it per stage). */
+  def bandsOf(sigs: DataFrame, cfg: NearConfig): DataFrame = {
     val r = cfg.rowsPerBand
     sigs
-      .select(col("file_id") +: carryCols.map(col) :+
-        posexplode(expr(
-          s"""transform(sequence(0, ${cfg.bands - 1}), b ->
-             |  array_join(transform(slice(sig, b * $r + 1, $r),
-             |             v -> cast(v as string)), ','))""".stripMargin)): _*)
-      .select(col("file_id") +: carryCols.map(col) :+
-        col("pos").cast("long").as("band_idx") :+
-        col("col").as("band_key"): _*)
+      .select(col("file_id"), posexplode(expr(
+        s"""transform(sequence(0, ${cfg.bands - 1}), b ->
+           |  array_join(transform(slice(sig, b * $r + 1, $r),
+           |             v -> cast(v as string)), ','))""".stripMargin)))
+      .select(col("file_id"), col("pos").cast("long").as("band_idx"), col("col").as("band_key"))
   }
 
-  /** LSH candidate pairs: equi-join within (band_idx, band_key) buckets,
-    * a < b, deduped across bands. `maxBucket` caps pathological buckets.
-    * Standalone entry: materializes eagerly, then releases its intermediates. */
+  /** LSH candidate pairs: every member pair (a < b) of each
+    * (band_idx, band_key) bucket, from the in-bucket pair kernel
+    * ([[graft.skew.Salting.bucketPairs]]), deduped across bands.
+    * `maxBucket` caps pathological buckets. Standalone entry: materializes
+    * its result eagerly. */
   def lshPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    PersistScope.scoped { s =>
-      // persist: the bands frame feeds three consumers (bucket-size agg and
-      // both sides of the self-join) — without it the whole upstream
-      // (reps → signatures) re-executes per consumer
-      Salting.bucketPairs(s.persist(bands(files, cfg)), Seq("band_idx", "band_key"),
-        "file_id", Nil, cfg.maxBucket, cfg.hotBucket, cfg.salts, s)
-        .distinct()
-    }
+    PersistScope.scoped(_ =>
+      Salting.bucketPairs(bands(files, cfg), Seq("band_idx", "band_key"),
+        "file_id", cfg.maxBucket, cfg.hotBucket).distinct())
 
   /** SimHash per representative (custom codegen'd expression, map-side). */
   def simhashes(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
     representatives(files, cfg).select(col("file_id"),
       NearDupFunctions.simhash(col("content"), cfg.simBits).as("simhash"))
 
-  /** The pigeonhole split of a frame's `simhash` column: one row per chunk,
-    * `pos` = chunk index, `col` = that chunk's `simBits / simChunks` bits. */
-  private def simhashChunks(cfg: NearConfig): Column = {
-    val w = cfg.simBits / cfg.simChunks
-    val mask = (1L << w) - 1
-    posexplode(expr(
-      s"transform(sequence(0, ${cfg.simChunks - 1}), c -> shiftright(simhash, c * $w) & $mask)"))
-  }
-
   /** SimHash candidate pairs by the pigeonhole trick: split the hash into
     * `simChunks` chunks; Hamming distance ≤ hammingMax (< simChunks) implies
-    * at least one chunk matches exactly → equi-join per chunk, then the
-    * exact Hamming filter. */
+    * at least one chunk matches exactly. Each (chunk_idx, chunk) bucket runs
+    * the in-bucket pair kernel with the exact Hamming filter, so only
+    * Hamming-close pairs leave the bucket; deduped across chunks. */
   def simhashPairs(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    PersistScope.scoped { s =>
-      val chunked = s.persist(simhashes(files, cfg)
-        .select(col("file_id"), col("simhash"), simhashChunks(cfg))
-        .select(col("file_id"), col("simhash"), col("pos").as("chunk_idx"), col("col").as("chunk")))
-      // Hamming filter BEFORE the dedup: it is row-local and deterministic on
-      // the (simhash_a, simhash_b) payload riding each pair, so filter-then-
-      // distinct is result-identical to distinct-then-filter — and it cuts
-      // the distinct's shuffle input from every chunk-collision pair (~10×
-      // the survivors on the sf0.1 corpus) to the Hamming-close set.
+    PersistScope.scoped { _ =>
+      val w = cfg.simBits / cfg.simChunks
+      val chunked = simhashes(files, cfg)
+        .select(col("file_id"), col("simhash"), posexplode(expr(s"transform(sequence(0, " +
+          s"${cfg.simChunks - 1}), c -> shiftright(simhash, c * $w) & ${(1L << w) - 1})")))
+        .select(col("file_id"), col("simhash"), col("pos").as("chunk_idx"), col("col").as("chunk"))
       Salting.bucketPairs(chunked, Seq("chunk_idx", "chunk"), "file_id",
-        Seq("simhash"), cfg.maxBucket, cfg.hotBucket, cfg.salts, s)
-        .filter(expr(s"bit_count(simhash_a ^ simhash_b) <= ${cfg.hammingMax}"))
-        .select("a", "b")
+        cfg.maxBucket, cfg.hotBucket, hamming = Some("simhash" -> lit(cfg.hammingMax)))
         .distinct()
     }
 
@@ -243,42 +221,42 @@ object NearDup {
   def verifiedPairsOf(reps: DataFrame, cfg: NearConfig, scope: PersistScope): DataFrame =
     verifiedPairsFromSigs(scope.persist(signalFrame(reps, cfg)), reps, cfg, scope)
 
-  /** Stage 1 — LSH band + SimHash pigeonhole candidates from ONE fused
-    * bucket join. Both recall nets are "equi-join within buckets"; their
-    * bucket keys are disjoint by construction (band rows use idx 0..bands-1,
-    * chunk rows bands..bands+simChunks-1), so unioning the bucket rows and
-    * running a single [[graft.skew.Salting.bucketPairs]] yields exactly the
-    * union of the two joins' pair multisets — at HALF the join machinery
-    * (one bucket-size aggregate, one cold join, one salted hot join instead
-    * of two of each; the round-6 per-stage isolation bench attributed the
-    * candidate tier's cost to exactly this fixed machinery, not the pair
-    * volume). Per-net verification stays pair-local via the carried `knd`
-    * payload: chunk-bucket pairs take the exact Hamming filter, band-bucket
-    * pairs skip it; the byte-sketch prefilter applies to both — all
-    * evaluated inside the join projection (realistic boilerplate at sf0.1:
-    * 555k raw candidates → ~2.3k plausible, never materialized). */
+  /** Stage 1 — LSH band + SimHash pigeonhole candidates from ONE pass of
+    * the in-bucket pair kernel ([[graft.skew.Salting.bucketPairs]]). Both
+    * recall nets are "equi-join within buckets"; each file contributes one
+    * row per band (bidx 0..bands-1) and per SimHash chunk
+    * (bidx bands..bands+simChunks-1), so the bucket keys are disjoint by
+    * construction and one grouping yields exactly the union of the two
+    * nets' pair multisets. A band's key is its `rowsPerBand` signature
+    * values packed two per long (each is below P = 2^31 - 1, so the packing
+    * is exact); a chunk's key is the chunk value. Per-net filters stay
+    * pair-local inside the kernel: chunk buckets take the exact Hamming
+    * bound, band buckets skip it, and both take the byte-sketch prefilter
+    * (cutoff ≥5σ recall-safe, [[NearConfig.sketchMin]]). The raw pairs
+    * never become rows (realistic boilerplate at sf0.1: 555k raw candidates
+    * → ~2.3k plausible). The plan is one exchange for the bucket rows and
+    * the caller's pair `distinct`; `scope` is unused, as nothing in it is
+    * materialized. */
   private[graft] def allCandidates(sigs: DataFrame, cfg: NearConfig,
                                    scope: PersistScope): DataFrame = {
-    val bandRows = bandsOf(sigs, cfg, carryCols = Seq("sk", "simhash"))
-      .select(col("file_id"), col("band_idx").as("bidx"),
-        col("band_key").as("bkey"), col("sk"), col("simhash"),
-        lit(0).as("knd"))
-    val chunkRows = sigs
-      .select(col("file_id"), col("simhash"), col("sk"), simhashChunks(cfg))
-      .select(col("file_id"), (col("pos").cast("long") + cfg.bands).as("bidx"),
-        col("col").cast("string").as("bkey"), col("sk"), col("simhash"),
-        lit(1).as("knd"))
-    Salting.bucketPairs(
-      scope.persist(bandRows.unionAll(chunkRows)),
-      Seq("bidx", "bkey"), "file_id", Seq("sk", "simhash", "knd"),
-      cfg.maxBucket, cfg.hotBucket, cfg.salts, scope)
-      .filter(col("knd_a") === 0 ||
-        expr(s"bit_count(simhash_a ^ simhash_b) <= ${cfg.hammingMax}"))
-      // the byte-sketch prefilter is pair-deterministic, so filtering before
-      // the union-distinct is result-identical to filtering after; cutoff
-      // ≥5σ recall-safe (NearConfig.sketchMin)
-      .filter(NearDupFunctions.sketchAgree(col("sk_a"), col("sk_b")) >= cfg.sketchMin)
-      .select("a", "b")
+    val r = cfg.rowsPerBand
+    val keys = (0 until (r + 1) / 2).map(k => s"k$k")
+    def packed(k: Int) =
+      if (2 * k + 1 < r) s"shiftleft(sig[b * $r + ${2 * k}], 32) | sig[b * $r + ${2 * k + 1}]"
+      else s"sig[b * $r + ${2 * k}]"
+    val w = cfg.simBits / cfg.simChunks
+    val bandKeys = s"transform(sequence(0, ${cfg.bands - 1}), b -> " +
+      s"array(${keys.indices.map(packed).mkString(", ")}))"
+    val chunkKeys = s"transform(sequence(0, ${cfg.simChunks - 1}), c -> " +
+      s"array(${(s"shiftright(simhash, c * $w) & ${(1L << w) - 1}" +: keys.tail.map(_ => "0L")).mkString(", ")}))"
+    val rows = sigs
+      .select(col("file_id"), col("sk"), col("simhash"),
+        posexplode(expr(s"concat($bandKeys, $chunkKeys)")))
+      .select(Seq(col("file_id"), col("sk"), col("simhash"), col("pos").as("bidx")) ++
+        keys.indices.map(k => col("col")(k).as(keys(k))): _*)
+    Salting.bucketPairs(rows, "bidx" +: keys, "file_id", cfg.maxBucket, cfg.hotBucket,
+      hamming = Some("simhash" -> when(col("bidx") >= cfg.bands, cfg.hammingMax).otherwise(-1)),
+      sketch = Some("sk" -> cfg.sketchMin))
   }
 
   /** Stage 2a — shingle arrays for members of plausible pairs ONLY (a tiny

@@ -42,12 +42,12 @@ object Ann {
 
   /** [[cosineQ]] from precomputed squared norms, floored to 6 decimals —
     * the similarity every ranking and threshold below compares. */
-  private def cosR6(a: Column, b: Column, na: Column, nb: Column): Column =
+  private[graft] def cosR6(a: Column, b: Column, na: Column, nb: Column): Column =
     graft.text.TextAnalysis.r6(dotQ(a, b).cast("double") / sqrt((na * nb).cast("double")))
 
   /** The quantize+norm pass: (vec_id, qv = quantized vector, nv = its
     * squared norm). */
-  private def quantized(embeddings: DataFrame): DataFrame =
+  private[graft] def quantized(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .withColumn("nv", dotQ(col("qv"), col("qv")))
 
@@ -333,12 +333,12 @@ object Ann {
     * semantics (blocked, like the text tier's MinHash-LSH): the bucket join
     * is the 100 TB path, and the oracle reproduces the identical blocking.
     *
-    * The bucket self-join goes through [[graft.skew.Salting.bucketPairs]] —
-    * the same cap/salt discipline as the text tier: buckets over `maxBucket`
-    * are dropped with a log line (a bucket holding a large corpus fraction
-    * is all-pairs-shaped work with no discriminative signal), buckets over
-    * `hotBucket` take the salted two-phase join so one hot bucket's
-    * quadratic work spreads across `salts` tasks.
+    * Candidates come from the in-bucket pair kernel
+    * ([[graft.skew.Salting.bucketPairs]]), with the text tier's cap: buckets
+    * over `maxBucket` are dropped with a log line (a bucket holding a large
+    * corpus fraction is all-pairs-shaped work with no discriminative
+    * signal); kept buckets over `hotBucket` are counted in the same line
+    * and pair in place like every other bucket.
     *
     * Recall rises with `tables` and falls with `bits`; at scale pass
     * `bits = bitsFor(n)` so bucket population stays bounded (16×4 ⇒ 0.82
@@ -346,14 +346,11 @@ object Ann {
     * all-pairs baseline in AnnSpec). */
   def cosineDupPairs(embeddings: DataFrame, threshold: Double,
                      tables: Int = 16, bits: Int = 4,
-                     maxBucket: Int = 4096, hotBucket: Int = 512,
-                     salts: Int = 16): DataFrame =
+                     maxBucket: Int = 4096, hotBucket: Int = 512): DataFrame =
     PersistScope.scoped { scope =>
       val v = scope.persist(quantized(embeddings))
-      val buckets = scope.persist(lshBuckets(v, tables, bits).select("vec_id", "t", "sig"))
-      val cands = graft.skew.Salting.bucketPairs(buckets, Seq("t", "sig"),
-        "vec_id", Nil, maxBucket, hotBucket, salts, scope)
-        .select("a", "b").distinct()
+      val cands = graft.skew.Salting.bucketPairs(lshBuckets(v, tables, bits),
+        Seq("t", "sig"), "vec_id", maxBucket, hotBucket).distinct()
       // vectors fetched per candidate (a tiny subset at scale), norms reused
       cands
         .join(v.select(col("vec_id").as("a"), col("qv").as("va"), col("nv").as("na")), Seq("a"))
@@ -362,16 +359,4 @@ object Ann {
         .filter(col("cos") >= threshold)
         .select("a", "b", "cos")
     }
-
-  /** Exact all-pairs cosine baseline (bounded inputs only — the recall
-    * yardstick for [[cosineDupPairs]] in AnnSpec, never the scale path). */
-  def cosineDupPairsExact(embeddings: DataFrame, threshold: Double): DataFrame = {
-    val v = quantized(embeddings)
-    val l = v.select(col("vec_id").as("a"), col("qv").as("va"), col("nv").as("na"))
-    val r = v.select(col("vec_id").as("b"), col("qv").as("vb"), col("nv").as("nb"))
-    l.join(r, col("a") < col("b"))
-      .withColumn("cos", cosR6(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("cos") >= threshold)
-      .select("a", "b", "cos")
-  }
 }

@@ -43,7 +43,7 @@ object Checkpoints {
       "graft.functions.NearDupFunctions$", "graft.functions.HashConstants$",
       "graft.skew.Salting$", "graft.state.Checkpoints$") ++
       Seq("MinHashSignature", "MinHashContent", "ShingleKeys", "SimHash",
-        "SketchBytes", "SketchAgree", "SortedIntersectSize")
+        "SketchBytes", "SketchAgree", "SortedIntersectSize", "BucketPairs")
         .flatMap(c => Seq(s"graft.functions.$c", s"graft.functions.$c$$"))
 
   /** Code-version signal folded into every stage lineage: a digest of the

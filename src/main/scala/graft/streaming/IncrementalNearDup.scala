@@ -13,7 +13,7 @@ import graft.near.{NearConfig, NearDup}
   * the north rule's LSH tier — candidate discovery with latency of one
   * micro-batch instead of a batch rescan.
   *
-  * Bucket state is CAPPED like the batch tier's Salting cap, with the one
+  * Bucket state is CAPPED like the batch tier's bucket cap, with the one
   * semantic divergence streaming forces: the batch cap drops an over-cap
   * bucket RETROACTIVELY (no pairs at all), while a stream cannot retract
   * pairs it already emitted — so an over-cap bucket stops emitting (and
@@ -84,14 +84,11 @@ object IncrementalNearDup {
   private def bandRows(corpus: DataFrame, cfg: NearConfig): DataFrame =
     NearDup.bandsOf(NearDup.signalFrame(NearDup.shingleable(corpus, cfg), cfg), cfg)
 
-  /** Batch twin: the plain band-bucket pair join over the same band rows
-    * (PipelineSpec asserts the stream equals this exactly when no bucket
-    * exceeds the cap). */
+  /** Batch twin: every member pair of each band bucket over the same band
+    * rows, from the in-bucket pair kernel (PipelineSpec asserts the stream
+    * equals this exactly when no bucket exceeds the cap). */
   def batchLshPairs(corpus: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
-    graft.util.PersistScope.scoped { s =>
-      graft.skew.Salting.bucketPairs(
-        s.persist(bandRows(corpus, cfg)), Seq("band_idx", "band_key"),
-        "file_id", Nil, cfg.maxBucket, cfg.hotBucket, cfg.salts, s)
-        .distinct()
-    }
+    graft.util.PersistScope.scoped(_ =>
+      graft.skew.Salting.bucketPairs(bandRows(corpus, cfg), Seq("band_idx", "band_key"),
+        "file_id", cfg.maxBucket, cfg.hotBucket).distinct())
 }

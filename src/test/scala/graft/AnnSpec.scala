@@ -5,6 +5,19 @@ import graft.sim.Ann
 
 class AnnSpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, sf).cache()
+
+  /** Exact all-pairs cosine baseline: the recall yardstick for
+    * `Ann.cosineDupPairs` (bounded inputs only, never the scale path). */
+  private def cosineDupPairsExact(embeddings: org.apache.spark.sql.DataFrame,
+                                  threshold: Double) = {
+    val v = Ann.quantized(embeddings)
+    val l = v.select(col("vec_id").as("a"), col("qv").as("va"), col("nv").as("na"))
+    val r = v.select(col("vec_id").as("b"), col("qv").as("vb"), col("nv").as("nb"))
+    l.join(r, col("a") < col("b"))
+      .withColumn("cos", Ann.cosR6(col("va"), col("vb"), col("na"), col("nb")))
+      .filter(col("cos") >= threshold)
+      .select("a", "b", "cos")
+  }
   private lazy val brute = Ann.bruteForceTopK(emb, 0L until 10L, 5).cache()
 
   test("brute-force top-k: 5 ranked neighbors per query, cos non-increasing") {
@@ -60,7 +73,7 @@ class AnnSpec extends SparkSpec {
     assert(pairs.count() > 0, "threshold must be non-vacuous on the fixture")
     // blocked results are a subset of the exact all-pairs baseline with
     // usable recall (every blocked pair is exact-verified, so precision = 1)
-    val exact = Ann.cosineDupPairsExact(emb, 0.40)
+    val exact = cosineDupPairsExact(emb, 0.40)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val blocked = pairs.select("a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -147,27 +160,26 @@ class AnnSpec extends SparkSpec {
     assert(stored == direct)
   }
 
-  test("planted hot embedding bucket: salted join equals plain, cap drops it") {
+  test("planted hot embedding bucket: hot threshold changes no pair, cap drops it") {
     // 200 copies of vector 0 under fresh ids: identical vectors share EVERY
     // (table, signature) bucket — the embedding analogue of the text tier's
-    // boilerplate family (SkewSpec). Cap/salting must behave identically.
+    // boilerplate family (SkewSpec). Hot buckets pair in place; the cap
+    // drops them.
     val cols = Seq("vec_id", "embedding", "label").map(col)
     val planted = emb.filter(col("vec_id") === 0)
       .crossJoin(spark.range(200).toDF("i"))
       .select((col("i") + 9000000L).as("vec_id") +: cols.tail: _*)
     val skewed = emb.select(cols: _*).unionAll(planted).cache()
-    def pairs(maxBucket: Int, hot: Int, salts: Int): Set[(Long, Long)] =
-      Ann.cosineDupPairs(skewed, 0.40,
-        maxBucket = maxBucket, hotBucket = hot, salts = salts)
+    def pairs(maxBucket: Int, hot: Int): Set[(Long, Long)] =
+      Ann.cosineDupPairs(skewed, 0.40, maxBucket = maxBucket, hotBucket = hot)
         .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val plain = pairs(0, 0, 1)
+    val plain = pairs(0, 0)
     // the family floods its buckets: its C(200,2)-ish pair set is present
     assert(plain.count { case (a, b) => a >= 9000000L && b >= 9000000L } > 19000)
-    // salting is a result-invariant plan rewrite
-    val salted = pairs(0, 8, 4)
-    assert(salted == plain)
+    // hotBucket only sets the skew report's threshold
+    assert(pairs(0, 8) == plain)
     // a biting cap drops the hot buckets (deterministically, both engines)
-    val capped = pairs(64, 8, 4)
+    val capped = pairs(64, 8)
     assert(capped.subsetOf(plain))
     assert(capped.size < plain.size, "cap=64 must bite on the planted family")
     skewed.unpersist()

@@ -18,7 +18,7 @@ class CheckpointSpec extends SparkSpec {
     // nullSafeEval/doGenCode live on the case class, compute on the
     // companion: both produce checkpointed bytes, so both must be hashed
     val exprs = Seq("MinHashSignature", "MinHashContent", "ShingleKeys",
-      "SimHash", "SketchBytes", "SketchAgree", "SortedIntersectSize")
+      "SimHash", "SketchBytes", "SketchAgree", "SortedIntersectSize", "BucketPairs")
     val expected = exprs.flatMap(c =>
       Seq(s"graft.functions.$c", s"graft.functions.$c" + "$"))
     val missing = expected.filterNot(Checkpoints.codeVersionClasses.contains)

@@ -133,6 +133,18 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("live file lookups run a bounded number of jobs") {
+    // the probe row, the same-size rows' digests and the set re-hashed are
+    // three collected reads; the broadcast-probe plan ran 11 jobs
+    for (id <- Seq(0L, uniqueId); flags <- Seq(Nil, Seq("--exclude-path", "mirror/"))) {
+      val args = Seq("file", "--id", id.toString) ++ flags ++ data
+      graft.util.Blocks.sweep(spark)
+      val n = jobsOf(assert(run(args: _*)._1 == 0))
+      info(s"${args.take(3 + flags.size).mkString(" ")}: $n jobs")
+      assert(n <= 5, s"${args.mkString(" ")} ran $n jobs, bound 5")
+    }
+  }
+
   test("file --db --id prints the live lookup's lines") {
     for (id <- Seq(0L, 1000000L, uniqueId, -42L);
          flags <- Seq(Nil, Seq("--exclude-path", "mirror/"), Seq("--cut", "src3/"))) {

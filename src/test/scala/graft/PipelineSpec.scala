@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.text.TextAnalysis
 import graft.mm.Multimodal
 import graft.streaming.EventsStream
+import PipelineSpec._
 
 class PipelineSpec extends SparkSpec {
   private lazy val docs = Tables.documents(spark, sf).cache()
@@ -247,7 +250,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("streaming EXACT distinct users (dedup→agg) equals batch countDistinct") {
-    val q = EventsStream.streamUsersExact(spark, sf, "events_users_test")
+    val q = streamUsersExact(spark, sf, "events_users_test")
     q.processAllAvailable()
     q.stop()
     val streamed = spark.table("events_users_test")
@@ -258,7 +261,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("streaming sessionization (flatMapGroupsWithState) matches batch sessions") {
-    val q = EventsStream.streamSessions(spark, sf, "events_sessions_test")
+    val q = streamSessions(spark, sf, "events_sessions_test")
     q.processAllAvailable()
     q.stop()
     val streamed = spark.table("events_sessions_test")
@@ -395,5 +398,111 @@ class PipelineSpec extends SparkSpec {
     assert(s.filter(col("session_start") > col("session_end")).count() == 0)
     val total = s.agg(sum("n_events")).head().getLong(0)
     assert(total == events.count())
+  }
+}
+
+/** The events table's stream-only twins that only these tests read. */
+object PipelineSpec {
+
+  /** EXACT distinct users per window as a stream: streaming aggregation
+    * cannot hold countDistinct state, but stateful deduplication CAN feed an
+    * aggregation — dedup on (window, event_type, user_id) followed by
+    * count(*) is the standard exact-distinct streaming plan. Closes the
+    * batch ≡ stream gap on n_users (the main stream reports
+    * approx_count_distinct; PipelineSpec asserts both).
+    * dropDuplicatesWithinWatermark (not plain dropDuplicates) so the dedup
+    * state is EVICTABLE once the watermark passes — plain dropDuplicates on
+    * a subset without the event-time column keeps one state row per
+    * (window, type, user) forever, an unbounded-state leak on a real
+    * stream; a duplicate arriving past the watermark belongs to an
+    * already-closed window anyway. */
+  def streamUsersExact(spark: SparkSession, sfDir: String,
+                       queryName: String): StreamingQuery = {
+    val events = spark.readStream
+      .schema(EventsStream.schema)
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(sfDir)
+    val agg = events
+      .withWatermark("ts", "10 minutes")
+      .withColumn("window_start", expr("(unix_timestamp(ts) div 300) * 300"))
+      .dropDuplicatesWithinWatermark("window_start", "event_type", "user_id")
+      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n_users"))
+      .select(unix_timestamp(col("window.start")).cast("long").as("window_start"),
+        col("event_type"), col("n_users"))
+    agg.writeStream
+      .outputMode("complete")
+      .format("memory")
+      .queryName(queryName)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+
+  /** Per-user session state carried across micro-batches: the currently
+    * open session (start/end epoch seconds, event count). */
+  case class OpenSession(start: Long, end: Long, n: Long)
+  case class SessionOut(user_id: Long, session_start: Long,
+                        session_end: Long, n_events: Long)
+
+  /** TRUE streaming sessionization via flatMapGroupsWithState: per-user
+    * custom state (the open session), closed sessions emitted as soon as a
+    * gap > `gapMinutes` is observed, the final open session flushed by
+    * event-time timeout once the watermark passes its gap horizon. The
+    * KeyValueGroupedDataset custom-state path of the training-pipeline
+    * streaming tier; the batch twin is `EventsStream.sessions` (lag/cumsum).
+    *
+    * Within a micro-batch events arrive unordered — the handler sorts the
+    * batch's timestamps before folding them into the state (per-user
+    * per-batch volumes are bounded; out-of-order ACROSS batches is handled
+    * by the watermark exactly as in the windowed agg). */
+  def streamSessions(spark: SparkSession, sfDir: String, queryName: String,
+                     gapMinutes: Int = 30): StreamingQuery = {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val gapSec = gapMinutes * 60L
+    val events = spark.readStream
+      .schema(EventsStream.schema)
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(sfDir)
+      .withWatermark("ts", "10 minutes")
+      .select(col("user_id"), unix_timestamp(col("ts")).as("sec"),
+        col("ts"))
+
+    val out = events.as[(Long, Long, java.sql.Timestamp)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[OpenSession, SessionOut](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (uid, rows, state: GroupState[OpenSession]) =>
+          if (rows.isEmpty && state.hasTimedOut) {
+            // watermark passed the open session's gap horizon: close it
+            val s = state.get
+            state.remove()
+            Iterator(SessionOut(uid, s.start, s.end, s.n))
+          } else {
+            val ts = rows.map(_._2).toArray
+            java.util.Arrays.sort(ts)
+            val closed = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
+            var cur = state.getOption.orNull
+            ts.foreach { t =>
+              cur match {
+                case null => cur = OpenSession(t, t, 1)
+                case s if t - s.end > gapSec =>
+                  closed += SessionOut(uid, s.start, s.end, s.n)
+                  cur = OpenSession(t, t, 1)
+                case s => cur = OpenSession(s.start, math.max(s.end, t), s.n + 1)
+              }
+            }
+            state.update(cur)
+            // flush the open session once the watermark passes end + gap
+            state.setTimeoutTimestamp((cur.end + gapSec) * 1000)
+            closed.iterator
+          }
+      }
+    out.toDF().writeStream
+      .outputMode("append")
+      .format("memory")
+      .queryName(queryName)
+      .trigger(Trigger.AvailableNow())
+      .start()
   }
 }

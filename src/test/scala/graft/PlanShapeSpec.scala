@@ -277,6 +277,43 @@ class PlanShapeSpec extends SparkSpec {
     } finally scope.release()
   }
 
+  test("candidate pairs: one exchange below the pair distinct, no join, at most 6 jobs") {
+    // the in-bucket kernel groups the bucket rows once and pairs inside each
+    // bucket; the salted self-join it replaced planned a size aggregate, a
+    // sort-merge join and a replicated hot side, and ran 14 jobs
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    val cfg = near.NearConfig()
+    val scope = new util.PersistScope
+    try {
+      val reps = scope.persist(near.NearDup.representatives(Tables.corpus(spark, sf), cfg))
+      val sigs = scope.persist(near.NearDup.signalFrame(reps, cfg))
+      val plan = executedPlan(near.NearDup.allCandidates(sigs, cfg, scope).distinct())
+      assert(collectPlan(plan) { case j: SortMergeJoinExec => j }.isEmpty, s"sort-merge join:\n$plan")
+      val exs = collectPlan(plan) { case e: ShuffleExchangeExec => e }
+      assert(exs.nonEmpty && exs.head.child.output.map(_.name) == Seq("a", "b"),
+        s"the top exchange is not the pair distinct's:\n$plan")
+      val below = exs.head.child
+      assert(collectPlan(below) { case e: ShuffleExchangeExec => e }.size == 1,
+        s"expected one exchange below the pair distinct:\n$plan")
+      assert(collectPlan(below) { case j: BaseJoinExec => j }.isEmpty,
+        s"a join below the pair distinct:\n$plan")
+      // one materialization of the pair leaf, as verifiedPairsFromSigs runs it
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        scope.persist(near.NearDup.allCandidates(sigs, cfg, scope).distinct())
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      info(s"allCandidates(...).distinct() materialized in ${jobs.get} jobs")
+      assert(jobs.get <= 6, s"allCandidates(...).distinct() ran ${jobs.get} jobs")
+    } finally scope.release()
+  }
+
   test("repo-root restriction (F5) prunes at the source, not post-scan") {
     // one-file-system roots compile to an isin predicate; on a partitioned
     // layout (repo = Iceberg partition col) this is partition pruning. On

@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
 import graft.near.{NearConfig, NearDup}
 import graft.skew.Salting
 
 /** North-rule skew handling: a planted near-identical boilerplate family
   * (hundreds of members sharing LSH band buckets) must neither stall the
-  * pipeline (salted two-phase pair join) nor silently truncate results
-  * (capped buckets are dropped with a log line). Salting is a plan-level
-  * rewrite: pair sets must be IDENTICAL to the plain bucket self-join. */
+  * pipeline nor silently truncate results (capped buckets are dropped with
+  * a log line). The in-bucket pair kernel must return exactly the pairs a
+  * naive capped bucket self-join followed by the same filters returns. */
 class SkewSpec extends SparkSpec {
 
   private val family = 300
@@ -18,25 +19,44 @@ class SkewSpec extends SparkSpec {
     NearDup.lshPairs(skewed, cfg).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("salted pair generation equals the plain join (uncapped)") {
-    val plain  = pairSet(NearConfig(maxBucket = 0, hotBucket = 0))
-    val salted = pairSet(NearConfig(maxBucket = 0, hotBucket = 4, salts = 4))
-    assert(salted == plain)
-    // the family really is skewed: its members flood shared buckets
-    val familyPairs = plain.count { case (a, b) => a >= 5000000L && b >= 5000000L }
-    assert(familyPairs > family, s"fixture not skewed enough: $familyPairs")
+  /** The `graft_skew_dropped_*` rows observed while `body` runs. */
+  private def skewObservations(body: => Unit): Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.observedMetrics.foreach { case (name, row) =>
+          if (name.startsWith("graft_skew_dropped_")) seen.add(row) }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[org.apache.spark.sql.Row]).toSeq
   }
 
   test("bucket cap drops hot buckets deterministically (and logs)") {
-    val uncapped = pairSet(NearConfig(maxBucket = 0, hotBucket = 16, salts = 4))
-    val capped   = pairSet(NearConfig(maxBucket = 64, hotBucket = 16, salts = 4))
+    val uncapped = pairSet(NearConfig(maxBucket = 0, hotBucket = 8))
+    var capped = Set.empty[(Long, Long)]
+    val obs = skewObservations { capped = pairSet(NearConfig(maxBucket = 64, hotBucket = 8)) }
+    // the family really is skewed: its members flood shared buckets
+    val familyPairs = uncapped.count { case (a, b) => a >= 5000000L && b >= 5000000L }
+    assert(familyPairs > family, s"fixture not skewed enough: $familyPairs")
     assert(capped.subsetOf(uncapped))
     assert(capped.size < uncapped.size, "cap=64 must bite on the skew fixture")
+    // the observation behind the log line: n_dropped, largest, cap (perfbench's
+    // trace reads the first two), kept buckets over hotBucket, largest kept
+    assert(obs.size == 1 && obs.head.length == 5, obs.toString)
+    val row = obs.head
+    assert(row.getLong(0) > 0 && row.getLong(1) > 64 && row.getLong(2) == 64, row.toString)
+    assert(row.getLong(3) > 0 && row.getLong(4) > 8 && row.getLong(4) <= 64, row.toString)
   }
 
   test("cap + salting leave the non-skewed corpus untouched") {
     // default config cap (4096) never triggers at fixture scale: pairs on the
-    // plain corpus equal the fully-uncapped, unsalted run
+    // plain corpus equal the fully-uncapped run with no hot-bucket report
     val corpus = Tables.corpus(spark, sf)
     val withDefaults = NearDup.lshPairs(corpus, NearConfig()).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -46,8 +66,7 @@ class SkewSpec extends SparkSpec {
   }
 
   test("near-dup recall holds on the skewed corpus (family members cluster)") {
-    val verified = NearDup.verifiedPairs(skewed,
-      NearConfig(hotBucket = 16, salts = 4)).cache()
+    val verified = NearDup.verifiedPairs(skewed, NearConfig(hotBucket = 16)).cache()
     // family members are mutual near-dups (shared prefix >> distinct suffix);
     // with the default cap they must be found in volume
     val fam = verified.filter(col("a") >= 5000000L && col("b") >= 5000000L).count()
@@ -57,14 +76,74 @@ class SkewSpec extends SparkSpec {
     assert(baseFork > 0)
   }
 
-  test("Salting.bucketPairs carries payload columns from both sides") {
+  test("property: bucketPairs equals a naive capped self-join with the same filters") {
     import spark.implicits._
-    val df = Seq((1L, "k", 10L), (2L, "k", 20L), (3L, "k", 30L), (4L, "x", 40L))
-      .toDF("file_id", "key", "payload")
-    val pairs = graft.util.PersistScope.using(s =>
-      Salting.bucketPairs(df, Seq("key"), "file_id", Seq("payload"),
-        maxBucket = 0, hotThreshold = 1, salts = 2, scope = s)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet)
-    assert(pairs == Set((1L, 2L, 10L, 20L), (1L, 3L, 10L, 30L), (2L, 3L, 20L, 30L)))
+    val bands = 4 // bidx >= bands: a SimHash chunk bucket (Hamming bound)
+    val hotBucket = 512
+    // one bucket: its key, then each member's (id, simhash, sketch) drawn
+    // from a few values each, so the filters both pass and fail
+    val member: Gen[(Long, Long, Seq[Long])] = for {
+      id <- Gen.choose(-3L, 2000L)
+      sim <- Gen.oneOf(0L, 0xffL, 0x0f0fL)
+      flip <- Gen.choose(0, 6)
+      sk <- Gen.listOfN(2, Gen.oneOf(0L, 0xffL, 0xff00ffL, 0x0102030405060708L))
+    } yield (id, sim ^ ((1L << flip) - 1), sk)
+    def bucket(maxBucket: Int): Gen[(Int, Long, Seq[(Long, Long, Seq[Long])])] = for {
+      n <- Gen.frequency(3 -> Gen.oneOf(1, 2, 3), 3 -> Gen.choose(4, 12),
+        1 -> Gen.oneOf(hotBucket - 1, hotBucket, hotBucket + 1),
+        1 -> (if (maxBucket > 0) Gen.oneOf(maxBucket, maxBucket + 1) else Gen.const(hotBucket + 2)))
+      bidx <- Gen.choose(0, bands + 1)
+      key <- Gen.choose(0L, 3L)
+      ms <- Gen.listOfN(n, member)
+    } yield (bidx, key, ms)
+    val draw = for {
+      maxBucket <- Gen.oneOf(-1, 0, 3, 8, hotBucket + 7)
+      hamming <- Gen.choose(0, 4)
+      sketchMin <- Gen.oneOf(None, Some(9), Some(12))
+      nb <- Gen.choose(1, 4)
+      buckets <- Gen.listOfN(nb, bucket(maxBucket))
+    } yield (maxBucket, hamming, sketchMin, buckets)
+
+    /** The reference: every row pair of each bucket (a self-join on the
+      * key), a < b, no bucket over the cap, then the filters written out
+      * byte by byte. */
+    def naive(maxBucket: Int, hamming: Int, sketchMin: Option[Int],
+              rows: Seq[(Int, Long, Long, Long, Seq[Long])]): Seq[(Long, Long)] =
+      rows.groupBy(r => (r._1, r._2)).values.toSeq
+        .filter(b => maxBucket <= 0 || b.size <= maxBucket)
+        .flatMap(b => for (x <- b; y <- b if x._3 < y._3) yield (x, y))
+        .filter { case (x, y) => x._1 < bands || java.lang.Long.bitCount(x._4 ^ y._4) <= hamming }
+        .filter { case (x, y) => sketchMin.forall(m =>
+          x._5.zip(y._5).map { case (p, q) =>
+            (0 until 8).count(k => ((p >>> (8 * k)) & 0xff) == ((q >>> (8 * k)) & 0xff)) }.sum >= m) }
+        .map { case (x, y) => (x._3, y._3) }.sorted
+
+    var sizes = Set.empty[String]
+    val prop = Prop.forAll(draw) { case (maxBucket, hamming, sketchMin, buckets) =>
+      // a bucket drawn twice under one key is one bucket
+      val rows = buckets.flatMap { case (bidx, key, ms) =>
+        ms.map { case (id, sim, sk) => (bidx, key, id, sim, sk) } }
+      rows.groupBy(r => (r._1, r._2)).values.foreach { b =>
+        val n = b.size
+        sizes += (if (maxBucket > 0 && n > maxBucket) "over cap" else if (n <= 2) s"$n"
+          else if (n < hotBucket) "cold" else if (n == hotBucket) "hot="
+          else if (maxBucket <= 0) "hot, no cap" else "hot <= cap")
+      }
+      val df = rows.toDF("bidx", "key", "file_id", "simhash", "sk")
+      val got = Salting.bucketPairs(df, Seq("bidx", "key"), "file_id", maxBucket, hotBucket,
+          hamming = Some("simhash" -> when(col("bidx") >= bands, hamming).otherwise(-1)),
+          sketch = sketchMin.map("sk" -> _))
+        .as[(Long, Long)].collect().toSeq.sorted
+      val want = naive(maxBucket, hamming, sketchMin, rows)
+      Prop(got == want) :| s"cap $maxBucket hamming $hamming sketch $sketchMin: " +
+        s"${got.size} kernel pairs, ${want.size} naive"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(100)
+      .withInitialSeed(11L).withWorkers(1), prop)
+    info(s"${res.succeeded} cases; bucket sizes seen: ${sizes.toSeq.sorted.mkString(", ")}")
+    assert(res.passed, res.status.toString)
+    assert(res.succeeded >= 100)
+    assert(Seq("1", "2", "cold", "hot=", "hot, no cap", "hot <= cap", "over cap")
+      .forall(sizes.contains), sizes.toString)
   }
 }
