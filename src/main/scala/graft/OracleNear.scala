@@ -7,7 +7,7 @@ package graft
 object OracleNear {
 
   /** CTE chain appended to Oracle.corpusCte. Mirrors, stage for stage:
-    * NearDup.representatives / shingleKeys / MinHashSignature / bands /
+    * NearDup.representatives / shingleKeys / MinHashContent / bands /
     * lshPairs / SimHash / simhashPairs / verifiedPairs / ConnectedComponents.
     * `cap` mirrors NearConfig.maxBucket: band/chunk buckets above it are
     * dropped before pair generation (QUALIFY count OVER bucket <= cap) —

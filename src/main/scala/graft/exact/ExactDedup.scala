@@ -178,7 +178,13 @@ object ExactDedup {
     * the scale path (no giant arrays on hot hashes). The entries below
     * build on this checkpoint leaf, so freeing their result frees it. */
   def duplicates(files: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    PersistScope.scoped(s => setMembers(survivors(files, cfg, s)))
+    PersistScope.scoped(duplicatesIn(files, cfg, _))
+
+  /** [[duplicates]]' plan over a narrow leaf owned by `scope`; the caller
+    * materializes (or writes) it before releasing `scope`. */
+  private[graft] def duplicatesIn(files: DataFrame, cfg: DedupConfig,
+                                  scope: PersistScope): DataFrame =
+    setMembers(survivors(files, cfg, scope))
 
   /** A5 set-level publication — one row per duplicate set with sorted member
     * ids (the relational form of the reference's `\x1C`-joined `paths` TEXT,

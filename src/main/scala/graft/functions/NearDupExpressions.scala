@@ -31,67 +31,6 @@ object HashConstants {
   }
 }
 
-/** 128-perm MinHash signature over a row's distinct-shingle key array —
-  * the signature step of the mandated near-dup tier (BASELINE.json
-  * north_rule; no reference analogue, SURVEY.md §2.10).
-  *
-  * A custom Catalyst expression (with doGenCode, so projections stay inside
-  * whole-stage codegen) rather than a Scala UDF: per-row work is
-  * numPerms × |shingles| multiply-mods, and doing it in one pass over the
-  * shingle array beats a posexplode + groupBy(min) formulation by removing
-  * the shuffle of |shingles| × numPerms rows entirely — the shuffle-free
-  * design the 100 TB target requires.
-  */
-case class MinHashSignature(child: Expression, numPerms: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      MinHashSignature.compute(input.asInstanceOf[ArrayData].toLongArray(), numPerms))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.MinHashSignature.compute($c.toLongArray(), $numPerms));
-         |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
-  import HashConstants._
-
-  // coefficient arrays are per-config constants — computed once per JVM,
-  // not once per row (compute() runs per row on the hot path)
-  private val coeffCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
-  def coefficients(numPerms: Int): (Array[Long], Array[Long]) =
-    coeffCache.computeIfAbsent(numPerms,
-      n => (Array.tabulate(n)(coeffA), Array.tabulate(n)(coeffB)))
-
-  /** One pass over the shingle keys updating all perm minima. */
-  def compute(xs: Array[Long], numPerms: Int): Array[Long] = {
-    val (a, b) = coefficients(numPerms)
-    val sig = Array.fill(numPerms)(P)
-    var i = 0
-    while (i < xs.length) {
-      val x = xs(i) % P
-      var j = 0
-      while (j < numPerms) {
-        val h = HashConstants.modP(a(j) * x + b(j))
-        if (h < sig(j)) sig(j) = h
-        j += 1
-      }
-      i += 1
-    }
-    sig
-  }
-}
-
 /** SimHash over whitespace-separated tokens — the second recall net of the
   * near-dup tier (north_rule "SimHash-64"; 60 effective bits here so every
   * intermediate fits signed-64 in both engines). Token hash is a fixed
@@ -360,8 +299,8 @@ object LshSignatures {
 /** Fused shingle+MinHash: the 128-perm signature computed directly from the
   * content string in one pass — no shingle array, no dedup (min over a
   * multiset equals min over its set), no intermediate allocation beyond the
-  * signature itself. Value-identical to
-  * MinHashSignature(ShingleKeys(content)) — asserted by NearDupSpec — and
+  * signature itself. Value-identical to the per-shingle-array MinHash over
+  * ShingleKeys(content) — NearDupSpec holds that reference form — and
   * ~3× less garbage per row, which is what the 4N-core scaling run is
   * bounded by. */
 case class MinHashContent(child: Expression, numPerms: Int)
@@ -385,13 +324,21 @@ case class MinHashContent(child: Expression, numPerms: Int)
 }
 
 object MinHashContent {
-  import HashConstants.P
+  import HashConstants._
+
+  // coefficient arrays are per-config constants — computed once per JVM,
+  // not once per row (compute() runs per row on the hot path)
+  private val coeffCache =
+    new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
+  def coefficients(numPerms: Int): (Array[Long], Array[Long]) =
+    coeffCache.computeIfAbsent(numPerms,
+      n => (Array.tabulate(n)(coeffA), Array.tabulate(n)(coeffB)))
 
   def compute(s: UTF8String, numPerms: Int): Array[Long] = {
     val cpsHolder = ShingleKeys.codepoints(s)
     val cps = cpsHolder._1
     val n = cpsHolder._2
-    val (a, b) = MinHashSignature.coefficients(numPerms)
+    val (a, b) = coefficients(numPerms)
     val sig = Array.fill(numPerms)(P)
     if (n < 5) return sig
     var i = 0
@@ -454,27 +401,7 @@ object SketchBytes {
 
 /** Count of agreeing bytes between two byte sketches (the MinHash match
   * estimate × numPerms, up to byte collisions). Tight XOR loop, no
-  * allocation. */
-case class SketchAgree(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sketch_agree"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    SketchAgree.compute(
-      l.asInstanceOf[ArrayData].toLongArray(),
-      r.asInstanceOf[ArrayData].toLongArray())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.SketchAgree.compute($l.toLongArray(), $r.toLongArray());")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+  * allocation; the [[BucketPairs]] kernel's sketch prefilter. */
 object SketchAgree {
   private final val Low7 = 0x7f7f7f7f7f7f7f7fL
 
@@ -678,13 +605,11 @@ object DotProductL {
   }
 }
 
-/** Column-side constructors. Registered through the session FunctionRegistry
-  * so `expr("...")` and SQL can reach them too. */
+/** Column-side constructors: the only way to build these expressions. None
+  * is registered in a session's FunctionRegistry, so `expr("...")` and SQL
+  * cannot name them. */
 object NearDupFunctions {
   import org.apache.spark.sql.graftshim.ExprShim
-
-  def minhashSignature(shingles: Column, numPerms: Int): Column =
-    ExprShim.column(MinHashSignature(ExprShim.expression(shingles), numPerms))
 
   def minhashContent(content: Column, numPerms: Int): Column =
     ExprShim.column(MinHashContent(ExprShim.expression(content), numPerms))
@@ -700,9 +625,6 @@ object NearDupFunctions {
 
   def sketchBytes(sig: Column): Column =
     ExprShim.column(SketchBytes(ExprShim.expression(sig)))
-
-  def sketchAgree(a: Column, b: Column): Column =
-    ExprShim.column(SketchAgree(ExprShim.expression(a), ExprShim.expression(b)))
 
   /** [[BucketPairs]] over one bucket's collected `members`, with the
     * bucket's Hamming bound (`hammingMax < 0`: none). */

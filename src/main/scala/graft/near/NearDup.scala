@@ -123,7 +123,8 @@ object NearDup {
       hold(scanned.join(repOf.select(col("rep_id").as("file_id")), Seq("file_id"))))
   }
 
-  /** Representatives with shingles + MinHash signature, computed map-side. */
+  /** Representatives with their shingle key arrays, computed map-side (the
+    * MinHash signature comes from the fused [[signalFrame]]). */
   def signatures(files: DataFrame, cfg: NearConfig = NearConfig()): DataFrame =
     signaturesOf(representatives(files, cfg), cfg)
 
@@ -131,7 +132,6 @@ object NearDup {
     reps
       .withColumn("shingles", shingleKeys("content", cfg.shingleK))
       .filter(size(col("shingles")) > 0)
-      .withColumn("sig", NearDupFunctions.minhashSignature(col("shingles"), cfg.numPerms))
 
   /** LSH banding: signature → (band_idx, band_key) rows; band_key is the
     * comma-joined r signature values (collision-free, no overflow games).

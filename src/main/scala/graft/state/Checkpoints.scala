@@ -1,6 +1,6 @@
 package graft.state
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.PersistScope
 
@@ -18,6 +18,12 @@ import graft.util.PersistScope
   * scale the bucket maps to an Iceberg partition and the manifest to a
   * metadata table; here both are parquet directories.
   *
+  * A computed bucket costs its own write plus one appended manifest row:
+  * its `rows`/`bytes` are observed on that write (nothing is read back),
+  * and a stage reads the manifest once, with its known schema (no
+  * inference job). The manifest keeps its name and format, parquet at
+  * `$root/_metrics`, because the benchmark's traced pass reads it.
+  *
   * A stored bucket is reused ONLY if its recorded lineage — every config
   * field AND a fingerprint of the bucket's input slice — matches the current
   * run. This mirrors dupd's cache invalidation on size/ctime drift
@@ -32,18 +38,20 @@ object Checkpoints {
   /** The classes [[codeVersion]] hashes: the facades AND the expression
     * classes that actually compute stage output bytes — both the case class
     * (its `nullSafeEval`/`doGenCode`) and its companion (the `compute` the
-    * eval path calls). A semantic change to e.g. MinHashSignature leaves the
+    * eval path calls). A semantic change to e.g. MinHashContent leaves the
     * NearDupFunctions facade bytecode unchanged, so hashing facades alone
-    * would serve stale checkpointed buckets. `LshSignatures` and
-    * `DotProductL` are deliberately absent: they feed only [[graft.sim.Ann]],
-    * and no [[runStage]] caller (`exact`, `nearsig`, `nearpairs`) runs Ann,
-    * so they produce no checkpointed bytes. */
+    * would serve stale checkpointed buckets. `SketchAgree` is an object
+    * only (the [[graft.functions.BucketPairs]] kernel calls its `compute`).
+    * `LshSignatures` and `DotProductL` are deliberately absent: they feed
+    * only [[graft.sim.Ann]], and no [[runStage]] caller (`exact`,
+    * `nearsig`, `nearpairs`) runs Ann, so they produce no checkpointed
+    * bytes. */
   private[graft] val codeVersionClasses: Seq[String] =
     Seq("graft.exact.ExactDedup$", "graft.near.NearDup$", "graft.near.NearConfig",
       "graft.functions.NearDupFunctions$", "graft.functions.HashConstants$",
-      "graft.skew.Salting$", "graft.state.Checkpoints$") ++
-      Seq("MinHashSignature", "MinHashContent", "ShingleKeys", "SimHash",
-        "SketchBytes", "SketchAgree", "SortedIntersectSize", "BucketPairs")
+      "graft.functions.SketchAgree$", "graft.skew.Salting$", "graft.state.Checkpoints$") ++
+      Seq("MinHashContent", "ShingleKeys", "SimHash", "SketchBytes",
+        "SortedIntersectSize", "BucketPairs")
         .flatMap(c => Seq(s"graft.functions.$c", s"graft.functions.$c$$"))
 
   /** Code-version signal folded into every stage lineage: a digest of the
@@ -79,6 +87,11 @@ object Checkpoints {
 
   private def metricsPath(root: String) = s"$root/_metrics"
 
+  /** The manifest, read with [[StageMetric]]'s schema (no inference job)
+    * from its part files, listed on the driver. Spark ignores a
+    * `_`-prefixed last path component, so reading the directory logs "All
+    * paths were ignored"; a glob logs a stack trace from the streaming-sink
+    * metadata probe. */
   def readMetrics(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     // existence pre-check: a cold root is the NORMAL first-run case, and
@@ -87,11 +100,13 @@ object Checkpoints {
     // race/corruption backstop
     val p = new org.apache.hadoop.fs.Path(metricsPath(root))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty[StageMetric].toDF()
-    else try spark.read.parquet(metricsPath(root))
-    catch { case _: Exception =>
-      Seq.empty[StageMetric].toDF()
-    }
+    val empty = Seq.empty[StageMetric].toDF()
+    if (!fs.exists(p)) empty
+    else try {
+      val parts = fs.listStatus(p).toSeq.map(_.getPath.toString).filter(_.endsWith(".parquet"))
+      if (parts.isEmpty) empty
+      else spark.read.schema(Encoders.product[StageMetric].schema).parquet(parts: _*)
+    } catch { case _: Exception => empty }
   }
 
   /** Buckets whose LATEST manifest row (manifest rows are append-only; the
@@ -104,36 +119,29 @@ object Checkpoints {
     * finished_at has millisecond resolution, so two runs CAN tie: a bucket
     * is valid only if ALL rows sharing the max finished_at carry the
     * matching lineage — an ambiguous tie (stale + current lineage at the
-    * same timestamp) recomputes rather than trusting either row's bytes. */
+    * same timestamp) recomputes rather than trusting either row's bytes.
+    * The stage has one row per bucket run, so the rule runs on the driver. */
   def validBuckets(spark: SparkSession, root: String, stage: String,
                    nBuckets: Int, lineageOf: Int => String): Set[Int] = {
-    import org.apache.spark.sql.expressions.Window
-    val latest = readMetrics(spark, root)
-      .filter(col("stage") === stage)
-      .withColumn("__mx", max(col("finished_at")).over(Window.partitionBy("bucket")))
-      .filter(col("finished_at") === col("__mx"))
-      .groupBy("bucket").agg(collect_set(col("lineage")).as("lineages"))
-      .collect().map(r => (r.getInt(0), r.getSeq[String](1))).toMap
-    (0 until nBuckets)
-      .filter(b => latest.get(b).exists(ls =>
-        ls.length == 1 && ls.head == lineageOf(b)))
-      .toSet
+    val latest = readMetrics(spark, root).filter(col("stage") === stage)
+      .select("bucket", "lineage", "finished_at").collect()
+      .groupBy(_.getInt(0)).map { case (b, rs) =>
+        val at = rs.map(_.getLong(2)).max
+        b -> rs.filter(_.getLong(2) == at).map(_.getString(1)).distinct.toSeq
+      }
+    (0 until nBuckets).filter(b => latest.get(b).contains(Seq(lineageOf(b)))).toSet
   }
 
   /** Drop a stage's stored buckets + manifest rows (the reference's
     * `cache --delete`, /root/reference/src/cache.c:33-55). Rewrites the
     * metrics table without the stage's rows. */
   def deleteStage(spark: SparkSession, root: String, stage: String): Unit = {
-    val remaining = readMetrics(spark, root).filter(col("stage") =!= stage)
-    val rows = remaining.collect()
+    import spark.implicits._
+    val rows = readMetrics(spark, root).filter(col("stage") =!= stage)
+      .as[StageMetric].collect().toSeq
     deleteDir(new java.io.File(s"$root/$stage"))
     deleteDir(new java.io.File(metricsPath(root)))
-    if (rows.nonEmpty) {
-      import spark.implicits._
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq), remaining.schema)
-        .write.mode(SaveMode.Overwrite).parquet(metricsPath(root))
-    }
+    if (rows.nonEmpty) rows.toDF().write.mode(SaveMode.Overwrite).parquet(metricsPath(root))
   }
 
   private def deleteDir(f: java.io.File): Unit = {
@@ -142,49 +150,44 @@ object Checkpoints {
   }
 
   /** Run `compute(bucket, scope)` for every bucket lacking a lineage-valid
-    * manifest row, persisting each bucket's output and a manifest row;
-    * returns the stage's full output (all buckets, computed now or reused).
-    * `scope` owns the bucket's own intermediates and is released once the
-    * bucket is written. `lineageOf` ties a bucket's output to its input +
-    * config — any drift in either recomputes that bucket. */
+    * manifest row, writing each bucket's output once and appending its
+    * manifest row; returns the stage's full output (all buckets, computed
+    * now or reused). `compute` returns the bucket's plan; `scope` owns the
+    * leaves under it and is released once the bucket is written.
+    * `lineageOf` ties a bucket's output to its input + config — any drift
+    * in either recomputes that bucket. */
   def runStage(spark: SparkSession, root: String, stage: String,
                nBuckets: Int, lineageOf: Int => String,
                onlyBuckets: Option[Set[Int]] = None)
               (compute: (Int, PersistScope) => DataFrame): DataFrame = {
     import spark.implicits._
     val valid = validBuckets(spark, root, stage, nBuckets, lineageOf)
-    val todo = (0 until nBuckets)
-      .filter(b => !valid.contains(b))
-      .filter(b => onlyBuckets.forall(_.contains(b)))
     // a partial resume (onlyBuckets) that excludes stale/invalid buckets
     // yields an INCOMPLETE relation — say so instead of silently omitting
-    val omittedStale = (0 until nBuckets)
-      .filter(b => !valid.contains(b) && onlyBuckets.exists(!_.contains(b)))
+    val (todo, omittedStale) = (0 until nBuckets).filterNot(valid)
+      .partition(b => onlyBuckets.forall(_.contains(b)))
     if (omittedStale.nonEmpty)
       System.err.println(s"[graft.ckpt] stage $stage: partial resume omits " +
         s"stale bucket(s) ${omittedStale.mkString(",")} — output is incomplete " +
         "until they are recomputed")
     todo.foreach { b =>
       val t0 = System.nanoTime()
-      PersistScope.using(s =>
-        compute(b, s).write.mode(SaveMode.Overwrite).parquet(s"$root/$stage/bucket=$b"))
-      val written = spark.read.parquet(s"$root/$stage/bucket=$b")
-      // bytes metric = sum(size) when the stage output carries one (file
-      // relations do; pair relations have no byte dimension — record 0)
-      val bytesCol =
-        if (written.columns.contains("size")) coalesce(sum(col("size")), lit(0L))
-        else lit(0L)
-      val (rows, bytes) = written
-        .agg(count(lit(1)), bytesCol)
-        .as[(Long, Long)].head()
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      Seq(StageMetric(stage, b, rows, bytes, wallMs, lineageOf(b),
-        System.currentTimeMillis())).toDF()
+      val written = Observation()
+      PersistScope.using { s =>
+        val out = compute(b, s)
+        // bytes metric = sum(size) when the stage output carries one (file
+        // relations do; pair relations have no byte dimension — record 0)
+        val bytes = if (out.columns.contains("size")) coalesce(sum(col("size")), lit(0L))
+                    else lit(0L)
+        out.observe(written, count(lit(1)).as("rows"), bytes.as("bytes"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$root/$stage/bucket=$b")
+      }
+      val m = written.get
+      Seq(StageMetric(stage, b, m("rows").asInstanceOf[Long], m("bytes").asInstanceOf[Long],
+        (System.nanoTime() - t0) / 1000000, lineageOf(b), System.currentTimeMillis())).toDF()
         .write.mode(SaveMode.Append).parquet(metricsPath(root))
     }
-    val available = validBuckets(spark, root, stage, nBuckets, lineageOf)
-      .union(todo.toSet)
-    val paths = available.toSeq.sorted.map(b => s"$root/$stage/bucket=$b")
+    val paths = (valid ++ todo).toSeq.sorted.map(b => s"$root/$stage/bucket=$b")
     if (paths.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(paths: _*)
   }
@@ -194,19 +197,14 @@ object Checkpoints {
   private def bucketOf(n: Int): Column = pmod(col("size"), lit(n))
 
   /** Fingerprints of EVERY bucket's input slice in ONE narrow pass (no
-    * content): row count + an order-independent XOR of per-row hashes over
-    * the identity/version columns (XOR never overflows under ANSI
-    * arithmetic; rows are identity-unique so pair-cancellation needs a hash
-    * collision). Drift in membership, size, or commit of any row in a
-    * bucket changes that bucket's fingerprint. Buckets with no rows get the
-    * empty fingerprint. */
-  def inputFingerprints(files: DataFrame, nBuckets: Int): Map[Int, String] =
-    inputFingerprintsBy(files, nBuckets, bucketOf(nBuckets))
-
-  /** [[inputFingerprints]] under an arbitrary bucketing expression (the
-    * near tier buckets by file_id, not size). */
-  def inputFingerprintsBy(files: DataFrame, nBuckets: Int,
-                          bucket: Column): Map[Int, String] = {
+    * content), with `bucket` as the bucketing expression (the exact tier
+    * buckets by size, the near tier by file_id): row count + an
+    * order-independent XOR of per-row hashes over the identity/version
+    * columns (XOR never overflows under ANSI arithmetic; rows are
+    * identity-unique so pair-cancellation needs a hash collision). Drift in
+    * membership, size, or commit of any row in a bucket changes that
+    * bucket's fingerprint. Buckets with no rows get the empty fingerprint. */
+  def inputFingerprints(files: DataFrame, nBuckets: Int, bucket: Column): Map[Int, String] = {
     val rows = files
       .groupBy(bucket.cast("int").as("__b"))
       .agg(
@@ -230,11 +228,10 @@ object Checkpoints {
       s"hidden=${cfg.includeHidden}:alg=${cfg.hashAlg}:nBuckets=$nBuckets"
     // all fingerprints from one narrow aggregate pass; at cluster scale
     // this is one pass over Iceberg manifests, not data
-    val fps: Map[Int, String] = inputFingerprints(files, nBuckets)
+    val fps: Map[Int, String] = inputFingerprints(files, nBuckets, bucketOf(nBuckets))
     runStage(spark, root, "exact", nBuckets,
       b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { (b, s) =>
-      s.track(graft.exact.ExactDedup.duplicates(
-        files.filter(bucketOf(nBuckets) === b), cfg))
+      graft.exact.ExactDedup.duplicatesIn(files.filter(bucketOf(nBuckets) === b), cfg, s)
     }
   }
 
@@ -255,11 +252,11 @@ object Checkpoints {
       s"simBits=${cfg.simBits}:nBuckets=$nBuckets"
     PersistScope.using { scope =>
       val reps = scope.persist(graft.near.NearDup.representatives(files, cfg))
-      val fps = inputFingerprintsBy(reps, nBuckets, pmod(col("file_id"), lit(nBuckets)))
+      val idBucket = pmod(col("file_id"), lit(nBuckets))
+      val fps = inputFingerprints(reps, nBuckets, idBucket)
       runStage(spark, root, "nearsig", nBuckets,
         b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { (b, _) =>
-        graft.near.NearDup.signalFrame(
-          reps.filter(pmod(col("file_id"), lit(nBuckets)) === b), cfg)
+        graft.near.NearDup.signalFrame(reps.filter(idBucket === b), cfg)
       }
     }
   }
@@ -280,9 +277,10 @@ object Checkpoints {
     // case-class toString carries every NearConfig field — any knob that
     // shapes candidates or verification participates in the lineage
     val cfgLineage = s"nearpairs:v1:code=$codeVersion:$cfg"
-    val fps = inputFingerprintsBy(files, 1, lit(0))
+    val fps = inputFingerprints(files, 1, lit(0))
     runStage(spark, root, "nearpairs", 1, b => s"$cfgLineage:fp(${fps(b)})") { (_, s) =>
-      s.track(graft.near.NearDup.verifiedPairs(files, cfg))
+      graft.near.NearDup.verifiedPairsOf(s.persist(graft.near.NearDup.representatives(files, cfg)),
+        cfg, s)
     }
   }
 }

@@ -16,11 +16,12 @@ class CheckpointSpec extends SparkSpec {
 
   test("lineage guard hashes every expression case class and its companion") {
     // nullSafeEval/doGenCode live on the case class, compute on the
-    // companion: both produce checkpointed bytes, so both must be hashed
-    val exprs = Seq("MinHashSignature", "MinHashContent", "ShingleKeys",
-      "SimHash", "SketchBytes", "SketchAgree", "SortedIntersectSize", "BucketPairs")
+    // companion: both produce checkpointed bytes, so both must be hashed;
+    // SketchAgree is an object whose compute the BucketPairs kernel calls
+    val exprs = Seq("MinHashContent", "ShingleKeys",
+      "SimHash", "SketchBytes", "SortedIntersectSize", "BucketPairs")
     val expected = exprs.flatMap(c =>
-      Seq(s"graft.functions.$c", s"graft.functions.$c" + "$"))
+      Seq(s"graft.functions.$c", s"graft.functions.$c" + "$")) :+ "graft.functions.SketchAgree$"
     val missing = expected.filterNot(Checkpoints.codeVersionClasses.contains)
     assert(missing.isEmpty, s"codeVersion does not hash: ${missing.mkString(", ")}")
     Checkpoints.codeVersionClasses.foreach { n =>
@@ -211,6 +212,45 @@ class CheckpointSpec extends SparkSpec {
     val totalRows = m.agg(sum("rows")).head().getLong(0)
     assert(totalRows == ExactDedup.duplicates(corpus, cfg).count())
     assert(m.filter(col("wall_ms") < 0).count() == 0)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("a checkpointed bucket costs its write and one manifest row: job bounds") {
+    // a computed bucket runs its cascade's jobs, the observed write and the
+    // manifest append; nothing is read back and the manifest is read once
+    // per stage (39 / 4 / 13 jobs here). Reading each bucket back, reading
+    // the manifest twice with schema inference and checkpointing each
+    // bucket before its write ran 58 / 9 / 22.
+    val root = freshRoot()
+    corpus.count()
+    def scan(files: org.apache.spark.sql.DataFrame) = jobsOf {
+      Checkpoints.checkpointedDuplicates(spark, files, root, 4, cfg)
+    }
+    def manifestRows() = Checkpoints.readMetrics(spark, root).count()
+    val cold = scan(corpus)
+    val warm = scan(corpus)
+    // drift in one bucket: one file of bucket 0 vanishes
+    val gone = corpus.filter(pmod(col("size"), lit(4)) === 0)
+      .select(min("file_id")).head().getLong(0)
+    val before = manifestRows()
+    val resume = scan(corpus.filter(col("file_id") =!= gone))
+    assert(manifestRows() - before == 1, "the drift must recompute exactly one bucket")
+    assert(cold <= 42 && warm <= 5 && resume <= 14,
+      s"jobs cold=$cold warm=$warm resume=$resume")
   }
 
   test("cold root reads as empty metrics (no analyzer error path)") {

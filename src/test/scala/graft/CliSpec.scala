@@ -183,6 +183,22 @@ class CliSpec extends SparkSpec {
     assert(fields.contains("dbtime"))
   }
 
+  test("cache lists, deletes and rescans a checkpoint root") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_ckpt").toString
+    val scan = Seq("scan", "--checkpoint", root, "--buckets", "4", "--out", s"$root/db") ++ data
+    val (c1, out1) = run(scan: _*)
+    assert(c1 == 0)
+    val exactLines = run("cache", "--checkpoint", root)._2.filter(_.startsWith("exact bucket="))
+    assert(exactLines.length == 4, exactLines.mkString("\n"))
+    val rows = exactLines.map(l => "rows=(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong).sum
+    val direct = graft.exact.ExactDedup.duplicates(Tables.corpus(spark, sf))
+    try assert(rows == direct.count()) finally graft.util.Blocks.free(direct)
+    assert(run("cache", "--checkpoint", root, "--action", "delete", "--stage", "exact")._1 == 0)
+    assert(!run("cache", "--checkpoint", root)._2.exists(_.startsWith("exact")))
+    val (c2, out2) = run(scan: _*)
+    assert(c2 == 0 && out2 == out1)
+  }
+
   test("hash --path equals hash --id, and matches sha256 of the content") {
     val (ci, byId) = run(Seq("hash", "--id", "0") ++ data: _*)
     val (cp, byPath) = run(Seq("hash", "--path", "src0/doc_0.txt") ++ data: _*)

@@ -1,8 +1,63 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import graft.near.{NearConfig, NearDup}
-import graft.functions.{MinHashSignature, SimHash}
+import graft.functions.{HashConstants, MinHashContent, SimHash}
+
+/** The reference form of [[MinHashContent]]: the 128-perm MinHash over a
+  * row's shingle key array, one pass updating every perm minimum. The
+  * engine computes the signature fused from content; this form is what
+  * that fusion must equal. */
+case class MinHashSignature(child: Expression, numPerms: Int)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_signature"
+
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(
+      MinHashSignature.compute(input.asInstanceOf[ArrayData].toLongArray(), numPerms))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.MinHashSignature.compute($c.toLongArray(), $numPerms));
+         |""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSignature {
+  import HashConstants._
+
+  def compute(xs: Array[Long], numPerms: Int): Array[Long] = {
+    val (a, b) = MinHashContent.coefficients(numPerms)
+    val sig = Array.fill(numPerms)(P)
+    var i = 0
+    while (i < xs.length) {
+      val x = xs(i) % P
+      var j = 0
+      while (j < numPerms) {
+        val h = modP(a(j) * x + b(j))
+        if (h < sig(j)) sig(j) = h
+        j += 1
+      }
+      i += 1
+    }
+    sig
+  }
+
+  def column(shingles: Column, numPerms: Int): Column = {
+    import org.apache.spark.sql.graftshim.ExprShim
+    ExprShim.column(MinHashSignature(ExprShim.expression(shingles), numPerms))
+  }
+}
 
 /** North-rule acceptance: dup-pair recall ≥ 0.99 at the reference config
   * (5-gram shingles, MinHash-128, LSH b=16 r=8, SimHash, Jaccard verify).
@@ -106,7 +161,8 @@ class NearDupSpec extends SparkSpec {
 
   test("fused MinHashContent equals MinHashSignature(ShingleKeys(content))") {
     val reps = NearDup.representatives(corpus, cfg)
-    val composed = NearDup.signaturesOf(reps, cfg).select("file_id", "sig")
+    val composed = NearDup.signaturesOf(reps, cfg)
+      .select(col("file_id"), MinHashSignature.column(col("shingles"), cfg.numPerms).as("sig"))
     val fused = NearDup.signalFrame(reps, cfg).select("file_id", "sig")
       .withColumnRenamed("sig", "sig2")
     val diff = composed.join(fused, "file_id")
@@ -116,7 +172,7 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("bands prunes the signal pass to the fused MinHash alone") {
-    import graft.functions.{MinHashContent, SketchBytes}
+    import graft.functions.SketchBytes
     val reps = NearDup.representatives(corpus, cfg)
     val fused = NearDup.bandsOf(reps
       .filter(length(col("content")) >= cfg.shingleK)

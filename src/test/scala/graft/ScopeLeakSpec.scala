@@ -35,7 +35,14 @@ class ScopeLeakSpec extends SparkSpec {
     "ExactDedup.validate" -> (() => ExactDedup.validate(corpus)),
     "ExactDedup.stats" -> (() => ExactDedup.stats(corpus)),
     "Checkpoints.checkpointedDuplicates" -> (() => Checkpoints.checkpointedDuplicates(spark,
-      corpus, java.nio.file.Files.createTempDirectory("graft_leak_ckpt").toString, 8)))
+      corpus, freshRoot(), 8)),
+    "Checkpoints.checkpointedNearSignatures" -> (() => Checkpoints.checkpointedNearSignatures(spark,
+      corpus, freshRoot(), 4)),
+    "Checkpoints.checkpointedVerifiedPairs" -> (() => Checkpoints.checkpointedVerifiedPairs(spark,
+      corpus, freshRoot())))
+
+  private def freshRoot(): String =
+    java.nio.file.Files.createTempDirectory("graft_leak_ckpt").toString
 
   /** Entries whose correct result on the fixture is empty (every emitted
     * set's members are byte-identical). */
