@@ -358,14 +358,15 @@ object MinHashContent {
   }
 }
 
-/** Byte sketch of a MinHash signature: the low byte of each of the
-  * numPerms signature values, packed 8-per-long — 128 perms become 16
-  * longs (136 B), 8× less data than the signature and 18× less than the
-  * shingle array. Jaccard is then estimated by [[SketchAgree]] (count of
-  * agreeing bytes) BEFORE any wide payload is shuffled to a candidate
-  * pair: byte collisions only inflate the estimate (~1/256), so a
-  * recall-safe cutoff keeps every true pair while discarding the bulk of
-  * hamming-collision false candidates map-side. */
+/** 2-bit sketch of a MinHash signature (b-bit minwise hashing, Li & König,
+  * WWW'10): the low 2 bits of each of the numPerms signature values,
+  * packed 32 per long — 128 perms become 4 longs (32 B), 32× less data than
+  * the signature. Jaccard is then estimated by [[SketchAgree]] (count of
+  * agreeing 2-bit fields) inside each candidate bucket, before any pair
+  * becomes a row: a field of two different MinHash values agrees with
+  * probability ~1/4, so agreement follows Binomial(numPerms, J + (1 − J)/4)
+  * and a recall-safe cutoff ([[graft.near.NearConfig.bitSketchMin]]) keeps
+  * every true pair while discarding the bulk of false candidates. */
 case class SketchBytes(child: Expression)
     extends UnaryExpression {
 
@@ -388,33 +389,32 @@ case class SketchBytes(child: Expression)
 
 object SketchBytes {
   def compute(sig: Array[Long]): Array[Long] = {
-    require(sig.length % 8 == 0, s"signature length ${sig.length} not a multiple of 8")
-    val out = new Array[Long](sig.length / 8)
+    require(sig.length % 32 == 0, s"signature length ${sig.length} not a multiple of 32")
+    val out = new Array[Long](sig.length / 32)
     var i = 0
     while (i < sig.length) {
-      out(i >> 3) |= (sig(i) & 0xffL) << ((i & 7) << 3)
+      out(i >> 5) |= (sig(i) & 3L) << ((i & 31) << 1)
       i += 1
     }
     out
   }
 }
 
-/** Count of agreeing bytes between two byte sketches (the MinHash match
-  * estimate × numPerms, up to byte collisions). Tight XOR loop, no
-  * allocation; the [[BucketPairs]] kernel's sketch prefilter. */
+/** Count of agreeing 2-bit fields between two [[SketchBytes]] sketches
+  * (the MinHash match estimate × numPerms, up to 2-bit collisions). Tight
+  * XOR loop, no allocation; the [[BucketPairs]] kernel's sketch prefilter. */
 object SketchAgree {
-  private final val Low7 = 0x7f7f7f7f7f7f7f7fL
+  private final val LowBits = 0x5555555555555555L
 
-  /** Zero bytes of a ^ b, counted 8 at a time: a byte's high bit in
-    * `~((x & Low7) + Low7 | x | Low7)` is set iff the byte is 0, and no
-    * carry crosses a byte ((b & 0x7f) + 0x7f ≤ 0xfe). */
+  /** Zero fields of a ^ b, counted 32 at a time: the low bit of a field in
+    * `~(x | x >>> 1)` is set iff both of the field's bits are 0. */
   def compute(a: Array[Long], b: Array[Long]): Int = {
     val n = math.min(a.length, b.length)
     var agree = 0
     var i = 0
     while (i < n) {
       val x = a(i) ^ b(i)
-      agree += java.lang.Long.bitCount(~(((x & Low7) + Low7) | x | Low7))
+      agree += java.lang.Long.bitCount(~(x | x >>> 1) & LowBits)
       i += 1
     }
     agree
@@ -427,7 +427,8 @@ object SketchAgree {
   * passes the bucket's filters:
   *   - `bit_count(simhash_a ^ simhash_b) <= hammingMax` where the bucket's
   *     `hammingMax` is ≥ 0 (a SimHash chunk bucket; needs `simhash`);
-  *   - `sketch_agree(sk_a, sk_b) >= sketchMin` where members carry `sk`.
+  *   - `sketch_agree(sk_a, sk_b) >= sketchMin` where members carry `sk`
+  *     (agreeing 2-bit fields of two [[SketchBytes]] sketches).
   * Output: `array<struct<a: bigint, b: bigint>>`, one element per passing
   * member pair (pairs of equal ids are skipped), for `inline` to turn into
   * rows.

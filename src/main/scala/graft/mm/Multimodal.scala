@@ -21,7 +21,6 @@ object Multimodal {
 
   /** Typed row for the partition-local decode pass. */
   case class MediaRow(doc_id: Long, format: String, n_bytes: Long, payload: Array[Byte])
-  case class FeatureRow(doc_id: Long, format: String, n_bytes: Long, features: Array[Float])
   case class HistRow(doc_id: Long, bin: Long, n_in_bin: Long)
   case class FrameRow(doc_id: Long, frame_idx: Int, frame_bytes: Array[Byte])
 
@@ -36,9 +35,8 @@ object Multimodal {
       encode(col("text"), "UTF-8").as("payload"))
 
   /** STUB decoder: a real implementation would hand `payload` to an image /
-    * audio codec. This deterministic fake emits a 16-bin byte histogram
-    * normalized to [0,1] — stable across partitionings, so the plumbing is
-    * testable end-to-end. */
+    * audio codec. This deterministic fake emits a 16-bin byte histogram —
+    * stable across partitionings, so the plumbing is testable end-to-end. */
   object FakeDecoder {
     val Bins = 16
     /** Integer byte histogram — the exact (engine-comparable) decode core. */
@@ -51,21 +49,6 @@ object Multimodal {
       }
       hist
     }
-    /** Normalized float features (histogram / n) — the shape a real codec
-      * feature vector has. */
-    def decode(payload: Array[Byte]): Array[Float] = {
-      val n = math.max(payload.length, 1).toFloat
-      histogram(payload).map(_ / n)
-    }
-  }
-
-  /** Partition-local feature extraction (decode stub inside): the batch shape
-    * a vectorized codec UDF would use. */
-  def extractFeatures(spark: SparkSession, media: DataFrame): Dataset[FeatureRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(_.map { r =>
-      FeatureRow(r.doc_id, r.format, r.n_bytes, FakeDecoder.decode(r.payload))
-    })
   }
 
   /** Exact-integer feature view for the correctness gate: one row per
@@ -95,16 +78,9 @@ object Multimodal {
     }
   }
 
-  /** Resize stub: truncate/pad the feature vector — the shape-normalization
-    * step a real resize would perform. */
-  def resizeFeatures(features: Dataset[FeatureRow], dim: Int): DataFrame =
-    features.toDF().select(col("doc_id"),
-      slice(concat(col("features"), array_repeat(lit(0.0f), dim)), 1, dim)
-        .as("features"))
-
-  /** Exact-integer resize view for the gate: the 16-bin histogram resized
-    * to `dim` through the SAME slice/concat/pad expression as
-    * [[resizeFeatures]] (float32 holds the counts exactly — they are
+  /** Resize view for the gate: the 16-bin histogram as a float feature
+    * vector truncated/padded to `dim` (the shape-normalization step a real
+    * resize would perform; float32 holds the counts exactly — they are
     * < 2^24), exploded to (doc_id, dim_idx, n_in_bin) BIGINT rows the
     * DuckDB oracle reproduces. */
   def resizedHistogram(spark: SparkSession, media: DataFrame, dim: Int): DataFrame = {
@@ -133,13 +109,17 @@ object Multimodal {
                      bits_per_sample: Long, n_samples: Long,
                      pcm_sum: Long, pcm_min: Long, pcm_max: Long)
 
-  object Wav {
-    private def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    private def le16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+  // little-endian fields of the WAV and BMP containers: writers for the
+  // synthesizers, and a reader a decoder imports over its container's bytes
+  private def le16(v: Int): Array[Byte] = Array(v.toByte, (v >> 8).toByte)
+  private def le32(v: Int): Array[Byte] = le16(v) ++ le16(v >> 16)
+  private final class LittleEndian(bytes: Array[Byte]) {
+    def u8(i: Int): Int = bytes(i) & 0xff
+    def le16At(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+    def le32At(i: Int): Int = le16At(i) | (le16At(i + 2) << 16)
+  }
 
+  object Wav {
     /** Sample value for text codepoint cp: low byte spread over the full
       * signed-16 range (255*257-32768 = 32767). Codepoints (mod 256), NOT
       * UTF-8 bytes: the oracle recomputes samples via ascii(substr(text,i))
@@ -177,10 +157,8 @@ object Multimodal {
       * samples of `data` into exact-integer stats. Throws on malformed
       * containers (truncated, bad magic, missing chunks). */
     def decode(docId: Long, wav: Array[Byte]): WavInfo = {
-      def u8(i: Int): Int = wav(i) & 0xff
-      def le32At(i: Int): Int =
-        u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-      def le16At(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+      val in = new LittleEndian(wav)
+      import in._
       def tag(i: Int): String = new String(wav, i, 4, "US-ASCII")
       require(wav.length >= 12 && tag(0) == "RIFF" && tag(8) == "WAVE",
         s"doc $docId: not a RIFF/WAVE container")
@@ -242,12 +220,6 @@ object Multimodal {
                      px_min: Long, px_max: Long, b_weighted: Long)
 
   object Bmp {
-    private def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    private def le16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-
     /** Channel values for text codepoint cp (codepoints, not UTF-8 bytes —
       * same oracle-parity rule as [[Wav.sampleOf]]). */
     def bOf(cp: Int): Int = cp & 0xff
@@ -295,10 +267,8 @@ object Multimodal {
       * (positive height = bottom-up, negative = top-down), and folds every
       * pixel into exact-integer stats. Throws on malformed containers. */
     def decode(docId: Long, bmp: Array[Byte]): BmpInfo = {
-      def u8(i: Int): Int = bmp(i) & 0xff
-      def le32At(i: Int): Int =
-        u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-      def le16At(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+      val in = new LittleEndian(bmp)
+      import in._
       require(bmp.length >= 54 && bmp(0) == 'B'.toByte && bmp(1) == 'M'.toByte,
         s"doc $docId: not a BMP container")
       val pixelOffset = le32At(10)

@@ -36,16 +36,30 @@ final case class NearConfig(
     hotBucket: Int = 512) {
   require(bands * rowsPerBand == numPerms, "bands × rowsPerBand must equal numPerms")
   require(simChunks * (simBits / simChunks) == simBits)
-  require(numPerms % 8 == 0, "byte sketch packs 8 signature bytes per long")
+  require(numPerms % 32 == 0, "2-bit sketch packs 32 signature values per long")
 
-  /** Recall-safe byte-sketch cutoff for candidate prefiltering: a pair at
-    * exactly `jaccardThreshold` has agree ~ Binomial(numPerms, j); cutting
-    * 5σ below the mean keeps true pairs with probability 1 - ~3e-7 (byte
-    * collisions only ADD agreement). At j=0.7, p=128: 89.6 - 5·5.2 → 63. */
-  def sketchMin: Int = {
+  /** The frozen oracle's byte-sketch cutoff (`OracleNear` compares the low
+    * BYTE of each signature value): a pair at exactly `jaccardThreshold`
+    * has byte agreement ~ Binomial(numPerms, j); cutting 5σ below the mean
+    * keeps true pairs with probability 1 - ~3e-7 (byte collisions only ADD
+    * agreement). At j=0.7, p=128: 89.6 - 5·5.2 → 63. The engine prefilters
+    * with the 2-bit sketch and [[bitSketchMin]] instead. */
+  def sketchMin: Int = cutoff(jaccardThreshold)
+
+  /** Recall-safe cutoff of the engine's 2-bit sketch prefilter
+    * ([[graft.functions.SketchBytes]]): two different MinHash values agree
+    * in their low 2 bits with probability ~1/4, so a pair at exactly
+    * `jaccardThreshold` agrees in ~ Binomial(numPerms, j + (1 − j)/4)
+    * fields; the cutoff is 5σ below that mean. At j=0.7, p=128:
+    * 99.2 - 5·4.7 → 75. */
+  def bitSketchMin: Int = {
     val j = jaccardThreshold
-    math.max(0, (numPerms * j - 5 * math.sqrt(numPerms * j * (1 - j))).floor.toInt)
+    cutoff(j + (1 - j) / 4)
   }
+
+  /** 5σ below the mean of Binomial(numPerms, p), floored at 0. */
+  private def cutoff(p: Double): Int =
+    math.max(0, (numPerms * p - 5 * math.sqrt(numPerms * p * (1 - p))).floor.toInt)
 }
 
 /** The mandated near-duplicate tier (BASELINE.json north_rule): shingling →
@@ -202,7 +216,7 @@ object NearDup {
       verifiedPairsOf(s.persist(representatives(files, cfg)), cfg, s))
 
   /** ONE content pass computing every per-row signal the candidate tier
-    * needs — MinHash signature, SimHash, 136 B byte sketch (+ size for the
+    * needs — MinHash signature, SimHash, 32 B 2-bit sketch (+ size for the
     * checkpoint metrics). THE wall-clock-dominant map pass at corpus scale,
     * which is why it is also the near tier's checkpoint unit
     * ([[graft.state.Checkpoints.checkpointedNearSignatures]]). */
@@ -226,37 +240,32 @@ object NearDup {
     * recall nets are "equi-join within buckets"; each file contributes one
     * row per band (bidx 0..bands-1) and per SimHash chunk
     * (bidx bands..bands+simChunks-1), so the bucket keys are disjoint by
-    * construction and one grouping yields exactly the union of the two
-    * nets' pair multisets. A band's key is its `rowsPerBand` signature
-    * values packed two per long (each is below P = 2^31 - 1, so the packing
-    * is exact); a chunk's key is the chunk value. Per-net filters stay
-    * pair-local inside the kernel: chunk buckets take the exact Hamming
-    * bound, band buckets skip it, and both take the byte-sketch prefilter
-    * (cutoff ≥5σ recall-safe, [[NearConfig.sketchMin]]). The raw pairs
-    * never become rows (realistic boilerplate at sf0.1: 555k raw candidates
-    * → ~2.3k plausible). The plan is one exchange for the bucket rows and
-    * the caller's pair `distinct`; `scope` is unused, as nothing in it is
+    * construction and one grouping yields the union of the two nets' pair
+    * multisets. A bucket row is (file_id, sk, simhash, bidx, k): a band's
+    * key `k` is `xxhash64` of its `rowsPerBand` signature values, a chunk's
+    * is the chunk value. A band-key collision can only merge buckets, so it
+    * adds candidates and never drops one; the filters below and the exact
+    * verify judge them. Per-net filters stay pair-local inside the kernel:
+    * chunk buckets take the exact Hamming bound, band buckets skip it, and
+    * both take the 2-bit sketch prefilter (cutoff ≥5σ recall-safe,
+    * [[NearConfig.bitSketchMin]]). The raw pairs never become rows
+    * (realistic boilerplate at sf0.1: 555k raw candidates → ~2.3k
+    * plausible). The plan is one exchange for the bucket rows and the
+    * caller's pair `distinct`; `scope` is unused, as nothing in it is
     * materialized. */
   private[graft] def allCandidates(sigs: DataFrame, cfg: NearConfig,
                                    scope: PersistScope): DataFrame = {
-    val r = cfg.rowsPerBand
-    val keys = (0 until (r + 1) / 2).map(k => s"k$k")
-    def packed(k: Int) =
-      if (2 * k + 1 < r) s"shiftleft(sig[b * $r + ${2 * k}], 32) | sig[b * $r + ${2 * k + 1}]"
-      else s"sig[b * $r + ${2 * k}]"
-    val w = cfg.simBits / cfg.simChunks
-    val bandKeys = s"transform(sequence(0, ${cfg.bands - 1}), b -> " +
-      s"array(${keys.indices.map(packed).mkString(", ")}))"
-    val chunkKeys = s"transform(sequence(0, ${cfg.simChunks - 1}), c -> " +
-      s"array(${(s"shiftright(simhash, c * $w) & ${(1L << w) - 1}" +: keys.tail.map(_ => "0L")).mkString(", ")}))"
+    val (r, w) = (cfg.rowsPerBand, cfg.simBits / cfg.simChunks)
+    val keys = s"concat(transform(sequence(0, ${cfg.bands - 1}), " +
+      s"b -> xxhash64(slice(sig, b * $r + 1, $r))), " +
+      s"transform(sequence(0, ${cfg.simChunks - 1}), " +
+      s"c -> shiftright(simhash, c * $w) & ${(1L << w) - 1}))"
     val rows = sigs
-      .select(col("file_id"), col("sk"), col("simhash"),
-        posexplode(expr(s"concat($bandKeys, $chunkKeys)")))
-      .select(Seq(col("file_id"), col("sk"), col("simhash"), col("pos").as("bidx")) ++
-        keys.indices.map(k => col("col")(k).as(keys(k))): _*)
-    Salting.bucketPairs(rows, "bidx" +: keys, "file_id", cfg.maxBucket, cfg.hotBucket,
+      .select(col("file_id"), col("sk"), col("simhash"), posexplode(expr(keys)))
+      .select(col("file_id"), col("sk"), col("simhash"), col("pos").as("bidx"), col("col").as("k"))
+    Salting.bucketPairs(rows, Seq("bidx", "k"), "file_id", cfg.maxBucket, cfg.hotBucket,
       hamming = Some("simhash" -> when(col("bidx") >= cfg.bands, cfg.hammingMax).otherwise(-1)),
-      sketch = Some("sk" -> cfg.sketchMin))
+      sketch = Some("sk" -> cfg.bitSketchMin))
   }
 
   /** Stage 2a — shingle arrays for members of plausible pairs ONLY (a tiny

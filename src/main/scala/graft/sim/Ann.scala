@@ -72,14 +72,14 @@ object Ann {
 
   /** Each `key`'s `n` best-scoring rows by `score` desc, ties toward the
     * lower `tie`, ranked 1..n in `rank`. */
-  private def topBy(df: DataFrame, key: String, score: String, tie: String,
-                    n: Int): DataFrame =
+  private[graft] def topBy(df: DataFrame, key: String, score: String, tie: String,
+                           n: Int): DataFrame =
     df.withColumn("rank", row_number().over(
         Window.partitionBy(key).orderBy(col(score).desc, col(tie))).cast("long"))
       .filter(col("rank") <= n)
 
   /** The k nearest neighbors per query from (query_id, neighbor_id, cos). */
-  private def topK(scored: DataFrame, k: Int): DataFrame =
+  private[graft] def topK(scored: DataFrame, k: Int): DataFrame =
     topBy(scored, "query_id", "cos", "neighbor_id", k)
       .select("query_id", "rank", "neighbor_id", "cos")
 
@@ -259,48 +259,6 @@ object Ann {
   def ivfLists(spark: org.apache.spark.sql.SparkSession, dir: String,
                cids: Seq[Long]): DataFrame =
     spark.read.parquet(s"$dir/lists").filter(col("cid").isin(cids: _*))
-
-  /** Top-k probe against the STORED layout: score queries against the K
-    * stored centroids, resolve the nProbe list ids (a tiny driver-side
-    * collect — nQueries × nProbe longs, the literals partition pruning
-    * needs), then search exactly within only those lists. Returns the same
-    * relation shape as [[ivfTopK]] and — by construction, same centroid
-    * rule — the same rows. */
-  def ivfProbeStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     queryIds: Seq[Long], k: Int, nProbe: Int = 3): DataFrame = {
-    import spark.implicits._
-    val cent = spark.read.parquet(s"$dir/centroids")
-    // validate the stored layout before trusting it: a dir written under a
-    // different centroid rule or nLists must FAIL, not return different
-    // neighbors. Older dirs without meta are rejected too (re-write them).
-    val meta = try spark.read.parquet(s"$dir/meta").collect()
-      catch { case _: Exception => Array.empty[org.apache.spark.sql.Row] }
-    require(meta.nonEmpty, s"$dir has no IVF layout metadata — " +
-      "re-run writeIvfIndex (refusing to probe an unversioned layout)")
-    val (ver, nLists) = (meta(0).getAs[String]("layout_version"),
-      meta(0).getAs[Int]("n_lists"))
-    require(ver == IvfLayoutVersion,
-      s"$dir layout version '$ver' != expected '$IvfLayoutVersion'")
-    val nCent = cent.count()
-    require(nCent == nLists,
-      s"$dir stores $nCent centroids but meta says nLists=$nLists")
-    val q = spark.read.parquet(s"$dir/lists")
-      .filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("qv").as("qa"), col("nv").as("na"))
-    val probeRows = topBy(q.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosR6(col("qa"), col("cv"), col("na"), col("cn"))),
-        "query_id", "ccos", "cid", nProbe)
-      .select(col("query_id"), col("cid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val probePairs = probeRows.toSeq.toDF("query_id", "cid")
-    val cands = ivfLists(spark, dir, probeRows.map(_._2).distinct.toSeq)
-      .join(broadcast(probePairs), Seq("cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("qv").as("qb"), col("nv").as("nb"))
-    topK(cands.join(q, Seq("query_id"))
-      .withColumn("cos", cosR6(col("qa"), col("qb"), col("na"), col("nb"))), k)
-  }
 
   /** L2 norm (quantized, exact) per vector. */
   def norms(embeddings: DataFrame): DataFrame =

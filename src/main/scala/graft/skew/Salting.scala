@@ -76,8 +76,9 @@ object Salting {
     *   - `hamming = Some((simhashCol, bound))`: the pair's simhashes differ
     *     in at most `bound` bits, where `bound` (evaluated over the key
     *     columns) is ≥ 0; a negative bound skips the test for that bucket;
-    *   - `sketch = Some((skCol, sketchMin))`: the byte sketches agree in at
-    *     least `sketchMin` bytes.
+    *   - `sketch = Some((skCol, sketchMin))`: the 2-bit sketches
+    *     ([[graft.functions.SketchBytes]]) agree in at least `sketchMin`
+    *     fields.
     * Output (a, b) may contain the same pair via several buckets — callers
     * dedup (`.distinct()`), exactly as with a plain bucket self-join. Rows
     * with a null key are in no bucket. */

@@ -1,7 +1,8 @@
 package graft.state
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.util.PersistScope
 
 /** Per-partition checkpointing + lineage + metrics — the Spark-native role
@@ -20,9 +21,10 @@ import graft.util.PersistScope
   *
   * A computed bucket costs its own write plus one appended manifest row:
   * its `rows`/`bytes` are observed on that write (nothing is read back),
-  * and a stage reads the manifest once, with its known schema (no
-  * inference job). The manifest keeps its name and format, parquet at
-  * `$root/_metrics`, because the benchmark's traced pass reads it.
+  * and a stage reads the manifest once and its buckets once, each with its
+  * known schema (no inference job). The manifest keeps its name and
+  * format, parquet at `$root/_metrics`, because the benchmark's traced
+  * pass reads it.
   *
   * A stored bucket is reused ONLY if its recorded lineage — every config
   * field AND a fingerprint of the bucket's input slice — matches the current
@@ -152,12 +154,14 @@ object Checkpoints {
   /** Run `compute(bucket, scope)` for every bucket lacking a lineage-valid
     * manifest row, writing each bucket's output once and appending its
     * manifest row; returns the stage's full output (all buckets, computed
-    * now or reused). `compute` returns the bucket's plan; `scope` owns the
-    * leaves under it and is released once the bucket is written.
-    * `lineageOf` ties a bucket's output to its input + config — any drift
-    * in either recomputes that bucket. */
+    * now or reused), read with `schema` — the stage's output schema — so
+    * no inference job runs; with no bucket, an empty frame of `schema`.
+    * `compute` returns the bucket's plan; `scope` owns the leaves under it
+    * and is released once the bucket is written. `lineageOf` ties a
+    * bucket's output to its input + config — any drift in either
+    * recomputes that bucket. */
   def runStage(spark: SparkSession, root: String, stage: String,
-               nBuckets: Int, lineageOf: Int => String,
+               nBuckets: Int, lineageOf: Int => String, schema: StructType,
                onlyBuckets: Option[Set[Int]] = None)
               (compute: (Int, PersistScope) => DataFrame): DataFrame = {
     import spark.implicits._
@@ -188,8 +192,8 @@ object Checkpoints {
         .write.mode(SaveMode.Append).parquet(metricsPath(root))
     }
     val paths = (valid ++ todo).toSeq.sorted.map(b => s"$root/$stage/bucket=$b")
-    if (paths.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(paths: _*)
+    if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Bucket predicate: all grouping keys downstream contain `size`, so the
@@ -229,8 +233,8 @@ object Checkpoints {
     // all fingerprints from one narrow aggregate pass; at cluster scale
     // this is one pass over Iceberg manifests, not data
     val fps: Map[Int, String] = inputFingerprints(files, nBuckets, bucketOf(nBuckets))
-    runStage(spark, root, "exact", nBuckets,
-      b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { (b, s) =>
+    runStage(spark, root, "exact", nBuckets, b => s"$cfgLineage:fp(${fps(b)})",
+      graft.exact.ExactDedup.DuplicatesSchema, onlyBuckets) { (b, s) =>
       graft.exact.ExactDedup.duplicatesIn(files.filter(bucketOf(nBuckets) === b), cfg, s)
     }
   }
@@ -254,8 +258,8 @@ object Checkpoints {
       val reps = scope.persist(graft.near.NearDup.representatives(files, cfg))
       val idBucket = pmod(col("file_id"), lit(nBuckets))
       val fps = inputFingerprints(reps, nBuckets, idBucket)
-      runStage(spark, root, "nearsig", nBuckets,
-        b => s"$cfgLineage:fp(${fps(b)})", onlyBuckets) { (b, _) =>
+      runStage(spark, root, "nearsig", nBuckets, b => s"$cfgLineage:fp(${fps(b)})",
+        graft.near.NearDup.signalFrame(reps, cfg).schema, onlyBuckets) { (b, _) =>
         graft.near.NearDup.signalFrame(reps.filter(idBucket === b), cfg)
       }
     }
@@ -278,7 +282,8 @@ object Checkpoints {
     // shapes candidates or verification participates in the lineage
     val cfgLineage = s"nearpairs:v1:code=$codeVersion:$cfg"
     val fps = inputFingerprints(files, 1, lit(0))
-    runStage(spark, root, "nearpairs", 1, b => s"$cfgLineage:fp(${fps(b)})") { (_, s) =>
+    runStage(spark, root, "nearpairs", 1, b => s"$cfgLineage:fp(${fps(b)})",
+      StructType.fromDDL("a BIGINT, b BIGINT, jaccard DOUBLE")) { (_, s) =>
       graft.near.NearDup.verifiedPairsOf(s.persist(graft.near.NearDup.representatives(files, cfg)),
         cfg, s)
     }

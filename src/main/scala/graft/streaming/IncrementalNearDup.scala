@@ -23,7 +23,7 @@ import graft.near.{NearConfig, NearDup}
   *
   * Pairs may surface via several bands, exactly like the batch bucket
   * join — consumers dedup (`.dropDuplicates`/`distinct`), same contract.
-  * Downstream verification (byte-sketch prefilter + exact Jaccard) is the
+  * Downstream verification (2-bit sketch prefilter + exact Jaccard) is the
   * batch path over the candidate stream's sink.
   */
 object IncrementalNearDup {

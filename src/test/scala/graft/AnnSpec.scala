@@ -20,6 +20,49 @@ class AnnSpec extends SparkSpec {
   }
   private lazy val brute = Ann.bruteForceTopK(emb, 0L until 10L, 5).cache()
 
+  /** Top-k probe against the STORED layout: score queries against the K
+    * stored centroids, resolve the nProbe list ids (a tiny driver-side
+    * collect — nQueries × nProbe longs, the literals partition pruning
+    * needs), then search exactly within only those lists. Returns the same
+    * relation shape as [[Ann.ivfTopK]] and — by construction, same centroid
+    * rule — the same rows; a reference reader of the layout
+    * [[Ann.writeIvfIndex]] stores. */
+  private def ivfProbeStored(dir: String, queryIds: Seq[Long], k: Int,
+                             nProbe: Int = 3): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val cent = spark.read.parquet(s"$dir/centroids")
+    // validate the stored layout before trusting it: a dir written under a
+    // different centroid rule or nLists must FAIL, not return different
+    // neighbors. Older dirs without meta are rejected too (re-write them).
+    val meta = try spark.read.parquet(s"$dir/meta").collect()
+      catch { case _: Exception => Array.empty[org.apache.spark.sql.Row] }
+    require(meta.nonEmpty, s"$dir has no IVF layout metadata — " +
+      "re-run writeIvfIndex (refusing to probe an unversioned layout)")
+    val (ver, nLists) = (meta(0).getAs[String]("layout_version"),
+      meta(0).getAs[Int]("n_lists"))
+    require(ver == Ann.IvfLayoutVersion,
+      s"$dir layout version '$ver' != expected '${Ann.IvfLayoutVersion}'")
+    val nCent = cent.count()
+    require(nCent == nLists,
+      s"$dir stores $nCent centroids but meta says nLists=$nLists")
+    val q = spark.read.parquet(s"$dir/lists")
+      .filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("qv").as("qa"), col("nv").as("na"))
+    val probeRows = Ann.topBy(q.crossJoin(broadcast(cent))
+        .withColumn("ccos", Ann.cosR6(col("qa"), col("cv"), col("na"), col("cn"))),
+        "query_id", "ccos", "cid", nProbe)
+      .select(col("query_id"), col("cid"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val probePairs = probeRows.toSeq.toDF("query_id", "cid")
+    val cands = Ann.ivfLists(spark, dir, probeRows.map(_._2).distinct.toSeq)
+      .join(broadcast(probePairs), Seq("cid"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("qv").as("qb"), col("nv").as("nb"))
+    Ann.topK(cands.join(q, Seq("query_id"))
+      .withColumn("cos", Ann.cosR6(col("qa"), col("qb"), col("na"), col("nb"))), k)
+  }
+
   test("brute-force top-k: 5 ranked neighbors per query, cos non-increasing") {
     val rows = brute.collect()
     assert(rows.length == 50)
@@ -153,7 +196,7 @@ class AnnSpec extends SparkSpec {
       s"probe reads more than ~2/$listDirs of the files: $prunedFiles vs $allFiles")
     // and the stored-layout probe returns exactly what the in-memory IVF
     // query returns (same centroid rule, same candidates, same ranks)
-    val stored = Ann.ivfProbeStored(spark, dir, 0L until 10L, 5)
+    val stored = ivfProbeStored(dir, 0L until 10L, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val direct = Ann.ivfTopK(emb, 0L until 10L, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -50,7 +50,7 @@ class PipelineSpec extends SparkSpec {
 
   test("multimodal: stub features are 16-bin normalized histograms") {
     val media = Multimodal.asMedia(docs)
-    val feats = Multimodal.extractFeatures(spark, media)
+    val feats = extractFeatures(spark, media)
     val checked = feats.toDF()
       .select(size(col("features")).as("n"),
         expr("aggregate(features, 0D, (a, x) -> a + x)").as("s"))
@@ -403,6 +403,22 @@ class PipelineSpec extends SparkSpec {
 
 /** The events table's stream-only twins that only these tests read. */
 object PipelineSpec {
+
+  case class FeatureRow(doc_id: Long, format: String, n_bytes: Long, features: Array[Float])
+
+  /** Partition-local feature extraction over the stub decoder: each
+    * payload's 16-bin histogram normalized to [0,1] (histogram / n) — the
+    * batch shape and feature-vector shape a vectorized codec UDF would
+    * use. */
+  def extractFeatures(spark: SparkSession,
+                      media: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Dataset[FeatureRow] = {
+    import spark.implicits._
+    media.as[Multimodal.MediaRow].mapPartitions(_.map { r =>
+      val n = math.max(r.payload.length, 1).toFloat
+      FeatureRow(r.doc_id, r.format, r.n_bytes,
+        Multimodal.FakeDecoder.histogram(r.payload).map(_ / n))
+    })
+  }
 
   /** EXACT distinct users per window as a stream: streaming aggregation
     * cannot hold countDistinct state, but stateful deduplication CAN feed an

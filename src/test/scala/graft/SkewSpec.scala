@@ -99,23 +99,29 @@ class SkewSpec extends SparkSpec {
     val draw = for {
       maxBucket <- Gen.oneOf(-1, 0, 3, 8, hotBucket + 7)
       hamming <- Gen.choose(0, 4)
-      sketchMin <- Gen.oneOf(None, Some(9), Some(12))
+      sketchMin <- Gen.oneOf(None, Some(50), Some(58))
       nb <- Gen.choose(1, 4)
       buckets <- Gen.listOfN(nb, bucket(maxBucket))
     } yield (maxBucket, hamming, sketchMin, buckets)
 
+    /** Equal 2-bit fields of two sketches, field by field (32 per long). */
+    def agree(x: Seq[Long], y: Seq[Long]): Int = x.zip(y).map { case (p, q) =>
+      (0 until 32).count(k => ((p >>> (2 * k)) & 3) == ((q >>> (2 * k)) & 3)) }.sum
+    var sketchOutcomes = Set.empty[Boolean]
+
     /** The reference: every row pair of each bucket (a self-join on the
       * key), a < b, no bucket over the cap, then the filters written out
-      * byte by byte. */
+      * one by one. */
     def naive(maxBucket: Int, hamming: Int, sketchMin: Option[Int],
               rows: Seq[(Int, Long, Long, Long, Seq[Long])]): Seq[(Long, Long)] =
       rows.groupBy(r => (r._1, r._2)).values.toSeq
         .filter(b => maxBucket <= 0 || b.size <= maxBucket)
         .flatMap(b => for (x <- b; y <- b if x._3 < y._3) yield (x, y))
         .filter { case (x, y) => x._1 < bands || java.lang.Long.bitCount(x._4 ^ y._4) <= hamming }
-        .filter { case (x, y) => sketchMin.forall(m =>
-          x._5.zip(y._5).map { case (p, q) =>
-            (0 until 8).count(k => ((p >>> (8 * k)) & 0xff) == ((q >>> (8 * k)) & 0xff)) }.sum >= m) }
+        .filter { case (x, y) => sketchMin.forall { m =>
+          val pass = agree(x._5, y._5) >= m
+          sketchOutcomes += pass
+          pass } }
         .map { case (x, y) => (x._3, y._3) }.sorted
 
     var sizes = Set.empty[String]
@@ -145,5 +151,7 @@ class SkewSpec extends SparkSpec {
     assert(res.succeeded >= 100)
     assert(Seq("1", "2", "cold", "hot=", "hot, no cap", "hot <= cap", "over cap")
       .forall(sizes.contains), sizes.toString)
+    // the sketch cutoffs both keep and reject pairs of 64-field sketches
+    assert(sketchOutcomes == Set(true, false), sketchOutcomes.toString)
   }
 }
