@@ -4,47 +4,33 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.util.PersistScope
 
-/** Connected components over DataFrame joins by the alternating
-  * large-star / small-star algorithm (Kiveris et al., "Connected Components
-  * in MapReduce and Beyond", SoCC'14) — the clustering step of the near-dup
-  * tier (north_rule; no GraphX/RDD per input_hint).
+/** Connected components of the verified-pair graph — the clustering step
+  * of the near-dup tier (north_rule; no GraphX/RDD per input_hint): every
+  * vertex is labelled with the MINIMUM id reachable from it. The edge count
+  * read picks one of two paths (no setting does):
   *
-  * Each operation rewrites the edge set with two shuffles (a per-node min
-  * aggregation + an equi-join back):
-  *
-  *   - large-star: every node connects its strictly-larger neighbors to the
-  *     minimum of its closed neighborhood — long paths halve;
-  *   - small-star: every node connects its smaller-or-equal neighbors (and
-  *     itself) to that minimum — local stars flatten.
-  *
-  * The alternation converges in O(log² n) rounds to a forest of stars, each
-  * centered at its component's MINIMUM node id — so cluster_id = min
-  * reachable id, identical to label propagation's fixpoint. Unlike the
-  * hash-min label propagation this replaced (O(component diameter) rounds —
-  * a planted 600-node chain needs 600 rounds, and a round cap silently
-  * returns wrong labels), star rounds are logarithmic in the worst case:
-  * the 600-chain converges in 11 rounds (ConnectedComponentsSpec).
-  *
-  * Convergence is detected on the canonical edge set's (count, xor-of-hash)
-  * signature — one tiny aggregate over the just-checkpointed frame, no
-  * recomputation. `localCheckpoint` truncates plan lineage each round;
-  * without it the iterated join tree grows exponentially and Catalyst
-  * analysis dominates.
+  *   - up to [[LocalEdges]] edges (32 MB as two long arrays), union-find on
+  *     the driver, joined back to the vertices through a broadcast local
+  *     relation. A multi-round partitioned join is the wrong plan for an
+  *     edge set of a few MB: ~20 jobs and a shuffle per round;
+  *   - above it, where the driver must not hold the graph, [[starRounds]]
+  *     (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  *     SoCC'14), logarithmic rounds of distributed joins.
   */
 object ConnectedComponents {
 
   /** Result of a CC run: `converged = false` means the labels are possibly
     * PARTIAL (maxIter exhausted, or a 2^-64 signature collision ended the
     * loop early) — callers must check it before trusting cluster_id.
-    * `forest` is the final round's checkpointed edge frame, which `labels`
-    * reads: free it once `labels` has materialized. */
+    * `forest` is the frame `labels` reads: the final round's checkpointed
+    * edge set (free it once `labels` has materialized), or, when the driver
+    * found the components, a local relation that holds no blocks. */
   final case class CcResult(labels: DataFrame, rounds: Int, converged: Boolean,
                             forest: DataFrame)
 
   /** @param vertices one column `file_id`
     * @param edges    two columns `a`, `b` (undirected, any orientation)
-    * @param scope    takes over the final round's edge frame, which the
-    *                 returned labels read
+    * @param scope    takes over the frame the returned labels read
     * @param allowPartial accept possibly-partial labels on non-convergence
     *                 instead of throwing — opt-in only: a silent partial
     *                 result poisons every downstream cluster expansion
@@ -63,12 +49,62 @@ object ConnectedComponents {
     r.labels
   }
 
-  /** [[run]], also returning the (large-star, small-star) round count and
-    * the convergence flag — the adversarial-fixture spec asserts the
-    * logarithmic round count; library callers go through [[run]], which
-    * refuses non-converged labels unless explicitly allowed. */
+  /** Edge count up to which the driver finds the components. */
+  private[graft] val LocalEdges: Int = 1 << 21
+
+  /** [[run]], also returning the star-round count (0 when the driver found
+    * the components) and the convergence flag. Reads at most
+    * `LocalEdges + 1` edges — a cheap job over the caller's checkpointed
+    * edge leaf — and picks the path from what it read. */
   def runWithStats(vertices: DataFrame, edges: DataFrame,
                    maxIter: Int = 50): CcResult = {
+    val read = edges.select(col("a"), col("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .limit(LocalEdges + 1).collect()
+    if (read.length > LocalEdges) starRounds(vertices, edges, maxIter)
+    else localFinish(vertices, read.map(_.getLong(0)), read.map(_.getLong(1)))
+  }
+
+  /** Union-find over the sorted distinct ids, the smaller index as root, so
+    * every root is its component's minimum id; repeated, reversed and
+    * self-loop edges need no canonicalizing. The forest maps each non-root
+    * id to its root. */
+  private def localFinish(vertices: DataFrame, a: Array[Long], b: Array[Long]): CcResult = {
+    val ids = a ++ b
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (v <- ids) if (n == 0 || ids(n - 1) != v) { ids(n) = v; n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def root(v: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, n, v))
+    for (i <- a.indices) {
+      val (x, y) = (root(a(i)), root(b(i)))
+      if (x != y) parent(math.max(x, y)) = math.min(x, y)
+    }
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    val forest = (0 until n).map(i => (ids(i), ids(find(i)))).filter(p => p._1 != p._2)
+      .toDF("file_id", "__c")
+    val labels = vertices.join(broadcast(forest), Seq("file_id"), "left")
+      .select(col("file_id"), coalesce(col("__c"), col("file_id")).as("cluster_id"))
+    CcResult(labels, 0, converged = true, forest)
+  }
+
+  /** The path above [[LocalEdges]]: alternating large-star (every node
+    * connects its larger neighbors to the minimum of its closed
+    * neighborhood — long paths halve) and small-star (every node connects
+    * its smaller neighbors and itself to that minimum — stars flatten)
+    * rounds, converging in O(log² n) rounds to a forest of stars centered
+    * at each component's minimum id — the 600-node chain in 11 rounds,
+    * where hash-min label propagation needs 599 (ConnectedComponentsSpec).
+    * Convergence is the canonical edge set's (count, xor-of-hash) signature
+    * repeating; a per-round `localCheckpoint` truncates the lineage. */
+  private[graft] def starRounds(vertices: DataFrame, edges: DataFrame,
+                                maxIter: Int = 50): CcResult = {
     import org.apache.spark.sql.expressions.Window
     val spark = vertices.sparkSession
 

@@ -54,19 +54,19 @@ object Ann {
   /** The fixed-K hash-rank sample of a [[quantized]] frame, in rank order:
     * (vec_id mod P)·2654435761 mod P stays < 2^63, exact in both engines;
     * the pick is a distributed top-K (TakeOrdered), never a full sort. */
-  private def hashRankSeeds(v: DataFrame, k: Int): DataFrame =
+  private[graft] def hashRankSeeds(v: DataFrame, k: Int): DataFrame =
     v.withColumn("__hk", (col("vec_id") % lit(2147483647L)) * lit(2654435761L) % lit(2147483647L))
       .orderBy(col("__hk"), col("vec_id")).limit(k)
 
   /** Every (vector, centroid) cosine `ccos`, scored map-side against the
     * BROADCAST K-row centroid set (cid, cv, cn). */
-  private def centroidScores(v: DataFrame, cent: DataFrame): DataFrame =
+  private[graft] def centroidScores(v: DataFrame, cent: DataFrame): DataFrame =
     v.crossJoin(broadcast(cent))
       .withColumn("ccos", cosR6(col("qv"), col("cv"), col("nv"), col("cn")))
 
   /** Each vector's argmax-cosine centroid, ties toward the lower cid;
     * max_by over a struct key is partial-agg friendly (no N×K window). */
-  private def nearestCentroid(scored: DataFrame): DataFrame =
+  private[graft] def nearestCentroid(scored: DataFrame): DataFrame =
     scored.groupBy("vec_id")
       .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
 
@@ -221,44 +221,6 @@ object Ann {
     }
     cent
   }
-
-  /** Materialize the IVF layout: every vector assigned to its coarse list
-    * (same fixed-K hash-rank centroids as [[ivfTopK]]) and stored as
-    * parquet PARTITIONED BY cid — the sandbox stand-in for an Iceberg table
-    * clustered by list id — with the K centroid rows alongside. This is the
-    * scaladoc claim of [[ivfTopK]] made physical: once the corpus is laid
-    * out by cid, a probe's `cid IN (...)` predicate partition-prunes the
-    * scan to nProbe of the K lists — the inverted-file read, verified by
-    * AnnSpec on the scan's numFiles metric. */
-  def writeIvfIndex(embeddings: DataFrame, dir: String, nLists: Int = 16): Unit =
-    PersistScope.using { scope =>
-      val v = scope.persist(quantized(embeddings))
-      val cent = hashRankSeeds(v, nLists)
-        .select(col("vec_id").as("cid"), col("qv").as("cv"), col("nv").as("cn"))
-      v.join(nearestCentroid(centroidScores(v, cent)), Seq("vec_id"))
-        .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/lists")
-      cent.write.mode("overwrite").parquet(s"$dir/centroids")
-      // layout metadata: probes validate against this instead of silently
-      // returning different neighbors when the stored dir was written with
-      // a different nLists or centroid rule
-      val spark = embeddings.sparkSession
-      import spark.implicits._
-      Seq((IvfLayoutVersion, nLists))
-        .toDF("layout_version", "n_lists")
-        .write.mode("overwrite").parquet(s"$dir/meta")
-    }
-
-  /** Version tag of the IVF layout contract: centroid rule (fixed-K
-    * hash-rank sample), list partitioning, column names. Bump on any change
-    * so stale stored layouts are rejected rather than silently probed. */
-  val IvfLayoutVersion = "ivf:v1:hashrank"
-
-  /** The pruned inverted-list scan: a LITERAL cid predicate over the
-    * partitioned layout, so the file source prunes non-probed lists before
-    * reading a byte. */
-  def ivfLists(spark: org.apache.spark.sql.SparkSession, dir: String,
-               cids: Seq[Long]): DataFrame =
-    spark.read.parquet(s"$dir/lists").filter(col("cid").isin(cids: _*))
 
   /** L2 norm (quantized, exact) per vector. */
   def norms(embeddings: DataFrame): DataFrame =

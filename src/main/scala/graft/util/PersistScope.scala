@@ -14,8 +14,9 @@ import org.apache.spark.sql.graftshim.CheckpointShim
   * `release` frees the tracked blocks once the composite's result is
   * materialized.
   *
-  * One materialization deliberately stays outside any scope:
-  * ConnectedComponents' per-round `localCheckpoint(false)`. The round's
+  * One materialization deliberately stays outside any scope: the
+  * per-round `localCheckpoint(false)` of ConnectedComponents' star rounds,
+  * the path for edge sets too large to finish on the driver. The round's
   * signature aggregate is the action that materializes it, and an eager
   * round would double the Spark executions per round. Each round frees its
   * predecessor; the final round's frame is handed to the caller's scope

@@ -20,13 +20,45 @@ class AnnSpec extends SparkSpec {
   }
   private lazy val brute = Ann.bruteForceTopK(emb, 0L until 10L, 5).cache()
 
+  /** Version tag of the IVF layout contract: centroid rule (fixed-K
+    * hash-rank sample), list partitioning, column names. The stored-layout
+    * reader rejects any other tag rather than silently probing it. */
+  private val IvfLayoutVersion = "ivf:v1:hashrank"
+
+  /** Materialize the IVF layout: every vector assigned to its coarse list
+    * (same fixed-K hash-rank centroids as [[Ann.ivfTopK]]) and stored as
+    * parquet PARTITIONED BY cid — the stand-in for an Iceberg table
+    * clustered by list id — with the K centroid rows and the layout's
+    * `meta` (version tag, nLists) alongside. Once the corpus is laid out by
+    * cid, a probe's `cid IN (...)` predicate partition-prunes the scan to
+    * nProbe of the K lists. */
+  private def writeIvfIndex(embeddings: org.apache.spark.sql.DataFrame, dir: String,
+                            nLists: Int): Unit =
+    graft.util.PersistScope.using { scope =>
+      import spark.implicits._
+      val v = scope.persist(Ann.quantized(embeddings))
+      val cent = Ann.hashRankSeeds(v, nLists)
+        .select(col("vec_id").as("cid"), col("qv").as("cv"), col("nv").as("cn"))
+      v.join(Ann.nearestCentroid(Ann.centroidScores(v, cent)), Seq("vec_id"))
+        .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/lists")
+      cent.write.mode("overwrite").parquet(s"$dir/centroids")
+      Seq((IvfLayoutVersion, nLists)).toDF("layout_version", "n_lists")
+        .write.mode("overwrite").parquet(s"$dir/meta")
+    }
+
+  /** The pruned inverted-list scan: a LITERAL cid predicate over the
+    * partitioned layout, so the file source prunes non-probed lists before
+    * reading a byte. */
+  private def ivfLists(dir: String, cids: Seq[Long]): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(s"$dir/lists").filter(col("cid").isin(cids: _*))
+
   /** Top-k probe against the STORED layout: score queries against the K
     * stored centroids, resolve the nProbe list ids (a tiny driver-side
     * collect — nQueries × nProbe longs, the literals partition pruning
     * needs), then search exactly within only those lists. Returns the same
     * relation shape as [[Ann.ivfTopK]] and — by construction, same centroid
     * rule — the same rows; a reference reader of the layout
-    * [[Ann.writeIvfIndex]] stores. */
+    * [[writeIvfIndex]] stores. */
   private def ivfProbeStored(dir: String, queryIds: Seq[Long], k: Int,
                              nProbe: Int = 3): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -40,8 +72,8 @@ class AnnSpec extends SparkSpec {
       "re-run writeIvfIndex (refusing to probe an unversioned layout)")
     val (ver, nLists) = (meta(0).getAs[String]("layout_version"),
       meta(0).getAs[Int]("n_lists"))
-    require(ver == Ann.IvfLayoutVersion,
-      s"$dir layout version '$ver' != expected '${Ann.IvfLayoutVersion}'")
+    require(ver == IvfLayoutVersion,
+      s"$dir layout version '$ver' != expected '$IvfLayoutVersion'")
     val nCent = cent.count()
     require(nCent == nLists,
       s"$dir stores $nCent centroids but meta says nLists=$nLists")
@@ -54,7 +86,7 @@ class AnnSpec extends SparkSpec {
       .select(col("query_id"), col("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val probePairs = probeRows.toSeq.toDF("query_id", "cid")
-    val cands = Ann.ivfLists(spark, dir, probeRows.map(_._2).distinct.toSeq)
+    val cands = ivfLists(dir, probeRows.map(_._2).distinct.toSeq)
       .join(broadcast(probePairs), Seq("cid"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -169,7 +201,7 @@ class AnnSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    Ann.writeIvfIndex(emb, dir, nLists = 16)
+    writeIvfIndex(emb, dir, nLists = 16)
     val listDirs = new java.io.File(s"$dir/lists").listFiles()
       .count(_.getName.startsWith("cid="))
     assert(listDirs >= 8, s"expected most of 16 lists populated, got $listDirs")
@@ -187,7 +219,7 @@ class AnnSpec extends SparkSpec {
     // probe any 2 real list ids (cid = the seed vector's vec_id, not 0..15)
     val cids = spark.read.parquet(s"$dir/centroids").select("cid")
       .collect().map(_.getLong(0)).sorted.take(2).toSeq
-    val pruned = Ann.ivfLists(spark, dir, cids)
+    val pruned = ivfLists(dir, cids)
     val prunedFiles = scannedFiles(pruned)
     info(s"IVF layout: full scan reads $allFiles files, 2-list probe reads $prunedFiles")
     assert(prunedFiles < allFiles,

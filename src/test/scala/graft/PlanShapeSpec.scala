@@ -314,6 +314,43 @@ class PlanShapeSpec extends SparkSpec {
     } finally scope.release()
   }
 
+  test("connected components below the edge bound: no shuffle, at most 3 jobs") {
+    // the edge set is read once into the driver's union-find and the labels
+    // join a broadcast local relation; the star rounds this replaces (under
+    // 2^21 edges) ran ~20 jobs and shuffled every round and the labels'
+    // forest aggregate
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cfg = near.NearConfig()
+    val corpus = Tables.corpus(spark, sf)
+    val scope = new util.PersistScope
+    try {
+      val reps = scope.persist(near.NearDup.representatives(corpus, cfg))
+      val edges = scope.persist(near.NearDup.verifiedPairsOf(reps, cfg, scope).select("a", "b"))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      var rounds = -1
+      val plans = try executedPlans {
+        val r = cluster.ConnectedComponents.runWithStats(reps.select("file_id"), edges)
+        r.labels.collect()
+        rounds = r.rounds
+      } finally spark.sparkContext.removeSparkListener(listener)
+      info(s"connected components over ${edges.count()} edges ran ${jobs.get} jobs")
+      val shuffles = plans.flatMap(collectPlan(_) { case e: ShuffleExchangeExec => e })
+      assert(shuffles.isEmpty, s"connected components ran ${shuffles.size} shuffles")
+      assert(jobs.get <= 3, s"connected components ran ${jobs.get} jobs")
+      assert(rounds == 0)
+    } finally scope.release()
+    // inside NearDup.clusters: the plan that materializes the labels
+    val labelPlans = executedPlans(near.NearDup.clusters(corpus).collect())
+      .filter(_.output.map(_.name) == Seq("file_id", "cluster_id"))
+    assert(labelPlans.nonEmpty)
+    labelPlans.foreach(p => assert(collectPlan(p) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the clusters labels shuffled:\n$p"))
+  }
+
   test("repo-root restriction (F5) prunes at the source, not post-scan") {
     // one-file-system roots compile to an isin predicate; on a partitioned
     // layout (repo = Iceberg partition col) this is partition pruning. On
